@@ -11,7 +11,10 @@ Two code families live here:
    - ``sort_key`` — ``sk`` left-padded to ``max_depth`` bits (kd linear order),
    - ``code`` — the reference-faithful tree-path code (bit = 1 ⇔ left,
      LSB-first; reference lkt.cpp:140-157).
-   All are ≤ max_depth-term codegen-friendly expressions — no UDF.
+   The per-bit ``*_from_node`` expressions spell out the definitions and are
+   the independent reference the tests check against; the build and ingest
+   use :func:`with_derived_cols`, a short chain of branch-free integer
+   projections, and :func:`sort_key_from_path_len`. No UDF either way.
 
 2. **Fixed-grid Z-order tiles** — the textbook interleaved Morton cell id at
    a fixed depth over a fixed bounding box, the engine's H3/S2-style tile
@@ -21,7 +24,7 @@ Two code families live here:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linear_kdtree_spark.oracle import MAX_DEPTH
@@ -92,55 +95,71 @@ def ancestor_at_depth(node: Column, path_len: Column, depth: int) -> Column:
 # fast branch-free derivations (the build's finalize projection)
 # --------------------------------------------------------------------------
 
-def _smear(v: Column) -> Column:
-    """Propagate the highest set bit downward (v ≤ 2^33)."""
+def sort_key_from_path_len(
+    node: Column, path_len: Column, max_depth: int = MAX_DEPTH
+) -> Column:
+    """sort_key = (node + 1 − 2^L) · 2^(MD − L): the path bits (node + 1
+    without its leading 1) padded MSB-first, given the node's depth ``L``.
+    No step can overflow, so an out-of-range row that subexpression
+    elimination evaluates before a filter drops it cannot fail under ANSI."""
+    one = F.lit(1).cast("long")
+    path_bits = (node + 1).cast("long") - F.call_function("shiftleft", one, path_len)
+    return F.call_function("shiftleft", path_bits, F.lit(max_depth) - path_len)
+
+
+def with_derived_cols(df: DataFrame, max_depth: int = MAX_DEPTH) -> DataFrame:
+    """``df`` plus ``path_len``, ``code`` and ``sort_key``, derived from its
+    heap ``node`` column with branch-free integer bit operations:
+
+        v     = node + 1;  smear = v with its highest set bit copied down
+        L     = bit_count(smear) − 1
+        sort_key = v · 2^(MD−L) − 2^MD            (path bits padded MSB-first)
+        code  = (2^L − 1) − rev32(sort_key · 2^(32−MD))   (bit i = 1 − b_{i+1})
+
+    Each smear and bit-reverse step reads its input twice. Written as one
+    Column tree, ``code`` would hold 2,144 copies of ``node`` at max_depth 24,
+    which the optimizer re-simplifies and whole-stage codegen re-emits on the
+    driver, seconds per call. Here every step is its own projection over a
+    named intermediate column instead: CollapseProject does not inline a
+    non-trivial producer that is referenced twice, so the plan stays linear
+    (equality with the per-bit expressions above and the plan size are
+    unit-tested), and whole-stage codegen still fuses it into one function.
+    """
+    if max_depth > 32:
+        raise ValueError("with_derived_cols supports max_depth ≤ 32")
+    tmp: list[str] = []
+
+    def step(frame: DataFrame, expr: Column) -> tuple[DataFrame, Column]:
+        name = f"__lkt_bits{len(tmp)}"
+        tmp.append(name)
+        return frame.withColumn(name, expr), F.col(name)
+
+    out, smear = step(df, (F.col("node") + 1).cast("long"))
     for s in (1, 2, 4, 8, 16, 32):
-        v = v.bitwiseOR(F.shiftright(v, s))
-    return v
-
-
-def _rev32(v: Column) -> Column:
-    """Reverse the low 32 bits (v < 2^32, result < 2^32)."""
-    m = [
+        out, smear = step(out, smear.bitwiseOR(F.shiftright(smear, s)))
+    out, plen = step(out, (F.bit_count(smear) - 1).cast("int"))
+    out, sort_key = step(
+        out, sort_key_from_path_len(F.col("node"), plen, max_depth)
+    )
+    out, rev = step(out, F.shiftleft(sort_key, 32 - max_depth))
+    for mask, s in (
         (0x55555555, 1),
         (0x33333333, 2),
         (0x0F0F0F0F, 4),
         (0x00FF00FF, 8),
         (0x0000FFFF, 16),
-    ]
-    for mask, s in m:
-        v = (
-            F.shiftright(v, s).bitwiseAND(F.lit(mask))
-        ).bitwiseOR(v.bitwiseAND(F.lit(mask)) * F.lit(1 << s))
-    return v
-
-
-def fast_derived_cols(
-    node: Column, max_depth: int = MAX_DEPTH
-) -> tuple[Column, Column, Column]:
-    """(path_len, code, sort_key) from the heap node id in ~25 integer ops
-    per row — the codegen-friendly replacement of the didactic per-bit expressions
-    above (measured ~10× faster at 19 M rows; equality is unit-tested):
-
-        v    = node + 1;   smear = v with high bit propagated down
-        2^L  = (smear + 1) >> 1  (highest power of two ≤ v)
-        L    = bit_count(smear) - 1
-        sort_key = v · 2^(MD-L) − 2^MD   (pad path bits MSB-first)
-        code = (2^L − 1) − rev_MD(sort_key)   (bit i of code = 1 − b_{i+1})
-    """
-    if max_depth > 32:
-        raise ValueError("fast_derived_cols supports max_depth ≤ 32")
-    v = (node + 1).cast("long")
-    smear = _smear(v)
-    hp = F.shiftright(smear + 1, 1)  # 2^L
-    plen = (F.bit_count(smear) - 1).cast("int")
-    top = F.lit(1 << max_depth).cast("long")
-    # 2^(MD-L) = 2^MD / 2^L — both powers of two, exact in double
-    scale = (top / hp).cast("long")
-    sort_key = (v * scale - top).cast("long")
-    padded32 = sort_key * F.lit(1 << (32 - max_depth)) if max_depth < 32 else sort_key
-    code = (hp - 1 - _rev32(padded32)).cast("long")
-    return plen, code, sort_key
+    ):
+        out, rev = step(
+            out,
+            F.shiftright(rev, s).bitwiseAND(F.lit(mask)).bitwiseOR(
+                F.shiftleft(rev.bitwiseAND(F.lit(mask)), s)
+            ),
+        )
+    # smear = 2^(L+1) − 1, so smear >> 1 = 2^L − 1
+    code = (F.shiftright(smear, 1) - rev).cast("long")
+    return out.withColumns(
+        {"path_len": plen, "code": code, "sort_key": sort_key}
+    ).drop(*tmp)
 
 
 # --------------------------------------------------------------------------

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from linear_kdtree_spark.functions.morton import with_derived_cols
 from linear_kdtree_spark.oracle import MAX_DEPTH
 from linear_kdtree_spark.operators.tree import SplitTree
 
@@ -518,21 +519,9 @@ def lkt_build(
         if last_cached is not None:
             last_cached.unpersist()
     else:
-        from linear_kdtree_spark.functions.morton import fast_derived_cols
-
-        plen, code, sort_key = fast_derived_cols(F.col("node"), max_depth)
-        derived = [
-            "key",
-            "x",
-            "y",
-            "node",
-            plen.alias("path_len"),
-            code.alias("code"),
-            sort_key.alias("sort_key"),
-        ]
         n_parts = num_partitions or spark.sparkContext.defaultParallelism
         out = (
-            pts.select(*derived)
+            with_derived_cols(pts.select("key", "x", "y", "node"), max_depth)
             .repartitionByRange(n_parts, "sort_key", "key")
             .sortWithinPartitions("sort_key", "key")
         )
@@ -558,7 +547,7 @@ def node_depth_py(node_id: int) -> int:
 def _node_prefix(g: int, max_depth: int) -> tuple[int, int, int, int]:
     """(path_len, code, sk, sort_key) of heap node ``g`` — the pure-int
     prefix constants of its subtree (same bit semantics as
-    functions/morton.fast_derived_cols, unit-tested equal)."""
+    functions/morton.with_derived_cols, unit-tested equal)."""
     p = g + 1
     plen = p.bit_length() - 1
     sk = p - (1 << plen)
@@ -643,7 +632,6 @@ def _local_finish_fused(
     import numpy as np
     import pandas as pd
 
-    from linear_kdtree_spark.functions.morton import fast_derived_cols
     from linear_kdtree_spark.oracle import build_local_fast
 
     local_strategy = "median" if strategy == "median_approx" else strategy
@@ -652,7 +640,7 @@ def _local_finish_fused(
     # the python kernel ships ONLY (key, x, y, node): path_len / code /
     # sort_key are pure integer bit transforms of the heap node id, so
     # they are derived JVM-side right after the mapInPandas (
-    # functions/morton.fast_derived_cols — equality vs the per-bit
+    # functions/morton.with_derived_cols — equality vs the per-bit
     # definition is unit-tested, and every lkt_build_nodes* gate pins the
     # values cross-engine). This cuts the python->JVM Arrow traffic from
     # 7 to 4 columns (56 -> 32 bytes/row) and drops three O(n) numpy
@@ -731,11 +719,10 @@ def _local_finish_fused(
                 .drop("_tok")
             )
     else:  # pragma: no cover - JVM partitioning changed; keep correctness
-        _, _, lo_expr = fast_derived_cols(F.col("node"), max_depth)
         src = (
-            base.withColumn("_subtree_lo", lo_expr)
-            .repartitionByRange(n_parts, "_subtree_lo")
-            .drop("_subtree_lo")
+            with_derived_cols(base, max_depth)
+            .repartitionByRange(n_parts, "sort_key")
+            .select("key", "x", "y", "node")
         )
 
     acc = spark.sparkContext.accumulator([], _ListAccum())
@@ -834,25 +821,17 @@ def _local_finish_fused(
                 )
         if srows:
             acc.add(srows)
-        if os.environ.get("SPARK_GRAFT_BUILD_DEBUG"):
+        if debug:
             print(
                 f"[finish] rows={n_rows_total} groups={n_groups} "
                 f"drain={t_drain:.1f}s total={time.time() - t_start:.1f}s",
                 flush=True,
             )
 
-    debug = os.environ.get("SPARK_GRAFT_BUILD_DEBUG")
     t0 = time.time()
-    plen_c, code_c, sk_c = fast_derived_cols(F.col("node"), max_depth)
-    out = (
-        src.mapInPandas(finish, out_schema)
-        .select(
-            "key", "x", "y", "node",
-            plen_c.alias("path_len"), code_c.alias("code"),
-            sk_c.alias("sort_key"),
-        )
-        .persist()
-    )
+    out = with_derived_cols(
+        src.mapInPandas(finish, out_schema), max_depth
+    ).persist()
     # 500k-row Arrow batches for THIS job only (session default 65k is
     # sized for wide/binary rows; these are 4 fixed-width columns =
     # 16 MB/batch): fewer per-batch JVM->python round-trips cut the

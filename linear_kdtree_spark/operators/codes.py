@@ -11,8 +11,11 @@ numpy formulation — one gather per tree level across the whole Arrow batch,
 the device-side flat node array the CUDA wrapper copies (lkt.cu:55-59).
 
 Used for labelling *new* points against an existing index (queries,
-incremental ingest); during the build itself codes accumulate as pure JVM
-expressions and never touch Python.
+incremental ingest). The build does not call it: its level loop routes
+points with JVM expressions, its fused finish walks each deferred subtree
+in one numpy pass (a mapInPandas, operators/build.py), and both derive
+``path_len``/``code``/``sort_key`` from the heap node id in the JVM
+(functions/morton.with_derived_cols).
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from linear_kdtree_spark.functions.morton import sort_key_from_path_len
 from linear_kdtree_spark.oracle import MAX_DEPTH
 from linear_kdtree_spark.operators.tree import SplitTree
 
@@ -130,9 +134,8 @@ def attach_labels(
     udf = make_label_udf(df.sparkSession, tree, md, coord_type=coord_type)
     out = df.withColumn("_lbl", udf(F.col(x_col), F.col(y_col)))
     out = out.select("*", "_lbl.code", "_lbl.node", "_lbl.path_len").drop("_lbl")
-    # same bit-trick derivation the build finalize uses — one shared
-    # implementation, not a second pow(2.0, …) formulation that could drift
-    from linear_kdtree_spark.functions.morton import fast_derived_cols
-
-    _, _, sort_key = fast_derived_cols(F.col("node"), md)
-    return out.withColumn("sort_key", sort_key)
+    # the UDF already knows each point's depth, so sort_key is two shifts —
+    # the same expression the build's derived-column chain uses
+    return out.withColumn(
+        "sort_key", sort_key_from_path_len(F.col("node"), F.col("path_len"), md)
+    )

@@ -9,6 +9,7 @@ from linear_kdtree_spark.functions.morton import (
     code_from_node,
     path_len_from_node,
     sort_key_from_node,
+    with_derived_cols,
 )
 from linear_kdtree_spark.operators.build import lkt_build
 from linear_kdtree_spark.operators.codes import attach_labels
@@ -118,33 +119,66 @@ def test_label_udf_matches_build(spark, random_points):
     assert bad == 0
 
 
-def test_fast_derived_cols_equal_reference_exprs(spark):
-    """Branch-free bit-trick derivations == didactic per-bit expressions for
-    every node id up to depth 32."""
-    from linear_kdtree_spark.functions.morton import fast_derived_cols
-
+def _derived_node_df(spark):
     nodes = list(range(0, 4096)) + [(1 << d) - 1 for d in range(1, 33)] + [
         (1 << 32) - 2, (1 << 33) - 2,
     ]
-    df = spark.createDataFrame([(n,) for n in nodes], "node long")
-    for md in (8, 32):
+    return spark.createDataFrame([(n,) for n in nodes], "node long"), nodes
+
+
+def test_with_derived_cols_equal_reference_exprs(spark):
+    """Branch-free projection chain == didactic per-bit expressions for
+    every node id up to depth 32."""
+    df, nodes = _derived_node_df(spark)
+    for md in (8, 24, 32):
         ok_nodes = [n for n in nodes if (n + 2).bit_length() - 1 <= md]
-        sub = df.filter(F.col("node").isin(ok_nodes))
-        plen, code, sk = fast_derived_cols(F.col("node"), md)
+        sub = with_derived_cols(df.filter(F.col("node").isin(ok_nodes)), md)
+        assert sub.columns == ["node", "path_len", "code", "sort_key"]
         out = sub.select(
-            plen.alias("p2"),
-            code.alias("c2"),
-            sk.alias("s2"),
+            "path_len",
+            "code",
+            "sort_key",
             path_len_from_node(F.col("node"), md).alias("p1"),
             code_from_node(F.col("node"), md).alias("c1"),
             sort_key_from_node(F.col("node"), md).alias("s1"),
         )
         bad = out.filter(
-            (F.col("p1") != F.col("p2"))
-            | (F.col("c1") != F.col("c2"))
-            | (F.col("s1") != F.col("s2"))
+            (F.col("p1") != F.col("path_len"))
+            | (F.col("c1") != F.col("code"))
+            | (F.col("s1") != F.col("sort_key"))
         ).count()
         assert bad == 0, md
+
+
+def test_with_derived_cols_plan_stays_small(spark):
+    """Each bit step reads its input twice: if the optimizer inlined the
+    chain back into one expression (e.g. under
+    spark.sql.optimizer.collapseProjectAlwaysInline) the plan would hold
+    thousands of copies of ``node`` (~78 KB at max_depth 24) and every
+    build would pay seconds of driver-side optimization and codegen."""
+    df, _ = _derived_node_df(spark)
+    plan = with_derived_cols(df, 24)._jdf.queryExecution().optimizedPlan()
+    assert len(plan.toString()) < 8192
+
+
+def test_aggregate_over_derived_cols(spark):
+    """An aggregate directly over the three derived columns compiles and
+    runs (the single-expression form failed codegen with IllegalAccessError
+    in a generated hashAgg nested class) and sums to the pure-int values."""
+    from linear_kdtree_spark.operators.build import _node_prefix
+
+    md = 24
+    n = 5000
+    d = with_derived_cols(spark.range(0, n).withColumnRenamed("id", "node"), md)
+    row = d.agg(
+        F.sum("path_len").alias("p"), F.sum("code").alias("c"),
+        F.sum("sort_key").alias("s"),
+    ).collect()[0]
+    want = [_node_prefix(g, md) for g in range(n)]
+    assert (row.p, row.c, row.s) == (
+        sum(w[0] for w in want), sum(w[1] for w in want),
+        sum(w[3] for w in want),
+    )
 
 
 def test_node_transform_exprs(spark, random_points):
