@@ -117,12 +117,10 @@ def run_suite(sf_dir: str, cpus: int, reps: int | None = None) -> dict:
 
     load_views(spark, sf_dir, ("documents", "embeddings"))
     queries = spark.sql(KNN_QUERIES_SQL)
-    # knn_batch: identical result to knn() (tests/test_differential.py),
-    # but the per-query planning runs inside ONE mapInPandas stage against
-    # broadcast flat-tree arrays instead of a driver loop — the per-job
-    # fixed cost the 40-query leg pays does not multiply with queries,
-    # and the leg scales with the scan like the rest of the suite
-    # (VERDICT r3 next-#2)
+    # knn_batch: the per-query planning runs inside ONE mapInPandas stage
+    # against broadcast flat-tree arrays — the per-job fixed cost does not
+    # multiply with queries, and the leg scales with the scan like the
+    # rest of the suite (VERDICT r3 next-#2)
     timed("knn", lambda: knn_batch(idx, queries, KNN_K).count())
 
     polys = []

@@ -113,15 +113,11 @@ def cmd_extract(args) -> int:
 
 
 def cmd_knn(args) -> int:
-    from linear_kdtree_spark.operators.knn import knn, knn_batch
+    from linear_kdtree_spark.operators.knn import knn
 
     spark = _spark(args)
     idx = _load_index(spark, args.index)
-    queries = spark.read.parquet(args.queries)
-    if args.batch:
-        out = knn_batch(idx, queries, args.k)
-    else:
-        out = knn(idx, queries, args.k)
+    out = knn(idx, spark.read.parquet(args.queries), args.k)
     out.write.mode("overwrite").parquet(args.output)
     print(json.dumps({"knn_rows": spark.read.parquet(args.output).count()}))
     return 0
@@ -238,8 +234,6 @@ def make_parser() -> argparse.ArgumentParser:
     k.add_argument("--queries", required=True)
     k.add_argument("--output", required=True)
     k.add_argument("-k", type=int, default=5)
-    k.add_argument("--batch", action="store_true",
-                   help="fully-distributed planner for large query batches")
     k.set_defaults(fn=cmd_knn)
 
     q = sub.add_parser("pip")

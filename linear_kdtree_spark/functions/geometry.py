@@ -1,7 +1,7 @@
-"""Geometry predicates: JVM column expressions for the shapes that allow it
-(rectangles, L1 diamonds, convex polygons — plain conjunctions of linear
-inequalities, whole-stage-codegen'd) and one vectorized Arrow/pandas kernel
-for general simple polygons (ray casting / even-odd rule).
+"""Geometry predicates: JVM column expressions for convex polygons (plain
+conjunctions of linear inequalities, whole-stage-codegen'd) and one
+vectorized Arrow/pandas kernel for general simple polygons (ray casting /
+even-odd rule).
 
 Boundary rule everywhere (FIXTURES.md F4): strictly-inside counts, on-edge
 excluded.
@@ -13,16 +13,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def point_in_rect(x: Column, y: Column,
-                  xmin: float, ymin: float, xmax: float, ymax: float) -> Column:
-    return (x > F.lit(xmin)) & (x < F.lit(xmax)) & (y > F.lit(ymin)) & (y < F.lit(ymax))
-
-
-def point_in_diamond(x: Column, y: Column, cx: float, cy: float, r: float) -> Column:
-    """L1 ball: |x-cx| + |y-cy| < r."""
-    return (F.abs(x - F.lit(cx)) + F.abs(y - F.lit(cy))) < F.lit(r)
 
 
 def point_in_convex_polygon(

@@ -44,10 +44,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_RE), 0))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of characters that are not alphanumeric/space."""
     stripped = F.regexp_replace(text, r"[A-Za-z0-9 ]", "")

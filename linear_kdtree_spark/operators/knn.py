@@ -4,34 +4,30 @@ of workload but ships no query side; semantics follow from the split
 invariant every node establishes: left subtree < value on its axis,
 right ≥ value — reference nocuda.cpp:91-93).
 
-Single-scan exact algorithm, all pruning expressed as ``sort_key`` range
-predicates (Parquet/Iceberg min-max pruning + partition pruning apply):
+Single-scan exact algorithm, all pruning expressed as ``sort_key``
+intervals (each subtree is contiguous in kd order):
 
-  Bound (driver-side, no data scan): each query descends the broadcast
-  tree to its leaf, walks up to the smallest ancestor holding ≥ k points
-  (the seed node), and takes the far corner of the seed's exact data bbox
-  — recorded by the build's own stats shuffle — as an upper bound r_q on
-  the k-th distance: the ≥ k seed points all lie inside that bbox.
+  Plan (a ``mapInPandas`` stage over the query DataFrame, against the
+  broadcast flat tree arrays; no data scan): each query descends the tree
+  to the deepest node on its path still holding ≥ k points (the seed
+  node), and takes the far corner of the seed's exact data bbox —
+  recorded by the build's own stats shuffle — as an upper bound r_q on
+  the k-th distance: the ≥ k seed points all lie inside that bbox. Every
+  leaf region intersecting circle(q, r_q) then becomes a sort_key
+  interval of the query's cover.
 
-  Cover (the only data pass): every leaf region intersecting
-  circle(q, r_q) is collected into merged sort_key intervals; one pruned
-  scan + exact distance + per-query top-k window gives the exact answer.
+  Scan (the only data pass): the bucketed band join of
+  operators/interval_join.py pairs points with cover intervals; exact
+  distance + per-query top-k window gives the exact answer.
 
-This replaces the round-1 two-scan design (phase A ran a full candidate
-scan + window just to measure the k-th distance, with a driver collect
-between phases) with pure driver arithmetic + ONE scan.
+There is no driver loop over queries. The scalar ``SplitTree``
+traversals (``knn_seed_node``, ``knn_r2_bound``, ``ranges_for_circle``)
+are the reference the vectorized planner is tested against.
 
 Ties at equal distance break by ascending key (FIXTURES.md F5).
-
-The driver loop assumes a small query side; DataFrame query batches
-above ``KNN_DELEGATE_THRESHOLD`` rows auto-delegate to :func:`knn_batch`
-(the fully-distributed planner — no collect, no driver loop), so the
-operator never silently degrades on data-scale query frames.
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pandas as pd
@@ -40,96 +36,24 @@ from pyspark.sql import functions as F
 
 from linear_kdtree_spark.functions.geometry import dist2
 from linear_kdtree_spark.operators.build import LktIndex
-
-
-def _candidates(points: DataFrame, ranges: list[tuple], schema: str,
-                max_depth: int) -> DataFrame:
-    """Bucketed equi interval join (operators/interval_join.py) of points ×
-    query intervals on sort_key ∈ [lo, hi)."""
-    from linear_kdtree_spark.operators.interval_join import interval_join
-
-    return interval_join(points, ranges, schema, max_depth=max_depth)
-
-
-# DataFrame query batches above this route to knn_batch — collecting an
-# unboundedly large query frame to the driver is the one non-distributed
-# step knn() has (VERDICT r2 wrong-#2); below it, the driver loop is
-# cheaper than a planning mapInPandas stage
-KNN_DELEGATE_THRESHOLD = 10_000
+from linear_kdtree_spark.operators.interval_join import bucket_join
 
 
 def knn(
     index: LktIndex,
     queries: list[tuple[int, float, float]] | DataFrame,
     k: int,
-    delegate_threshold: int = KNN_DELEGATE_THRESHOLD,
 ) -> DataFrame:
     """queries: [(query_id, qx, qy), ...] or a DataFrame with those columns.
-    Returns (query_id, key, dist2, rank) with rank 1..k.
-
-    DataFrame inputs with more than ``delegate_threshold`` rows are
-    auto-delegated to :func:`knn_batch` (identical output — proven in
-    tests/test_differential.py) instead of being collected."""
-    spark = index.points.sparkSession
-    if isinstance(queries, DataFrame):
-        # one take() both probes the size AND is the collected row set when
-        # under the threshold (no separate count job re-running the
-        # queries' lineage — ADVICE r3)
-        probe = queries.take(delegate_threshold + 1)
-        if len(probe) > delegate_threshold:
-            return knn_batch(index, queries, k)
-        qrows = [
-            (int(r["query_id"]), float(r["qx"]), float(r["qy"]))
-            for r in probe
-        ]
-    else:
-        qrows = [(int(q), float(x), float(y)) for q, x, y in queries]
-    tree = index.tree
-    total = tree.total_points
-    if total == 0 or not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, key long, dist2 double, rank int"
+    Returns (query_id, key, dist2, rank) with rank 1..k: :func:`knn_batch`
+    over the queries (a list becomes a small DataFrame first)."""
+    if not isinstance(queries, DataFrame):
+        queries = index.points.sparkSession.createDataFrame(
+            [(int(q), float(x), float(y)) for q, x, y in queries],
+            "query_id long, qx double, qy double",
         )
-    k_eff = min(k, total)
-    pts = index.points.select("key", "x", "y", "sort_key")
-    w = Window.partitionBy("query_id").orderBy("d2", "key")
+    return knn_batch(index, queries, k)
 
-    # ---- bound (driver-only): r_q² = far corner of the seed node's data
-    # bbox; cover circle(q, r_q) with merged leaf intervals. Trees without
-    # recorded bounds (reloaded bare splits) degrade to a full-range scan —
-    # still exact, still one pass.
-    full_range = (0, 1 << tree.max_depth)
-    cover = []
-    for qid, qx, qy in qrows:
-        node = tree.knn_seed_node(qx, qy, k_eff)
-        r2_q = tree.knn_r2_bound(qx, qy, node)
-        ranges = (
-            [full_range]
-            if math.isinf(r2_q)
-            else tree.ranges_for_circle(qx, qy, math.sqrt(r2_q))
-        )
-        for lo, hi in ranges:
-            cover.append((qid, qx, qy, r2_q, lo, hi))
-    cover_schema = "query_id long, qx double, qy double, r2 double, lo long, hi long"
-    out = (
-        _candidates(pts, cover, cover_schema, tree.max_depth)
-        .withColumn("d2", dist2(F.col("x"), F.col("y"), F.col("qx"), F.col("qy")))
-        .filter(F.col("d2") <= F.col("r2"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_eff)
-        .select(
-            "query_id",
-            "key",
-            F.col("d2").alias("dist2"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-    return out
-
-
-# ---------------------------------------------------------------------------
-# fully-distributed batch kNN (no driver round-trip for the query side)
-# ---------------------------------------------------------------------------
 
 def _seed_r2_bound(qx: np.ndarray, qy: np.ndarray, A: dict, k: int) -> np.ndarray:
     """Vectorized per-query k-th-distance² upper bound: descend the flat
@@ -190,8 +114,7 @@ def _cover_intervals(
     # reloaded without node_bounds) must cover the WHOLE key range as ONE
     # interval — descending with r=inf would take both children at every
     # split and emit every leaf separately per query, exploding the cover
-    # to n_queries x n_leaves rows (knn()'s driver loop already degrades
-    # to a single full_range scan in this case; this is its batch twin).
+    # to n_queries x n_leaves rows.
     unbounded = ~np.isfinite(r2)
     if unbounded.any():
         uq = np.flatnonzero(unbounded).astype(np.int64)
@@ -260,13 +183,11 @@ def knn_batch(
     qy_col: str = "qy",
     broadcast_cover: bool = True,
 ) -> DataFrame:
-    """Exact kNN for LARGE query batches, fully distributed: the per-query
-    planning (seed bound + circle cover) that :func:`knn` runs in a driver
-    loop happens inside ``mapInPandas`` over the query DataFrame against
-    broadcast flat tree arrays, and the interval→bucket replication is a
-    column expression — the driver never touches a query row. Same output
-    as :func:`knn` (equality is tested); use it when the query side is too
-    big to collect (10^5+ rows).
+    """Exact kNN, fully distributed: the per-query planning (seed bound +
+    circle cover) runs inside ``mapInPandas`` over the query DataFrame
+    against broadcast flat tree arrays, and the cover joins the points
+    through :func:`bucket_join` — the driver never touches a query row, so
+    the query side may be data-scale (10^5+ rows).
 
     (r6, measured and rejected: planning small batches on the driver — a
     bounded ``take`` probe + the same numpy planner + ``createDataFrame``
@@ -322,21 +243,9 @@ def knn_batch(
             )
 
     cover = queries.select(query_id, qx_col, qy_col).mapInPandas(plan, out_schema)
-    ivals = cover.withColumn(
-        "bucket",
-        F.explode(
-            F.sequence(
-                F.shiftright("lo", shift), F.shiftright(F.col("hi") - 1, shift)
-            )
-        ),
-    )
-    if broadcast_cover:
-        ivals = F.broadcast(ivals)
-    pts = pts.withColumn("bucket", F.shiftright("sort_key", shift))
     w = Window.partitionBy("query_id").orderBy("d2", "key")
     return (
-        pts.join(ivals, "bucket")
-        .filter((F.col("sort_key") >= F.col("lo")) & (F.col("sort_key") < F.col("hi")))
+        bucket_join(pts, cover, shift, broadcast_cover)
         .withColumn("d2", dist2(F.col("x"), F.col("y"), F.col("qx"), F.col("qy")))
         .filter(F.col("d2") <= F.col("r2"))
         .withColumn("rank", F.row_number().over(w))

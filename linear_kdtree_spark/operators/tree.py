@@ -22,7 +22,6 @@ pruning then exploit.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -170,30 +169,6 @@ class SplitTree:
             return p.n_left if node_id == 2 * parent + 1 else p.n_right
         return 0
 
-    def bbox(self, node_id: int) -> tuple[float, float, float, float]:
-        """(xmin, xmax, ymin, ymax) half-open bounds of a node's region,
-        derived by replaying ancestor splits from the root."""
-        path = []
-        n = node_id
-        while n > 0:
-            parent = (n - 1) // 2
-            path.append((parent, n == 2 * parent + 1))
-            n = parent
-        xmin, xmax, ymin, ymax = -INF, INF, -INF, INF
-        for parent, went_left in reversed(path):
-            s = self.nodes[parent]
-            if s.axis == 0:
-                if went_left:
-                    xmax = min(xmax, s.value)
-                else:
-                    xmin = max(xmin, s.value)
-            else:
-                if went_left:
-                    ymax = min(ymax, s.value)
-                else:
-                    ymin = max(ymin, s.value)
-        return xmin, xmax, ymin, ymax
-
     def leaf_for(self, x: float, y: float) -> int:
         """Heap id of the leaf region containing (x, y) — the query-side
         replay of the build's descent (reference lkt.cpp:146-152)."""
@@ -235,17 +210,12 @@ class SplitTree:
 
     def knn_seed_node(self, x: float, y: float, k: int) -> int:
         """Smallest ancestor of (x, y)'s leaf whose subtree holds ≥ k points
-        — the phase-A candidate region for exact kNN."""
+        — the kNN seed node (scalar reference for operators/knn.py's
+        vectorized ``_seed_r2_bound``)."""
         n = self.leaf_for(x, y)
         while n > 0 and self.count(n) < k:
             n = (n - 1) // 2
         return n
-
-    def min_dist2_to_bbox(self, x: float, y: float, node_id: int) -> float:
-        xmin, xmax, ymin, ymax = self.bbox(node_id)
-        dx = max(xmin - x, 0.0, x - xmax)
-        dy = max(ymin - y, 0.0, y - ymax)
-        return dx * dx + dy * dy
 
     def data_bbox(self, node_id: int) -> tuple[float, float, float, float] | None:
         """Exact (xmin, xmax, ymin, ymax) of the points under ``node_id``,
@@ -264,8 +234,7 @@ class SplitTree:
         """Upper bound on the k-th-NN distance² for a query at (x, y) whose
         seed node (≥ k points) is ``node_id``: the far corner of the seed's
         data bbox — every one of those ≥ k points lies inside it, so the
-        k-th nearest overall is no farther. Replaces the round-1 phase-A
-        data scan + driver collect with pure driver arithmetic."""
+        k-th nearest overall is no farther."""
         bb = self.data_bbox(node_id)
         if bb is None:
             return INF

@@ -16,7 +16,7 @@ from linear_kdtree_spark.operators.spatial_join import (
     spatial_join_polygons,
 )
 from linear_kdtree_spark.operators.tile import assign_tiles_lkt, assign_tiles_morton
-from linear_kdtree_spark.oracle import point_in_polygon
+from linear_kdtree_spark.oracle import brute_knn, point_in_polygon
 
 BOUNDS = (0.0, 0.0, 100.0, 100.0)
 
@@ -214,13 +214,14 @@ def test_morton_tiles_and_raster(spark, index, dataset):
         )
 
 
-def test_knn_batch_equals_knn(spark, index, dataset):
+def test_knn_batch_matches_brute_force(spark, index, dataset):
     """The fully-distributed batch planner (mapInPandas seed/cover, no
-    driver loop) must produce exactly the driver-planned knn() results —
-    including tie ranks — over a query batch straddling clusters, edges
-    and far-outside points."""
+    driver loop) must equal the numpy brute force — including tie ranks —
+    over a query batch straddling clusters, edges and far-outside
+    points."""
     from linear_kdtree_spark.operators.knn import knn_batch
 
+    keys, x, y = dataset
     rng = np.random.default_rng(17)
     pts = np.vstack([
         rng.uniform(0, 100, (60, 2)),
@@ -234,8 +235,9 @@ def test_knn_batch_equals_knn(spark, index, dataset):
         for r in knn_batch(index, qdf, k).collect()
     )
     want = sorted(
-        (r["query_id"], r["rank"], r["key"])
-        for r in knn(index, queries, k).collect()
+        (qid, rank, key)
+        for qid, qx, qy in queries
+        for rank, (key, _) in enumerate(brute_knn(x, y, keys, qx, qy, k), 1)
     )
     assert got == want
     assert len(got) == len(pts) * k
@@ -292,8 +294,8 @@ def test_deinterleave_exact_above_2_53(spark):
 def test_knn_batch_degrades_without_node_bounds(spark, index, dataset):
     """A tree reloaded without node_bounds gives every query an infinite
     seed radius; the batch cover must then emit ONE full-range interval
-    per query (knn()'s documented degrade), not one interval per leaf —
-    and the results must still equal the bounded path's."""
+    per query, not one interval per leaf — and the results must still
+    equal the bounded path's."""
     from linear_kdtree_spark.operators.build import LktIndex
     from linear_kdtree_spark.operators.knn import _cover_intervals, knn_batch
     from linear_kdtree_spark.operators.tree import SplitTree

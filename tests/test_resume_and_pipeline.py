@@ -137,16 +137,20 @@ def test_cli_roundtrip(spark, tmp_path):
                             "--depth", "6"]) == 0
     assert "tile" in spark.read.parquet(out_tile).columns
 
-    # batch-kNN through a RELOADED index (bounds parquet round-trip) must
-    # equal the driver-planned results
-    out_knnb = str(tmp_path / "knn_batch_out")
-    assert cli.main(base + ["knn", "--index", idx_path, "--queries", q_path,
-                            "--output", out_knnb, "-k", "3", "--batch"]) == 0
-    a = sorted(map(tuple, spark.read.parquet(out_knn)
-                   .select("query_id", "rank", "key").collect()))
-    b = sorted(map(tuple, spark.read.parquet(out_knnb)
-                   .select("query_id", "rank", "key").collect()))
-    assert a == b
+    # kNN through a RELOADED index (bounds parquet round-trip) must equal
+    # the numpy brute force over the extracted points
+    from linear_kdtree_spark.oracle import brute_knn
+
+    ref = spark.read.parquet(pts_path).toPandas()
+    keys, px, py = (ref[c].to_numpy() for c in ("key", "x", "y"))
+    want = sorted(
+        (qid, rank, key)
+        for qid, qx, qy in [(0, 10.0, 10.0), (1, -50.0, 30.0)]
+        for rank, (key, _) in enumerate(brute_knn(px, py, keys, qx, qy, 3), 1)
+    )
+    got = sorted(map(tuple, spark.read.parquet(out_knn)
+                     .select("query_id", "rank", "key").collect()))
+    assert got == want
 
     out_s2 = str(tmp_path / "s2_out")
     assert cli.main(base + ["tile", "--input", pts_path, "--output", out_s2,
