@@ -43,6 +43,7 @@ def cmd_build(args) -> int:
     from pyspark.sql import functions as F
 
     from linear_kdtree_spark.operators.build import lkt_build
+    from linear_kdtree_spark.session import local_frame
 
     spark = _spark(args)
     pts = spark.read.parquet(args.input)
@@ -62,7 +63,8 @@ def cmd_build(args) -> int:
     # per-node data bboxes power the kNN radius bound; without them a
     # reloaded index still answers exactly but plans full-range scans
     if idx.tree.node_bounds:
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(n, *b) for n, b in idx.tree.node_bounds.items()],
             "node long, xmin double, xmax double, ymin double, ymax double",
         ).write.mode("overwrite").parquet(os.path.join(args.output, "bounds"))

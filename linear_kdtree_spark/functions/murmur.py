@@ -88,12 +88,15 @@ def partition_tokens(n_parts: int, max_probe: int | None = None) -> list[int]:
 
 def verify_tokens(spark, tokens: list[int]) -> bool:
     """One tiny n-row JVM job proving ``repartition(n, token)`` lands each
-    token in its intended slot on THIS Spark version."""
+    token in its intended slot on THIS Spark version. The token table is a
+    LocalRelation, so the job starts no Python worker."""
     from pyspark.sql import functions as F
 
+    from linear_kdtree_spark.session import local_frame
+
     n = len(tokens)
-    df = spark.createDataFrame(
-        [(t, s) for s, t in enumerate(tokens)], "tok long, slot int"
+    df = local_frame(
+        spark, [(t, s) for s, t in enumerate(tokens)], "tok long, slot int"
     )
     rows = (
         df.repartition(n, "tok")

@@ -55,6 +55,7 @@ from pyspark.sql import types as T
 from linear_kdtree_spark.functions.morton import with_derived_cols
 from linear_kdtree_spark.oracle import MAX_DEPTH
 from linear_kdtree_spark.operators.tree import SplitTree
+from linear_kdtree_spark.session import local_frame, memo_put
 
 # levels with at most this many split nodes inline the node→split-value
 # table as a literal map expression instead of a broadcast join (see the
@@ -129,7 +130,7 @@ def _apply_level(spark, df: DataFrame, axis: str, splittable: list) -> DataFrame
         # on missing key, same semantics as the left join).
         joined = df.withColumn("sv", _literal_lookup(F.col("node"), splittable))
     else:  # deep distributed builds (leaf_size-bounded, e.g. resume)
-        sdf = spark.createDataFrame(splittable, "node long, sv double")
+        sdf = local_frame(spark, splittable, "node long, sv double")
         joined = df.join(F.broadcast(sdf), "node", "left")
     has = F.col("sv").isNotNull()
     left = F.col(axis).cast("double") < F.col("sv")
@@ -499,7 +500,8 @@ def lkt_build(
     if not tree.total_points:
         tree.total_points = node_counts.get(0, 0)
     tree.node_bounds = node_bounds
-    splits_df = spark.createDataFrame(
+    splits_df = local_frame(
+        spark,
         [
             (
                 r["node_id"], r["depth"], r["axis"], r["value"],
@@ -584,13 +586,14 @@ def _verified_tokens(spark, n_parts: int):
     # applicationId is stable for the session's lifetime and never reused
     # by a successor session in-process (id(spark) can be — ADVICE r3)
     key = (spark.sparkContext.applicationId, n_parts)
-    if key not in _TOKEN_CACHE:
-        try:
-            toks = partition_tokens(n_parts)
-            _TOKEN_CACHE[key] = toks if verify_tokens(spark, toks) else None
-        except Exception:
-            _TOKEN_CACHE[key] = None
-    return _TOKEN_CACHE[key]
+    if key in _TOKEN_CACHE:
+        return _TOKEN_CACHE[key]
+    try:
+        toks = partition_tokens(n_parts)
+        toks = toks if verify_tokens(spark, toks) else None
+    except Exception:
+        toks = None
+    return memo_put(_TOKEN_CACHE, key, toks)
 
 
 def _local_finish_fused(
@@ -712,7 +715,7 @@ def _local_finish_fused(
                 .drop("_tok")
             )
         else:
-            rdf = spark.createDataFrame(route, "node long, _tok long")
+            rdf = local_frame(spark, route, "node long, _tok long")
             src = (
                 base.join(F.broadcast(rdf), "node")
                 .repartition(n_parts, "_tok")

@@ -19,6 +19,8 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from linear_kdtree_spark.session import memo_put
+
 logger = logging.getLogger(__name__)
 
 # Default guard on LSH candidate self-joins: a (band, bucket) group of m
@@ -86,7 +88,9 @@ def drop_oversized_buckets(
 # physical-parallelism probe memo for widen_partitions: keyed on
 # (applicationId, analyzed-plan semantic hash, parallelism). The cached
 # value is a PARTITION COUNT, never data — a stale hit can only change
-# how many tasks run the projection, not any result row.
+# how many tasks run the projection, not any result row. An insert drops
+# the entries of stopped sessions (session.memo_put), so the memo holds
+# one application's plans at a time.
 _WIDEN_PROBE_CACHE: dict = {}
 
 
@@ -118,7 +122,7 @@ def widen_partitions(df: DataFrame) -> DataFrame:
     if n is None:
         n = df.rdd.getNumPartitions()
         if key is not None:
-            _WIDEN_PROBE_CACHE[key] = n
+            memo_put(_WIDEN_PROBE_CACHE, key, n)
     if n < par:
         return df.repartition(par)
     return df

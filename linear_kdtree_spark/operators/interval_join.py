@@ -13,12 +13,15 @@ distributed band-join literature) buckets the key space so it becomes:
 
 ``shift`` is chosen from the interval lengths so an average interval spans
 ≤ ~4 buckets — the replication stays O(|intervals|) while the join is a
-hash join Catalyst/AQE handle natively (broadcast when tiny, shuffle+skew-
-split when not).
+hash join Catalyst/AQE handle natively.
 
 :func:`bucket_join` runs it for a DataFrame of intervals (kNN's covers,
 planned in ``mapInPandas``); :func:`interval_join` is its front end for a
-driver-side list (PIP's covers).
+driver-side list (PIP's covers). The list becomes an Arrow LocalRelation
+(``session.local_frame``): building, reading and broadcasting it runs no
+job and starts no Python worker. Its Arrow table also gives the payload
+size the broadcast decision needs: convex PIP carries each polygon's edge
+array on every interval row, so row count alone says nothing about bytes.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linear_kdtree_spark.oracle import MAX_DEPTH
+from linear_kdtree_spark.session import arrow_table, local_frame
 
 
 def choose_shift(intervals: list[tuple], max_depth: int = MAX_DEPTH) -> int:
@@ -46,16 +50,16 @@ def bucket_join(
     points: DataFrame,
     intervals: DataFrame,
     shift: int,
-    broadcast: bool,
+    hint: str | None,
     key_col: str = "sort_key",
 ) -> DataFrame:
     """The band join for a DataFrame of interval rows (``hi > lo``): points
     whose ``key_col`` lies in a row's half-open ``[lo, hi)``, with buckets
     ``2^shift`` wide. Returns the points columns + interval columns minus
     the ``bucket``/``lo``/``hi`` helpers (callers that need the bounds
-    carry them as extra fields, e.g. kNN's r2). ``broadcast=True`` hints
-    the exploded interval side into a broadcast hash join; False leaves
-    the strategy to Catalyst/AQE."""
+    carry them as extra fields, e.g. kNN's r2). ``hint`` is a join
+    strategy hint on the exploded interval side (``"broadcast"``,
+    ``"merge"``); None leaves the strategy to Catalyst/AQE."""
     ivals = intervals.withColumn(
         "bucket",
         F.explode(
@@ -84,7 +88,11 @@ def bucket_join(
         & (key >= ivals["lo"])
         & (key < ivals["hi"])
     )
-    joined = points.join(F.broadcast(ivals) if broadcast else ivals, on)
+    if hint == "broadcast":
+        ivals = F.broadcast(ivals)
+    elif hint:
+        ivals = ivals.hint(hint)
+    joined = points.join(ivals, on)
     return joined.drop("bucket", "lo", "hi")
 
 
@@ -100,17 +108,29 @@ def interval_join(
 
     intervals: list of tuples whose LAST TWO fields are (lo, hi) half-open
     sort_key bounds; interval_schema describes the full tuple, e.g.
-    ``"poly_id long, lo long, hi long"``. ``broadcast=None`` hints
-    broadcast only while the replicated side is at most
-    ``BROADCAST_ROW_CAP`` rows (review r5: an unconditional hint overrides
-    autoBroadcastJoinThreshold and ships arbitrarily large exploded covers
-    to every executor); above the cap Catalyst/AQE pick the join."""
+    ``"poly_id long, lo long, hi long"``.
+
+    ``broadcast=None`` decides from the exploded side: a broadcast hint
+    while it is at most ``BROADCAST_ROW_CAP`` rows and its payload (Arrow
+    bytes per row × replicated rows) fits the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, else a sort-merge hint. Both
+    are hints because Catalyst sizes a LocalRelation by default widths
+    (one element per array) and would broadcast a wide cover it thinks is
+    tiny. ``True`` hints broadcast; ``False`` leaves the strategy to
+    Catalyst/AQE."""
     # an empty interval matches nothing, and sequence() would count down
     intervals = [t for t in intervals if t[-1] > t[-2]]
     shift = choose_shift(intervals, max_depth)
+    spark = points.sparkSession
+    table = arrow_table(intervals, interval_schema)
+    hint = "broadcast" if broadcast else None
     if broadcast is None:
         replicated = sum(((hi - 1) >> shift) - (lo >> shift) + 1
                          for *_, lo, hi in intervals)
-        broadcast = replicated <= BROADCAST_ROW_CAP
-    ivals = points.sparkSession.createDataFrame(intervals, interval_schema)
-    return bucket_join(points, ivals, shift, broadcast, key_col)
+        payload = table.nbytes / max(len(intervals), 1) * replicated
+        conf = spark._jsparkSession.sessionState().conf()
+        fits = (replicated <= BROADCAST_ROW_CAP
+                and payload <= conf.autoBroadcastJoinThreshold())
+        hint = "broadcast" if fits else "merge"
+    ivals = local_frame(spark, table, interval_schema)
+    return bucket_join(points, ivals, shift, hint, key_col)

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from linear_kdtree_spark.functions.geometry import dist2
 from linear_kdtree_spark.operators.build import LktIndex
 from linear_kdtree_spark.operators.interval_join import bucket_join
+from linear_kdtree_spark.session import local_frame
 
 
 def knn(
@@ -48,7 +49,8 @@ def knn(
     Returns (query_id, key, dist2, rank) with rank 1..k: :func:`knn_batch`
     over the queries (a list becomes a small DataFrame first)."""
     if not isinstance(queries, DataFrame):
-        queries = index.points.sparkSession.createDataFrame(
+        queries = local_frame(
+            index.points.sparkSession,
             [(int(q), float(x), float(y)) for q, x, y in queries],
             "query_id long, qx double, qy double",
         )
@@ -194,9 +196,12 @@ def knn_batch(
     — removed the python planning stage and its tree-array broadcast, but
     an interleaved same-session A/B at 4.8 M/local[32] showed it SLOWER:
     best 1.045 / med 1.137 s vs 0.948 / 1.044 s for this path. The
-    per-call probe job + local-relation conversion cost more than the one
-    40-row mapInPandas stage they replaced; an earlier session's opposite
-    reading came from a polluted window.)
+    per-call probe job + the Python-worker job that
+    ``createDataFrame(list)`` runs to read its ``parallelize``d rows cost
+    more than the one 40-row mapInPandas stage they replaced; an earlier
+    session's opposite reading came from a polluted window. An Arrow
+    LocalRelation (``session.local_frame``) removes the second cost but
+    not the probe job; the verdict stands.)
 
     ``broadcast_cover=True`` (default) hints the cover side into a
     broadcast hash join so the POINT table is never shuffled — right up to
@@ -208,8 +213,8 @@ def knn_batch(
     tree = index.tree
     total = tree.total_points
     if total == 0:
-        return spark.createDataFrame(
-            [], "query_id long, key long, dist2 double, rank int"
+        return local_frame(
+            spark, [], "query_id long, key long, dist2 double, rank int"
         )
     k_eff = min(k, total)
     md = tree.max_depth
@@ -245,7 +250,7 @@ def knn_batch(
     cover = queries.select(query_id, qx_col, qy_col).mapInPandas(plan, out_schema)
     w = Window.partitionBy("query_id").orderBy("d2", "key")
     return (
-        bucket_join(pts, cover, shift, broadcast_cover)
+        bucket_join(pts, cover, shift, "broadcast" if broadcast_cover else None)
         .withColumn("d2", dist2(F.col("x"), F.col("y"), F.col("qx"), F.col("qy")))
         .filter(F.col("d2") <= F.col("r2"))
         .withColumn("rank", F.row_number().over(w))

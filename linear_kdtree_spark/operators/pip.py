@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from linear_kdtree_spark.functions.geometry import make_raycast_udf
 from linear_kdtree_spark.operators.build import LktIndex
+from linear_kdtree_spark.session import local_frame
 
 
 @dataclass
@@ -42,7 +43,7 @@ def _pruned_candidates(index: LktIndex, polygons: list[Polygon]) -> DataFrame:
         for lo, hi in index.tree.ranges_for_bbox(xmin, ymin, xmax, ymax):
             rows.append((p.poly_id, lo, hi))
     if not rows:
-        return spark.createDataFrame([], "poly_id long, key long, x double, y double")
+        return local_frame(spark, [], "poly_id long, key long, x double, y double")
     pts = index.points.select("key", "x", "y", "sort_key")
     return interval_join(
         pts, rows, "poly_id long, lo long, hi long", max_depth=index.max_depth

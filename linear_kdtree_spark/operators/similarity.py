@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from linear_kdtree_spark.session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two array<numeric> columns."""
@@ -207,7 +209,8 @@ def kmeans_centroids(
         got = {r["cell"] for r in new_rows}
         # empty cells keep their previous centroid
         keep = [r for r in cents.collect() if r["cell"] not in got]
-        cents = spark.createDataFrame(
+        cents = local_frame(
+            spark,
             sorted(
                 [(r["cell"], list(r["c_embedding"])) for r in new_rows]
                 + [(r["cell"], list(r["c_embedding"])) for r in keep]

@@ -21,6 +21,7 @@ from linear_kdtree_spark.functions.morton import WORLD, grid_cell_col
 from linear_kdtree_spark.operators.build import LktIndex
 from linear_kdtree_spark.operators.pip import Polygon
 from linear_kdtree_spark.operators.tile import assign_tiles_morton
+from linear_kdtree_spark.session import local_frame
 
 
 def polygon_tiles(
@@ -53,7 +54,7 @@ def polygon_tiles(
                     tile |= ((ix >> i) & 1) << (2 * i)
                     tile |= ((iy >> i) & 1) << (2 * i + 1)
                 rows.append((p.poly_id, tile))
-    return spark.createDataFrame(rows, "poly_id long, tile long")
+    return local_frame(spark, rows, "poly_id long, tile long")
 
 
 def spatial_join_polygons(

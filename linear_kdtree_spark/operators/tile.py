@@ -27,6 +27,7 @@ from linear_kdtree_spark.functions.morton import (
     morton_tile_col,
 )
 from linear_kdtree_spark.operators.build import LktIndex
+from linear_kdtree_spark.session import local_frame
 
 
 def assign_tiles_lkt(index: LktIndex, depth: int) -> DataFrame:
@@ -435,8 +436,8 @@ def pip_h3_cover(
         rows.extend(
             (int(pid), int(face), c, f) for c, f in merged.items()
         )
-    cover = spark.createDataFrame(
-        rows, "poly_id int, _poly_face long, _cover_cell long, _full boolean"
+    cover = local_frame(
+        spark, rows, "poly_id int, _poly_face long, _cover_cell long, _full boolean"
     )
     joined = pts.join(
         F.broadcast(cover),

@@ -138,6 +138,7 @@ class TableCatalog:
 
 def save_index(catalog: TableCatalog, index, prefix: str = "lkt") -> None:
     from linear_kdtree_spark.plans.lineage import partition_metrics
+    from linear_kdtree_spark.session import local_frame
 
     catalog.write(f"{prefix}_points", index.points)
     catalog.write(f"{prefix}_splits", index.splits)
@@ -146,7 +147,8 @@ def save_index(catalog: TableCatalog, index, prefix: str = "lkt") -> None:
         # catalog round-trip instead of degrading to full-range plans
         catalog.write(
             f"{prefix}_bounds",
-            catalog.spark.createDataFrame(
+            local_frame(
+                catalog.spark,
                 [(n, *b) for n, b in index.tree.node_bounds.items()],
                 "node long, xmin double, xmax double, ymin double, ymax double",
             ),
