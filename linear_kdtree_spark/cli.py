@@ -10,7 +10,7 @@ Usage (local or cluster; zip the package for --py-files):
 
 Commands
 --------
-build     points parquet (key, x, y) → kd index (points + splits + lineage)
+build     points parquet (key, x, y) → kd index (points + splits + leaves + lineage)
 extract   pages parquet (url, text, …) → points parquet
 knn       index dir + queries parquet (query_id, qx, qy) → top-k parquet
 pip       index dir + rectangles CSV "poly_id,xmin,ymin,xmax,ymax" → parquet
@@ -43,7 +43,6 @@ def cmd_build(args) -> int:
     from pyspark.sql import functions as F
 
     from linear_kdtree_spark.operators.build import lkt_build
-    from linear_kdtree_spark.session import local_frame
 
     spark = _spark(args)
     pts = spark.read.parquet(args.input)
@@ -60,14 +59,9 @@ def cmd_build(args) -> int:
     )
     idx.points.write.mode("overwrite").parquet(os.path.join(args.output, "points"))
     idx.splits.write.mode("overwrite").parquet(os.path.join(args.output, "splits"))
-    # per-node data bboxes power the kNN radius bound; without them a
-    # reloaded index still answers exactly but plans full-range scans
-    if idx.tree.node_bounds:
-        local_frame(
-            spark,
-            [(n, *b) for n, b in idx.tree.node_bounds.items()],
-            "node long, xmin double, xmax double, ymin double, ymax double",
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "bounds"))
+    idx.tree.leaf_frame(spark).write.mode("overwrite").parquet(
+        os.path.join(args.output, "leaves")
+    )
     with open(os.path.join(args.output, "lineage.json"), "w") as f:
         json.dump(
             {"max_depth": idx.max_depth, "coord_type": idx.coord_type,
@@ -87,15 +81,10 @@ def _load_index(spark, index_dir: str):
         meta = json.load(f)
     points = spark.read.parquet(os.path.join(index_dir, "points"))
     splits = spark.read.parquet(os.path.join(index_dir, "splits"))
-    tree = SplitTree.from_df(splits, max_depth=meta["max_depth"])
-    if not tree.total_points:
-        tree.total_points = points.count()
-    bounds_path = os.path.join(index_dir, "bounds")
-    if os.path.isdir(bounds_path):
-        tree.node_bounds = {
-            int(r["node"]): (r["xmin"], r["xmax"], r["ymin"], r["ymax"])
-            for r in spark.read.parquet(bounds_path).collect()
-        }
+    # an index saved before the leaf table existed gets it derived
+    leaves_path = os.path.join(index_dir, "leaves")
+    leaves = spark.read.parquet(leaves_path) if os.path.isdir(leaves_path) else None
+    tree = SplitTree.from_frames(splits, points, leaves, max_depth=meta["max_depth"])
     return LktIndex(
         points=points, splits=splits, tree=tree,
         lineage=meta.get("levels", []), max_depth=meta["max_depth"],

@@ -15,21 +15,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def point_in_convex_polygon(
-    x: Column, y: Column, vertices: list[tuple[float, float]]
-) -> Column:
-    """Strict half-plane conjunction for a CCW convex polygon: the point is
-    inside iff it lies strictly left of every directed edge."""
-    cond = F.lit(True)
-    m = len(vertices)
-    for i in range(m):
-        x1, y1 = vertices[i]
-        x2, y2 = vertices[(i + 1) % m]
-        cross = (F.lit(x2 - x1)) * (y - F.lit(y1)) - (F.lit(y2 - y1)) * (x - F.lit(x1))
-        cond = cond & (cross > F.lit(0.0))
-    return cond
-
-
 def ensure_ccw(vertices: list[tuple[float, float]]) -> list[tuple[float, float]]:
     area2 = 0.0
     m = len(vertices)

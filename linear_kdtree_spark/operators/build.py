@@ -54,30 +54,41 @@ from pyspark.sql import types as T
 
 from linear_kdtree_spark.functions.morton import with_derived_cols
 from linear_kdtree_spark.oracle import MAX_DEPTH
-from linear_kdtree_spark.operators.tree import SplitTree
+from linear_kdtree_spark.operators.tree import LEAF_COLUMNS, SplitTree, leaf_stats
 from linear_kdtree_spark.session import local_frame, memo_put
 
 # levels with at most this many split nodes inline the node→split-value
-# table as a literal map expression instead of a broadcast join (see the
-# loop body); above it the map's per-row linear scan would beat the hash
-# probe no longer and codegen size grows, so the join path takes over.
+# table as a literal CASE chain instead of a broadcast join (see _lookup);
+# above it the chain's per-row linear scan would beat the hash probe no
+# longer and codegen size grows, so the join path takes over.
 SPLIT_MAP_MAX = 64
+# the level loop persists its point table every PERSIST_EVERY levels
+PERSIST_EVERY = 3
+# Arrow batch rows for the fused pass's mapInPandas (see _local_finish_fused)
+FUSED_BATCH_ROWS = 500_000
 
 
-def _literal_lookup(col, pairs):
-    """node → value lookup as a chained CASE WHEN over literals (NULL on
-    missing key, same semantics as the broadcast-join/`try_element_at`
-    alternatives). Unlike ``try_element_at(create_map(...))`` this
-    allocates NOTHING per row — CreateMap of literals is not constant-
-    folded, so the map form rebuilds the map object per row per level;
-    with mid-loop persists stretched out that compounded to a measured
-    6× build regression (r6 persist-every experiment), while the CASE
-    chain is pure codegen comparisons."""
-    expr = None
-    for k, v in pairs:
-        w = (col == F.lit(k), F.lit(v))
-        expr = F.when(*w) if expr is None else expr.when(*w)
-    return expr
+def _lookup(spark, df: DataFrame, pairs: list, name: str, dtype: str) -> DataFrame:
+    """``df`` plus column ``name``: the value ``pairs`` ((node, value)
+    tuples) holds for each row's node, NULL where it holds none.
+
+    Up to SPLIT_MAP_MAX pairs this is a chained CASE WHEN over literals,
+    which keeps the lookup inside ONE whole-stage-codegen projection — no
+    broadcast exchange, no join node — and allocates nothing per row.
+    (``try_element_at(create_map(...))`` would rebuild the map object per
+    row: CreateMap of literals is not constant-folded, and with mid-loop
+    persists stretched out that compounded to a measured 6× build
+    regression, r6 persist-every experiment.) Above it, a broadcast left
+    join against the pairs as a LocalRelation."""
+    if len(pairs) <= SPLIT_MAP_MAX:
+        expr = None
+        for k, v in pairs:
+            w = (F.col("node") == F.lit(k), F.lit(v))
+            expr = F.when(*w) if expr is None else expr.when(*w)
+        return df.withColumn(name, expr)
+    table = local_frame(spark, pairs, f"node long, {name} {dtype}")
+    return df.join(F.broadcast(table), "node", "left")
+
 
 SPLITS_SCHEMA = T.StructType(
     [
@@ -99,7 +110,12 @@ class LktIndex:
     the kd-ordered point DataFrame (``code`` + ``sort_key`` columns in place
     of the reference's parallel ``morton_codes`` array, lkt.h:31), the flat
     heap-ordered split DataFrame (analogue of ``fixlentree``,
-    fixlentree.hh:20-81), and the broadcastable driver-side tree."""
+    fixlentree.hh:20-81), and the broadcastable driver-side tree.
+
+    Invariant: ``tree.leaves`` (the leaf table: count and data bbox per
+    non-empty leaf) describes exactly ``points``, and every query cover is
+    planned from it. Code that changes the points must rebuild the table;
+    no current path does (streaming ingest rebuilds the whole index)."""
 
     points: DataFrame  # key, x, y, node, path_len, code, sort_key
     splits: DataFrame
@@ -115,23 +131,14 @@ def _apply_level(spark, df: DataFrame, axis: str, splittable: list) -> DataFrame
     the stats scan can REBUILD the un-persisted transform chain from the
     last cached level (see the chain-aware stats source in
     :func:`lkt_build`)."""
-    if len(splittable) <= SPLIT_MAP_MAX:
-        # the distributed phase is the TOP of the tree: ≤ n/threshold
-        # active nodes per level, so the split table is tiny. A literal
-        # CASE-chain lookup keeps the level transform inside ONE whole-
-        # stage-codegen projection — no broadcast exchange, no join
-        # node, no per-level createDataFrame round-trip — which is
-        # precisely the per-level fixed cost that caps the high-
-        # parallelism leg (BENCH/SCALING.md r4: 5 sequential stats
-        # jobs × ~1 s fixed scale 1.4× vs the 0.988 substrate
-        # control). Lookup is a linear scan of ≤ SPLIT_MAP_MAX
-        # comparisons — cheaper per row than a hash-join probe at
-        # this size, and allocation-free (see _literal_lookup; NULL
-        # on missing key, same semantics as the left join).
-        joined = df.withColumn("sv", _literal_lookup(F.col("node"), splittable))
-    else:  # deep distributed builds (leaf_size-bounded, e.g. resume)
-        sdf = local_frame(spark, splittable, "node long, sv double")
-        joined = df.join(F.broadcast(sdf), "node", "left")
+    # the distributed phase is the TOP of the tree: ≤ n/threshold active
+    # nodes per level, so the split table is tiny and _lookup keeps the
+    # level transform inside one codegen projection — no per-level
+    # exchange, which is precisely the per-level fixed cost that caps the
+    # high-parallelism leg (BENCH/SCALING.md r4: 5 sequential stats jobs ×
+    # ~1 s fixed scale 1.4× vs the 0.988 substrate control). Deep
+    # distributed builds (leaf_size-bounded, e.g. resume) take the join.
+    joined = _lookup(spark, df, splittable, "sv", "double")
     has = F.col("sv").isNotNull()
     left = F.col(axis).cast("double") < F.col("sv")
     right_bit = F.when(left, F.lit(0)).otherwise(F.lit(1))
@@ -271,16 +278,14 @@ def lkt_build(
     state = _load_manifest(checkpoint_dir) if checkpoint_dir else None
     split_rows: list[dict] = []
     lineage: list[dict] = []
-    node_counts: dict[int, int] = {}
-    node_bounds: dict[int, tuple] = {}  # node → (xmin, xmax, ymin, ymax)
+    # node → (count, xmin, xmax, ymin, ymax) of every node a stats scan
+    # saw; the ones that never split are rows of the leaf table
+    node_stats: dict[int, tuple] = {}
     start_depth = 0
     if state:
         split_rows = state["split_rows"]
         lineage = state["lineage"]
-        node_counts = {int(k): v for k, v in state["node_counts"].items()}
-        node_bounds = {
-            int(k): tuple(v) for k, v in state.get("node_bounds", {}).items()
-        }
+        node_stats = {int(k): tuple(v) for k, v in state["node_stats"].items()}
         start_depth = state["next_depth"]
         pts = spark.read.parquet(state["points_path"])
     else:
@@ -293,7 +298,6 @@ def lkt_build(
 
     pts = pts.persist()
     last_cached = pts
-    persist_every = int(os.environ.get("SPARK_GRAFT_PERSIST_EVERY", "3"))
     min_split = max(2, leaf_size + 1)
     fused_out = None  # set by the fused local finish (final, materialized)
     # nodes withdrawn from the distributed phase the moment they fit a
@@ -309,49 +313,47 @@ def lkt_build(
     deferred: set[int] = set()
     # the transform chain since the last persisted/checkpointed level:
     # (depth, axis, splittable) triples applied on top of ``chain_base``.
-    # The stats scan REBUILDS this chain from the cache with a plain-
-    # attribute prefilter instead of filtering the chained ``pts``: the
-    # exact ``node >= level_lo`` filter on a ≥2-level CASE-projection
-    # chain is substituted through every projection by predicate
-    # pushdown (it pushes through the aggregate's grouping key too), and
-    # the multiplicatively nested condition falls out of codegen into
-    # interpreted evaluation — measured r6: a 2-chain stats scan at 20 M
-    # rows ran 68.5 s vs 0.41 s for the 1-chain control (16 KB filter
-    # condition in the plan), and the lc4@76.8 M build spent 187 s in
-    # ONE such level. The rebuilt source keeps every CASE level a
-    # separate whole-stage-codegen projection; the exact active filter
-    # moves driver-side onto the collected per-node group rows.
     chain_base = pts
     chain: list[tuple[int, str, list]] = []
 
-    def _stats_rows(cur_axis: str, level_lo: int) -> list:
+    def _group_rows(aggregate, level_lo: int) -> list:
+        """``aggregate`` (a per-node groupBy) over the rows of the nodes
+        ≥ ``level_lo``, collected. With un-persisted levels pending, the
+        source REBUILDS the chain from the cache with a plain-attribute
+        prefilter instead of filtering the chained ``pts``: the exact
+        ``node >= level_lo`` filter on a ≥2-level CASE-projection chain is
+        substituted through every projection by predicate pushdown (it
+        pushes through the aggregate's grouping key too), and the
+        multiplicatively nested condition falls out of codegen into
+        interpreted evaluation — measured r6: a 2-chain stats scan at 20 M
+        rows ran 68.5 s vs 0.41 s for the 1-chain control (16 KB filter
+        condition in the plan), and the lc4@76.8 M build spent 187 s in
+        ONE such level. The rebuilt source keeps every CASE level a
+        separate whole-stage-codegen projection; the exact filter moves
+        driver-side onto the collected per-node rows."""
         if chain:
             # rows frozen before the first un-persisted level can never
-            # be active now (heap ids only grow): plain-attribute
-            # prefilter against the CACHED node column, then the chain's
-            # projections, then the exact group filter driver-side
-            pre_lo = (1 << chain[0][0]) - 1
-            src = chain_base.filter(F.col("node") >= pre_lo)
+            # be active now (heap ids only grow)
+            src = chain_base.filter(F.col("node") >= (1 << chain[0][0]) - 1)
             for _, ax2, sp2 in chain:
                 src = _apply_level(spark, src, ax2, sp2)
-            rows = _split_stats(src, cur_axis, strategy).collect()
-            return [r for r in rows if r["node"] >= level_lo]
-        return _split_stats(
-            pts.filter(F.col("node") >= level_lo), cur_axis, strategy
-        ).collect()
+        else:
+            src = pts.filter(F.col("node") >= level_lo)
+        return [r for r in aggregate(src).collect() if r["node"] >= level_lo]
 
     for depth in range(start_depth, max_depth):
         t_level = time.time()
         axis = "x" if depth % 2 == 0 else "y"
         level_lo = (1 << depth) - 1
-        stats = _stats_rows(axis, level_lo)
+        stats = _group_rows(
+            lambda src: _split_stats(src, axis, strategy), level_lo
+        )
         t_stats = time.time() - t_level
         for r in stats:
-            node_counts[int(r["node"])] = int(r["cnt"])
             xb = ("mn", "mx") if axis == "x" else ("mn2", "mx2")
             yb = ("mn2", "mx2") if axis == "x" else ("mn", "mx")
-            node_bounds[int(r["node"])] = (
-                float(r[xb[0]]), float(r[xb[1]]),
+            node_stats[int(r["node"])] = (
+                int(r["cnt"]), float(r[xb[0]]), float(r[xb[1]]),
                 float(r[yb[0]]), float(r[yb[1]]),
             )
 
@@ -399,20 +401,20 @@ def lkt_build(
             prev_cached = last_cached
             pts = _checkpoint_level(
                 spark, new_pts, checkpoint_dir, depth, split_rows, lineage,
-                node_counts, node_bounds,
+                node_stats,
             )
             last_cached = pts
             chain_base, chain = pts, []
             if prev_cached is not None:
                 prev_cached.unpersist()
-        elif (depth + 1) % persist_every == 0:
+        elif (depth + 1) % PERSIST_EVERY == 0:
             # Caching policy, from measurement at 19.2 M points:
             # - localCheckpoint every level: ~7× slower than persist
             #   (per-row copy + serialization per level);
             # - persist every level: rewriting the full cache costs
             #   5-20 s/level — it dominated the loop;
-            # - persist every `persist_every` levels: the skipped levels
-            #   recompute ≤ persist_every-1 broadcast-hash joins from the
+            # - persist every PERSIST_EVERY levels: the skipped levels
+            #   recompute ≤ PERSIST_EVERY-1 broadcast-hash joins from the
             #   last cache — far cheaper than rewriting the cache.
             prev_cached = last_cached
             pts = new_pts.persist()
@@ -424,68 +426,49 @@ def lkt_build(
             pts = new_pts
             chain.append((depth, axis, splittable))
 
-    # child counts for distributed split nodes at the deepest level (loop
-    # may have ended at max_depth before their children were aggregated);
-    # local-phase rows already carry exact counts. MUST run before the
-    # fused finish: uncounted final-level children are leaves the fused
-    # routing would otherwise silently drop (its route table is built from
-    # node_counts).
+    # counts and bboxes of the children of distributed split nodes at the
+    # deepest level (the loop may have ended at max_depth before their
+    # children were aggregated); local-phase rows already carry exact
+    # counts. MUST run before the fused finish: uncounted final-level
+    # children are leaves the fused routing would otherwise silently drop
+    # (its route table is built from node_stats).
     unpatched = [r for r in split_rows if "n_left" not in r]
     missing = [
         r["node_id"]
         for r in unpatched
-        if 2 * r["node_id"] + 1 not in node_counts
+        if 2 * r["node_id"] + 1 not in node_stats
     ]
     if missing:
         lo = min((1 << (node_depth_py(m) + 1)) - 1 for m in missing)
-        if chain:
-            # same chain-aware source as the stats scan: the exact filter
-            # on a chained CASE projection would be pushdown-substituted
-            # into an interpreted monster (see _stats_rows)
-            src = chain_base.filter(
-                F.col("node") >= (1 << chain[0][0]) - 1
+        for r in _group_rows(leaf_stats, lo):
+            node_stats[int(r["node"])] = (
+                int(r["count"]), r["xmin"], r["xmax"], r["ymin"], r["ymax"],
             )
-            for _, ax2, sp2 in chain:
-                src = _apply_level(spark, src, ax2, sp2)
-            extra = [
-                r for r in src.groupBy("node").count().collect()
-                if r["node"] >= lo
-            ]
-        else:
-            extra = (
-                pts.filter(F.col("node") >= lo)
-                .groupBy("node").count().collect()
-            )
-        for r in extra:
-            node_counts[int(r["node"])] = int(r["count"])
 
+    split_ids = {r["node_id"] for r in split_rows}
+    leaf_rows = [
+        (n, *st) for n, st in node_stats.items()
+        if n not in split_ids and n not in deferred
+    ]
     if deferred:
         t_fused = time.time()
-        fused_out, local_split_rows = _local_finish_fused(
+        counts = {n: st[0] for n, st in node_stats.items()}
+        fused_out, local_split_rows, local_leaf_rows = _local_finish_fused(
             spark, pts, max_depth, strategy, min_split, coord_type,
-            num_partitions, node_counts,
-            {r["node_id"] for r in split_rows}, deferred,
+            num_partitions, counts, split_ids, deferred,
         )
-        for r in local_split_rows:
-            b = r.pop("bounds", None)
-            if b is not None:
-                node_bounds[int(r["node_id"])] = tuple(b)
         split_rows.extend(local_split_rows)
+        leaf_rows.extend(local_leaf_rows)
+        sizes = [counts[g] for g in deferred]
         lineage.append(
             {
                 "depth": -1,  # the fused local-finish pass (all subtrees)
                 "n_active_nodes": len(deferred),
                 "n_split_nodes": -1,
                 "n_deferred_nodes": len(deferred),
-                "n_active_points": int(
-                    sum(node_counts.get(g, 0) for g in deferred)
-                ),
-                "max_node_points": int(
-                    max((node_counts.get(g, 0) for g in deferred), default=0)
-                ),
-                "min_node_points": int(
-                    min((node_counts.get(g, 0) for g in deferred), default=0)
-                ),
+                "n_active_points": sum(sizes),
+                "max_node_points": max(sizes),
+                "min_node_points": min(sizes),
                 "local_finish": True,
                 "stats_sec": 0.0,
                 "level_sec": round(time.time() - t_fused, 3),
@@ -493,13 +476,10 @@ def lkt_build(
         )
 
     for r in unpatched:
-        r["n_left"] = node_counts.get(2 * r["node_id"] + 1, 0)
-        r["n_right"] = node_counts.get(2 * r["node_id"] + 2, 0)
+        r["n_left"] = node_stats.get(2 * r["node_id"] + 1, (0,))[0]
+        r["n_right"] = node_stats.get(2 * r["node_id"] + 2, (0,))[0]
 
-    tree = SplitTree.from_rows(split_rows, max_depth=max_depth)
-    if not tree.total_points:
-        tree.total_points = node_counts.get(0, 0)
-    tree.node_bounds = node_bounds
+    tree = SplitTree.from_rows(split_rows, leaf_rows, max_depth=max_depth)
     splits_df = local_frame(
         spark,
         [
@@ -560,8 +540,16 @@ def _node_prefix(g: int, max_depth: int) -> tuple[int, int, int, int]:
     return plen, code, sk, sk << (max_depth - plen)
 
 
+def _global_node(g, local, path_len):
+    """Global heap id of local heap id ``local`` at local depth
+    ``path_len`` in the subtree rooted at ``g``:
+    global + 1 = (g + 1)·2^path_len + local path bits."""
+    two_p = 1 << path_len
+    return (g + 1) * two_p + (local + 1 - two_p) - 1
+
+
 class _ListAccum:
-    """AccumulatorParam collecting lists of split-row dicts."""
+    """AccumulatorParam collecting lists (of per-subtree results)."""
 
     def zero(self, value):
         return []
@@ -599,7 +587,7 @@ def _verified_tokens(spark, n_parts: int):
 def _local_finish_fused(
     spark, pts, max_depth, strategy, min_split, coord_type,
     num_partitions, node_counts, split_ids, deferred,
-) -> tuple[DataFrame, list[dict]]:
+) -> tuple[DataFrame, list[dict], list[tuple]]:
     """Phase 2 of the hybrid build, fused with the terminal kd ordering —
     ONE shuffle and ONE pass from the loop state to the final, materialized,
     kd-ordered index table:
@@ -627,10 +615,10 @@ def _local_finish_fused(
        ``deferred`` are leaves the distributed phase already decided
        (< min_split or a degenerate split) and are emitted verbatim. No
        staging cache, no derived-column pass, no terminal sort.
-    3. **Split rows return via an accumulator** (one per ~leaf_size
-       points), deduped by node_id so a cache-eviction recompute cannot
-       double-add. The count action that materializes the output is the
-       same action that delivers them.
+    3. **Split rows and leaf table rows return via an accumulator** (one
+       entry per deferred subtree), deduped by subtree so a cache-eviction
+       recompute cannot double-add. The count action that materializes
+       the output is the same action that delivers them.
     """
     import numpy as np
     import pandas as pd
@@ -690,37 +678,19 @@ def _local_finish_fused(
         bins[-1].append(g)
         size += live[g]
 
-    debug = os.environ.get("SPARK_GRAFT_BUILD_DEBUG")
-    t0 = time.time()
     tokens = _verified_tokens(spark, n_parts)
-    if debug:
-        print(f"[fused] token verify: {time.time() - t0:.1f}s")
     base = pts.select("key", "x", "y", "node")
     if tokens is not None:
         route = [
             (g, tokens[b]) for b, members in enumerate(bins) for g in members
         ]
-        if len(route) <= SPLIT_MAP_MAX:
-            # same literal CASE-chain trick as the level loop: the
-            # node→token routing stays inside one whole-stage-codegen
-            # projection — no broadcast exchange, no join node feeding
-            # the shuffle (every base row's node is a live subtree, so
-            # the lookup never misses; the n_out == total guard below
-            # would catch a violation either way)
-            src = (
-                base.withColumn(
-                    "_tok", _literal_lookup(F.col("node"), route)
-                )
-                .repartition(n_parts, "_tok")
-                .drop("_tok")
-            )
-        else:
-            rdf = local_frame(spark, route, "node long, _tok long")
-            src = (
-                base.join(F.broadcast(rdf), "node")
-                .repartition(n_parts, "_tok")
-                .drop("_tok")
-            )
+        # every base row's node is a live subtree, so the lookup never
+        # misses (the n_out == total guard below would catch a violation)
+        src = (
+            _lookup(spark, base, route, "_tok", "long")
+            .repartition(n_parts, "_tok")
+            .drop("_tok")
+        )
     else:  # pragma: no cover - JVM partitioning changed; keep correctness
         src = (
             with_derived_cols(base, max_depth)
@@ -731,11 +701,9 @@ def _local_finish_fused(
     acc = spark.sparkContext.accumulator([], _ListAccum())
 
     def finish(batches):
-        t_start = time.time()
         chunks = list(batches)
         if not chunks:
             return
-        t_drain = time.time() - t_start
         # numpy-direct column concat (no pandas block consolidation) and
         # copy=False frames below: fresh-page allocation on this host
         # costs ~100 ms/MB under memory churn (measured: a 7-column
@@ -760,9 +728,7 @@ def _local_finish_fused(
             range(len(uniq)),
             key=lambda i: _node_prefix(int(uniq[i]), max_depth)[3],
         )
-        n_rows_total = len(keys)
-        n_groups = len(uniq)
-        srows = []
+        done = []
         for gi in groups:
             g = int(uniq[gi])
             s, e = edges[gi], edges[gi + 1]
@@ -796,42 +762,35 @@ def _local_finish_fused(
                 coord_dtype=dtype,
             )
             kd = res.kd_perm
-            two_p = np.int64(1) << res.path_len[kd]
             yield pd.DataFrame(
                 {
                     "key": keys[s:e][kd],
                     "x": xs[s:e][kd],
                     "y": ys[s:e][kd],
-                    "node": (g + 1) * two_p + (res.node[kd] + 1 - two_p) - 1,
+                    "node": _global_node(g, res.node[kd], res.path_len[kd]),
                 },
                 copy=False,
             )
-            for nid, sp in res.splits.items():
-                ps = (nid + 1).bit_length() - 1
-                srows.append(
-                    {
-                        "node_id": ((g + 1) << ps) + (nid + 1 - (1 << ps)) - 1,
-                        "depth": plen_g + sp.depth,
-                        "axis": sp.axis,
-                        "value": float(sp.value),
-                        "n_left": sp.n_left,
-                        "n_right": sp.n_right,
-                        # exact subtree bbox: keeps SplitTree.node_bounds
-                        # leaf-granular on the fused path, so kNN radius
-                        # bounds do not degrade to ~threshold-size regions
-                        "bounds": res.split_bounds.get(nid),
-                    }
-                )
-        if srows:
-            acc.add(srows)
-        if debug:
-            print(
-                f"[finish] rows={n_rows_total} groups={n_groups} "
-                f"drain={t_drain:.1f}s total={time.time() - t_start:.1f}s",
-                flush=True,
-            )
+            srows = [
+                {
+                    "node_id": _global_node(g, nid, sp.depth),
+                    "depth": plen_g + sp.depth,
+                    "axis": sp.axis,
+                    "value": float(sp.value),
+                    "n_left": sp.n_left,
+                    "n_right": sp.n_right,
+                }
+                for nid, sp in res.splits.items()
+            ]
+            lv = res.leaves
+            lrows = list(zip(
+                _global_node(g, lv["node"], lv["path_len"]).tolist(),
+                *(lv[c].tolist() for c in LEAF_COLUMNS[3:]),
+            ))
+            done.append((g, srows, lrows))
+        if done:
+            acc.add(done)
 
-    t0 = time.time()
     out = with_derived_cols(
         src.mapInPandas(finish, out_schema), max_depth
     ).persist()
@@ -844,9 +803,7 @@ def _local_finish_fused(
     # a perf difference, never a semantic one.
     arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev_batch = spark.conf.get(arrow_key, None)
-    spark.conf.set(
-        arrow_key, os.environ.get("SPARK_GRAFT_FUSED_BATCH", "500000")
-    )
+    spark.conf.set(arrow_key, str(FUSED_BATCH_ROWS))
     try:
         n_out = out.count()
     finally:
@@ -854,24 +811,18 @@ def _local_finish_fused(
             spark.conf.unset(arrow_key)
         else:
             spark.conf.set(arrow_key, prev_batch)
-    if debug:
-        print(f"[fused] shuffle+finish+materialize: {time.time() - t0:.1f}s")
     if total and n_out != total:  # pragma: no cover - invariant guard
         raise AssertionError(
             f"fused finish row count {n_out} != expected {total}"
         )
-    seen: set[int] = set()
-    local_split_rows = []
-    for r in acc.value:
-        if r["node_id"] not in seen:
-            seen.add(r["node_id"])
-            local_split_rows.append(r)
-    return out, local_split_rows
+    per_subtree = {g: (sr, lr) for g, sr, lr in acc.value}
+    split_rows = [r for sr, _ in per_subtree.values() for r in sr]
+    leaf_rows = [r for _, lr in per_subtree.values() for r in lr]
+    return out, split_rows, leaf_rows
 
 
 def _checkpoint_level(
-    spark, new_pts, checkpoint_dir, depth, split_rows, lineage, node_counts,
-    node_bounds,
+    spark, new_pts, checkpoint_dir, depth, split_rows, lineage, node_stats,
 ):
     path = os.path.join(checkpoint_dir, f"level_{depth:02d}")
     new_pts.write.mode("overwrite").parquet(path)
@@ -880,8 +831,7 @@ def _checkpoint_level(
         "points_path": path,
         "split_rows": split_rows,
         "lineage": lineage,
-        "node_counts": {str(k): v for k, v in node_counts.items()},
-        "node_bounds": {str(k): list(v) for k, v in node_bounds.items()},
+        "node_stats": {str(k): list(v) for k, v in node_stats.items()},
     }
     tmp = os.path.join(checkpoint_dir, "manifest.json.tmp")
     with open(tmp, "w") as f:

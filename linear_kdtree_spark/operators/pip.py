@@ -1,7 +1,9 @@
 """Point-in-polygon filter over an :class:`LktIndex` (SURVEY.md §2.3-Q1).
 
-Plan: polygon bbox → broadcast-tree traversal → merged contiguous
-``sort_key`` intervals (subtrees are contiguous in kd order — the defining
+Plan: polygon bbox → leaf-table filter (``SplitTree.ranges_for_bbox``:
+the leaves whose exact data bbox meets the polygon's bbox; every point
+inside the polygon lies in one of them) → merged contiguous ``sort_key``
+intervals (leaves and subtrees are contiguous in kd order — the defining
 property of the *linear* layout) → pruned scan joined against the interval
 list → exact test per candidate. The exact test is a JVM expression for
 convex polygons / rectangles / diamonds, or an Arrow-batched ray-cast UDF
@@ -94,7 +96,7 @@ def point_in_polygons(
         )
         xd, yd = F.col("x").cast("double"), F.col("y").cast("double")
         # strict half-plane conjunction: inside ⇔ strictly left of every
-        # CCW edge (identical arithmetic to point_in_convex_polygon)
+        # CCW edge
         inside = F.forall(
             F.col("edges"),
             lambda e: e["dx"] * (yd - e["y1"]) - e["dy"] * (xd - e["x1"])

@@ -9,15 +9,20 @@ Differences from the reference, by design (SURVEY.md §1.2, §4.4):
 - the axis is stored explicitly (the reference leaves it implicit as depth
   parity, lkt.cpp:146-152);
 - each node carries its left/right subtree point counts (reference keeps
-  only the partition index, lkt.h:21-24) — these power kNN bound selection
-  and per-partition lineage metrics.
+  only the partition index, lkt.h:21-24) for per-partition lineage.
 
-The tree is tiny relative to the data (≤ one node per split, depth ≤ 32),
-so it collects to the driver and broadcasts to executors; query planning
-turns tree traversals into **contiguous ``sort_key`` intervals** (each
-subtree is contiguous in kd order — the defining property of the *linear*
-kd-tree layout) which Parquet/Iceberg min-max pruning and Spark partition
-pruning then exploit.
+Beside the splits the tree holds one **leaf table**: a row per non-empty
+leaf with its ``sort_key`` interval ``[lo, hi)``, point count and exact
+data bbox, recorded by the build at no extra job. In the linear layout
+every subtree is one contiguous ``sort_key`` interval (SURVEY.md §1.3), so
+this range-encoding metadata plans every query cover as a filter: PIP
+keeps the leaves whose bbox meets the polygon's bbox, kNN bounds the k-th
+distance from leaf counts and far corners and keeps the leaves within that
+radius; adjacent kept leaves merge into one interval. Parquet/Iceberg
+min-max pruning and Spark partition pruning then exploit the intervals.
+The split descent (:meth:`SplitTree.leaf_for`, ``codes._traverse``) is
+left only for labelling new points, which may lie outside every leaf's
+data bbox.
 """
 
 from __future__ import annotations
@@ -49,6 +54,99 @@ def node_interval(node_id: int, max_depth: int = MAX_DEPTH) -> tuple[int, int]:
     return lo, hi
 
 
+LEAF_COLUMNS = ("node", "lo", "hi", "count", "xmin", "xmax", "ymin", "ymax")
+LEAF_SCHEMA = (
+    "node long, lo long, hi long, count long, "
+    "xmin double, xmax double, ymin double, ymax double"
+)
+
+
+def leaf_table(rows, max_depth: int = MAX_DEPTH) -> dict[str, np.ndarray]:
+    """The leaf table from ``(node, count, xmin, xmax, ymin, ymax)`` rows,
+    one per non-empty leaf: a numpy array per :data:`LEAF_COLUMNS` name,
+    sorted by ``lo``. ``[lo, hi)`` is the leaf's :func:`node_interval`."""
+    cols = list(zip(*rows)) or [()] * 6
+    node = np.array(cols[0], dtype=np.int64)
+    depth = np.frexp((node + 1).astype(np.float64))[1].astype(np.int64) - 1
+    width = np.int64(1) << (max_depth - depth)
+    lo = (node + 1 - (np.int64(1) << depth)) * width
+    t = {
+        "node": node, "lo": lo, "hi": lo + width,
+        "count": np.array(cols[1], dtype=np.int64),
+    }
+    for c, v in zip(LEAF_COLUMNS[4:], cols[2:]):
+        t[c] = np.array(v, dtype=np.float64)
+    order = np.argsort(lo, kind="stable")
+    return {c: t[c][order] for c in LEAF_COLUMNS}
+
+
+def leaf_stats(points):
+    """Per-node ``count, xmin, xmax, ymin, ymax`` of a points DataFrame:
+    over an index's points, exactly its leaf table's rows."""
+    from pyspark.sql import functions as F
+
+    return points.groupBy("node").agg(
+        F.count(F.lit(1)).alias("count"),
+        F.min("x").alias("xmin"), F.max("x").alias("xmax"),
+        F.min("y").alias("ymin"), F.max("y").alias("ymax"),
+    )
+
+
+def _far2(qx: np.ndarray, qy: np.ndarray, L: dict) -> np.ndarray:
+    """(queries × leaves) distance² to the far corner of each leaf's bbox:
+    no point of the leaf is farther from the query."""
+    qx, qy = qx[:, None], qy[:, None]
+    dx = np.maximum(np.abs(qx - L["xmin"]), np.abs(qx - L["xmax"]))
+    dy = np.maximum(np.abs(qy - L["ymin"]), np.abs(qy - L["ymax"]))
+    return dx * dx + dy * dy
+
+
+def knn_seed(qx: np.ndarray, qy: np.ndarray, L: dict, k: int):
+    """Per-query k-th-neighbour bound from the leaf table alone: order the
+    leaves by their far-corner distance²; the bound r² is that distance at
+    the first leaf where the running point count reaches ``k`` — those
+    leaves hold ≥ k points, all within r. Returns (that leaf's position in
+    ``L``, r²). ``k`` is clamped to the total; every leaf holds ≥ 1 point,
+    so only the ``k`` nearest far corners need sorting."""
+    far2 = _far2(qx, qy, L)
+    n_leaves = far2.shape[1]
+    k = max(1, min(k, int(L["count"].sum())))
+    m = min(k, n_leaves)
+    if m < n_leaves:
+        cand = np.argpartition(far2, m - 1, axis=1)[:, :m]
+    else:
+        cand = np.broadcast_to(np.arange(n_leaves), far2.shape)
+    d = np.take_along_axis(far2, cand, 1)
+    o = np.argsort(d, axis=1, kind="stable")
+    cand = np.take_along_axis(cand, o, 1)
+    reached = np.cumsum(L["count"][cand], axis=1) >= k
+    pos = cand[np.arange(len(qx)), np.argmax(reached, axis=1)]
+    return pos, far2[np.arange(len(qx)), pos]
+
+
+def _leaf_runs(sel: np.ndarray, L: dict):
+    """(row, lo, hi) of every maximal run of consecutive selected leaves in
+    each row of the (rows × leaves) mask ``sel``. Every split has two
+    non-empty children, so the leaves tile the key space and consecutive
+    leaves are adjacent intervals: each run is one interval."""
+    prev = np.zeros_like(sel)
+    prev[:, 1:] = sel[:, :-1]
+    nxt = np.zeros_like(sel)
+    nxt[:, :-1] = sel[:, 1:]
+    rows, first = np.nonzero(sel & ~prev)
+    _, last = np.nonzero(sel & ~nxt)
+    return rows, L["lo"][first], L["hi"][last]
+
+
+def circle_cover(qx: np.ndarray, qy: np.ndarray, r2: np.ndarray, L: dict):
+    """(query row, lo, hi): for each query, the merged runs of leaves whose
+    data bbox lies within distance² ``r2`` of it."""
+    qx, qy = qx[:, None], qy[:, None]
+    dx = np.maximum(np.maximum(L["xmin"] - qx, qx - L["xmax"]), 0.0)
+    dy = np.maximum(np.maximum(L["ymin"] - qy, qy - L["ymax"]), 0.0)
+    return _leaf_runs(dx * dx + dy * dy <= r2[:, None], L)
+
+
 @dataclass
 class TreeNode:
     node_id: int
@@ -60,24 +158,21 @@ class TreeNode:
 
 
 class SplitTree:
-    """Immutable driver-side kd split tree with traversal planning."""
+    """Immutable driver-side kd split tree (for labelling new points) and
+    its leaf table (for planning every query cover)."""
 
-    def __init__(self, nodes: dict[int, TreeNode], max_depth: int = MAX_DEPTH,
-                 total_points: int | None = None):
+    def __init__(self, nodes: dict[int, TreeNode], leaves: dict[str, np.ndarray],
+                 max_depth: int = MAX_DEPTH):
         self.nodes = nodes
         self.max_depth = max_depth
-        if total_points is None and 0 in nodes:
-            total_points = nodes[0].n_left + nodes[0].n_right
-        self.total_points = total_points or 0
-        # node → exact data bbox (xmin, xmax, ymin, ymax); populated by the
-        # build from the per-level stats shuffle it already runs (zero extra
-        # jobs). Powers driver-side kNN radius bounds; empty on trees
-        # reloaded without bounds (callers degrade to full-range plans).
-        self.node_bounds: dict[int, tuple] = {}
+        # one row per non-empty leaf (see leaf_table); it describes exactly
+        # the index's points, so every cover is a filter over it
+        self.leaves = leaves
+        self.total_points = int(leaves["count"].sum())
 
     # ------------------------------------------------------------------ IO
     @classmethod
-    def from_rows(cls, rows, max_depth: int = MAX_DEPTH) -> "SplitTree":
+    def from_rows(cls, rows, leaf_rows, max_depth: int = MAX_DEPTH) -> "SplitTree":
         nodes = {
             int(r["node_id"]): TreeNode(
                 node_id=int(r["node_id"]),
@@ -89,13 +184,30 @@ class SplitTree:
             )
             for r in rows
         }
-        return cls(nodes, max_depth=max_depth)
+        return cls(nodes, leaf_table(leaf_rows, max_depth), max_depth=max_depth)
 
     @classmethod
-    def from_df(cls, splits_df, max_depth: int = MAX_DEPTH) -> "SplitTree":
+    def from_frames(cls, splits, points, leaves=None,
+                    max_depth: int = MAX_DEPTH) -> "SplitTree":
+        """A saved tree from its splits table and its leaf table. An index
+        saved without a leaf table gets it derived, exactly, by one
+        ``groupBy("node")`` over its points."""
+        if leaves is None:
+            leaves = leaf_stats(points)
+        cols = ("node", "count", "xmin", "xmax", "ymin", "ymax")
         return cls.from_rows(
-            [r.asDict() for r in splits_df.collect()], max_depth=max_depth
+            [r.asDict() for r in splits.collect()],
+            [tuple(r) for r in leaves.select(*cols).collect()],
+            max_depth=max_depth,
         )
+
+    def leaf_frame(self, spark):
+        """The leaf table as a DataFrame of :data:`LEAF_SCHEMA` — the one
+        form an index saves it in (read back by :meth:`from_frames`)."""
+        from linear_kdtree_spark.session import local_frame
+
+        cols = [self.leaves[c].tolist() for c in LEAF_COLUMNS]
+        return local_frame(spark, list(zip(*cols)), LEAF_SCHEMA)
 
     def to_rows(self) -> list[dict]:
         out = []
@@ -128,47 +240,12 @@ class SplitTree:
         right = np.array([pos.get(2 * n + 2, -1) for n in ids], dtype=np.int64)
         return {"ids": ids, "axis": axis, "value": value, "left": left, "right": right}
 
-    def to_query_arrays(self) -> dict:
-        """:meth:`to_arrays` plus per-node subtree counts and data bboxes —
-        everything the fully-distributed batch-kNN planner needs inside an
-        executor (operators/knn.py knn_batch): the whole tree broadcasts as
-        a handful of flat numpy arrays, the distributed analogue of the
-        reference's device-side flat node array (lkt.cu:55-59)."""
-        arrs = self.to_arrays()
-        ids = arrs["ids"]
-        arrs["n_left"] = np.array(
-            [self.nodes[n].n_left for n in ids], dtype=np.int64
-        )
-        arrs["n_right"] = np.array(
-            [self.nodes[n].n_right for n in ids], dtype=np.int64
-        )
-        bbox = np.full((max(len(ids), 1), 4), np.nan, dtype=np.float64)
-        valid = np.zeros(max(len(ids), 1), dtype=bool)
-        for i, n in enumerate(ids):
-            b = self.node_bounds.get(int(n))
-            if b is not None:
-                bbox[i] = b
-                valid[i] = True
-        arrs["bbox"] = bbox[: len(ids)]
-        arrs["bbox_valid"] = valid[: len(ids)]
-        arrs["max_depth"] = self.max_depth
-        arrs["total_points"] = self.total_points
-        return arrs
+    def to_query_arrays(self) -> dict[str, np.ndarray]:
+        """The leaf table's arrays — all the batch-kNN planner needs inside
+        an executor (operators/knn.py knn_batch)."""
+        return self.leaves
 
     # ----------------------------------------------------------- structure
-    def count(self, node_id: int) -> int:
-        """Point count of a node's subtree (split node or leaf child)."""
-        if node_id in self.nodes:
-            s = self.nodes[node_id]
-            return s.n_left + s.n_right
-        if node_id == 0:
-            return self.total_points
-        parent = (node_id - 1) // 2
-        if parent in self.nodes:
-            p = self.nodes[parent]
-            return p.n_left if node_id == 2 * parent + 1 else p.n_right
-        return 0
-
     def leaf_for(self, x: float, y: float) -> int:
         """Heap id of the leaf region containing (x, y) — the query-side
         replay of the build's descent (reference lkt.cpp:146-152)."""
@@ -179,79 +256,62 @@ class SplitTree:
             j = 2 * j + 1 if v < s.value else 2 * j + 2
         return j
 
+    def data_bbox(self, node_id: int) -> tuple[float, float, float, float] | None:
+        """Exact (xmin, xmax, ymin, ymax) of the points under ``node_id``:
+        the union of the leaf rows inside its interval. None when it holds
+        no points."""
+        lo, hi = node_interval(node_id, self.max_depth)
+        L = self.leaves
+        i = int(np.searchsorted(L["lo"], lo))
+        j = int(np.searchsorted(L["hi"], hi, side="right"))
+        if j <= i:
+            return None
+        return (
+            float(L["xmin"][i:j].min()), float(L["xmax"][i:j].max()),
+            float(L["ymin"][i:j].min()), float(L["ymax"][i:j].max()),
+        )
+
     # ------------------------------------------------------------ planning
     def ranges_for_bbox(
         self, xmin: float, ymin: float, xmax: float, ymax: float
     ) -> list[tuple[int, int]]:
-        """Merged, sorted half-open ``sort_key`` intervals covering every
-        region intersecting the closed query bbox. This replaces a custom
-        Catalyst rule: the ranges become plain predicates Catalyst pushes to
-        the scan (SURVEY.md §4.2)."""
-        out: list[tuple[int, int]] = []
-        stack = [0]
-        while stack:
-            n = stack.pop()
-            if n not in self.nodes:
-                out.append(node_interval(n, self.max_depth))
-                continue
-            s = self.nodes[n]
-            lo, hi = (xmin, xmax) if s.axis == 0 else (ymin, ymax)
-            # left subtree holds values < split, right holds >= split
-            if lo < s.value:
-                stack.append(2 * n + 1)
-            if hi >= s.value:
-                stack.append(2 * n + 2)
-        return merge_intervals(out)
+        """Merged, sorted half-open ``sort_key`` intervals of the leaves
+        whose data bbox meets the closed query bbox: every point inside the
+        query bbox lies in one of them. This replaces a custom Catalyst
+        rule: the ranges become plain predicates Catalyst pushes to the scan
+        (SURVEY.md §4.2)."""
+        L = self.leaves
+        sel = (
+            (L["xmin"] <= xmax) & (L["xmax"] >= xmin)
+            & (L["ymin"] <= ymax) & (L["ymax"] >= ymin)
+        )
+        _, lo, hi = _leaf_runs(sel[None, :], L)
+        return list(zip(lo.tolist(), hi.tolist()))
 
     def ranges_for_circle(
         self, cx: float, cy: float, r: float
     ) -> list[tuple[int, int]]:
-        return self.ranges_for_bbox(cx - r, cy - r, cx + r, cy + r)
+        """:meth:`ranges_for_bbox` for the leaves within distance r of
+        (cx, cy) — the kNN planner's cover (:func:`circle_cover`)."""
+        _, lo, hi = circle_cover(
+            np.array([cx]), np.array([cy]), np.array([r * r]), self.leaves
+        )
+        return list(zip(lo.tolist(), hi.tolist()))
 
     def knn_seed_node(self, x: float, y: float, k: int) -> int:
-        """Smallest ancestor of (x, y)'s leaf whose subtree holds ≥ k points
-        — the kNN seed node (scalar reference for operators/knn.py's
-        vectorized ``_seed_r2_bound``)."""
-        n = self.leaf_for(x, y)
-        while n > 0 and self.count(n) < k:
-            n = (n - 1) // 2
-        return n
-
-    def data_bbox(self, node_id: int) -> tuple[float, float, float, float] | None:
-        """Exact (xmin, xmax, ymin, ymax) of the points under ``node_id``,
-        from the build's per-level stats — or the nearest recorded ancestor's
-        (a superset, still a valid bound). None when the tree carries no
-        bounds (e.g. reloaded from a bare splits table)."""
-        n = node_id
-        while True:
-            if n in self.node_bounds:
-                return self.node_bounds[n]
-            if n == 0:
-                return None
-            n = (n - 1) // 2
+        """Heap id of the leaf whose far corner bounds the k-th-neighbour
+        distance of (x, y) (:func:`knn_seed`); 0 on an empty tree."""
+        if not len(self.leaves["node"]):
+            return 0
+        pos, _ = knn_seed(np.array([x]), np.array([y]), self.leaves, k)
+        return int(self.leaves["node"][pos[0]])
 
     def knn_r2_bound(self, x: float, y: float, node_id: int) -> float:
-        """Upper bound on the k-th-NN distance² for a query at (x, y) whose
-        seed node (≥ k points) is ``node_id``: the far corner of the seed's
-        data bbox — every one of those ≥ k points lies inside it, so the
-        k-th nearest overall is no farther."""
+        """Distance² from (x, y) to the far corner of ``node_id``'s data
+        bbox; with :meth:`knn_seed_node`'s leaf it is the planner's k-th
+        distance² bound."""
         bb = self.data_bbox(node_id)
         if bb is None:
             return INF
-        xmin, xmax, ymin, ymax = bb
-        dx = max(abs(x - xmin), abs(x - xmax))
-        dy = max(abs(y - ymin), abs(y - ymax))
-        return dx * dx + dy * dy
-
-
-def merge_intervals(intervals: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    if not intervals:
-        return []
-    intervals = sorted(intervals)
-    merged = [list(intervals[0])]
-    for lo, hi in intervals[1:]:
-        if lo <= merged[-1][1]:
-            merged[-1][1] = max(merged[-1][1], hi)
-        else:
-            merged.append([lo, hi])
-    return [(lo, hi) for lo, hi in merged]
+        box = {c: np.array([v]) for c, v in zip(("xmin", "xmax", "ymin", "ymax"), bb)}
+        return float(_far2(np.array([x]), np.array([y]), box)[0, 0])

@@ -195,7 +195,10 @@ def build_local_fast(
 
     Extra: ``result.kd_perm`` — indices in physical kd order (left
     subtree first = depth-first layout, ties by original position), free
-    from the partition layout; equals ``result.kd_order()``.
+    from the partition layout; equals ``result.kd_order()``. And
+    ``result.leaves`` — one row per leaf in kd order, as arrays ``node``,
+    ``path_len``, ``count``, ``xmin``, ``xmax``, ``ymin``, ``ymax`` (local
+    heap ids; the fused build maps them into the global numbering).
     """
     n = len(x)
     xs = np.array(x, dtype=coord_dtype)  # working copies, partition order
@@ -209,7 +212,6 @@ def build_local_fast(
     code_p = np.zeros(n, dtype=np.int64)
     sk_p = np.zeros(n, dtype=np.int64)
     splits: dict[int, OracleSplit] = {}
-    split_bounds: dict[int, tuple] = {}
 
     # Level-synchronous VECTORIZED traversal: per level, one gathered
     # O(active-rows) pass computes the stable partition of EVERY splitting
@@ -323,34 +325,19 @@ def build_local_fast(
         if 2 * nid + 2 in splits:
             sp.right_child = 2 * nid + 2
 
-    # exact data bbox per split subtree — flows into SplitTree.node_bounds
-    # so the kNN radius bound stays leaf-granular on the fused-build path.
-    # Computed ONCE from the final partition order (each node's rows are a
-    # contiguous slice): leaf bboxes via 4 reduceat passes over n, then a
-    # bottom-up union (descending ids ⇒ children before parents) — O(n +
-    # #nodes) total, vs the per-level min/max this replaces (O(n·depth),
-    # measured ~20 % of the clean fused build at 4.8 M, VERDICT r4 #3).
-    # Bit-identical: min/max over the same value multiset, any order.
-    if n and splits:
-        seg_start = np.flatnonzero(np.r_[True, node_p[1:] != node_p[:-1]])
-        leaf_ids = node_p[seg_start]
-        xmn = np.minimum.reduceat(xs, seg_start)
-        xmx = np.maximum.reduceat(xs, seg_start)
-        ymn = np.minimum.reduceat(ys, seg_start)
-        ymx = np.maximum.reduceat(ys, seg_start)
-        bb: dict[int, tuple] = {
-            int(l): (float(xmn[i]), float(xmx[i]), float(ymn[i]), float(ymx[i]))
-            for i, l in enumerate(leaf_ids)
-        }
-        for nid in sorted(splits, reverse=True):
-            lb = bb[2 * nid + 1]
-            rb = bb[2 * nid + 2]
-            u = (
-                min(lb[0], rb[0]), max(lb[1], rb[1]),
-                min(lb[2], rb[2]), max(lb[3], rb[3]),
-            )
-            bb[nid] = u
-            split_bounds[nid] = u
+    # the leaf table's rows for this subtree, in kd order: each leaf's
+    # points are one contiguous slice of the final partition order, so four
+    # reduceat passes give every leaf's exact data bbox (min/max over the
+    # same value multiset as a groupBy, so bit-identical to one)
+    start = np.flatnonzero(np.diff(node_p, prepend=-1))
+    leaves = {
+        "node": node_p[start],
+        "path_len": plen_p[start],
+        "count": np.diff(np.append(start, n)),
+    }
+    for name, f, v in (("xmin", np.minimum, xs), ("xmax", np.maximum, xs),
+                       ("ymin", np.minimum, ys), ("ymax", np.maximum, ys)):
+        leaves[name] = f.reduceat(v, start)
 
     # scatter back to original point order (build_oracle's contract); the
     # partition order itself is exactly kd order (left subtree first,
@@ -369,7 +356,7 @@ def build_local_fast(
         max_depth=max_depth,
     )
     res.kd_perm = orig
-    res.split_bounds = split_bounds
+    res.leaves = leaves
     return res
 
 

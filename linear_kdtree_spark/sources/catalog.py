@@ -2,9 +2,10 @@
 parquet + JSON-manifest emulation with the same API shape
 (SURVEY.md §7 "Iceberg availability in sandbox").
 
-The engine persists three tables per index (SURVEY.md §1.2): ``lkt_points``
+The engine persists four tables per index (SURVEY.md §1.2): ``lkt_points``
 (kd-ordered, code + sort_key columns), ``lkt_splits`` (heap-ordered flat
-tree) and ``lkt_build_log`` (per-level lineage). On a real cluster the
+tree), ``lkt_leaves`` (the leaf table every query cover is planned from,
+``SplitTree.leaf_frame``) and ``lkt_build_log`` (per-level lineage). On a real cluster the
 Iceberg path adds snapshot isolation, min-max file pruning on ``sort_key``
 (which the query planner's interval predicates exploit directly) and
 time-travel over build checkpoints; the fallback keeps snapshot ids +
@@ -138,21 +139,10 @@ class TableCatalog:
 
 def save_index(catalog: TableCatalog, index, prefix: str = "lkt") -> None:
     from linear_kdtree_spark.plans.lineage import partition_metrics
-    from linear_kdtree_spark.session import local_frame
 
     catalog.write(f"{prefix}_points", index.points)
     catalog.write(f"{prefix}_splits", index.splits)
-    if index.tree.node_bounds:
-        # per-node data bboxes — the kNN planner's radius bounds survive a
-        # catalog round-trip instead of degrading to full-range plans
-        catalog.write(
-            f"{prefix}_bounds",
-            local_frame(
-                catalog.spark,
-                [(n, *b) for n, b in index.tree.node_bounds.items()],
-                "node long, xmin double, xmax double, ymin double, ymax double",
-            ),
-        )
+    catalog.write(f"{prefix}_leaves", index.tree.leaf_frame(catalog.spark))
     if index.lineage:
         catalog.write(
             f"{prefix}_build_log",

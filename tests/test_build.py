@@ -225,41 +225,95 @@ def test_build_leaf_size_bounds_tree(spark, random_points):
     assert idx.splits.count() <= 2 * len(keys) // 200
 
 
-def test_fused_build_records_leaf_granular_bounds(spark):
-    """The fused local finish must ship per-split bboxes into
-    tree.node_bounds — without them the kNN radius bound degrades to the
-    handoff-threshold region size (r4 regression: 53M candidates for 40
-    queries). Bounds must extend well past the distributed levels and
-    be exact data bboxes."""
-    import numpy as np
+def _leaf_case(spark, case, tmp_path):
+    """(points DataFrame, build kwargs) for one leaf-table fixture; the
+    resumed case builds an interrupted run first."""
+    import os
+
     import pandas as pd
 
-    from linear_kdtree_spark.operators.build import lkt_build
-    from linear_kdtree_spark.operators.tree import node_depth
-
     rng = np.random.default_rng(31)
-    n = 20_000
-    df = spark.createDataFrame(pd.DataFrame({
-        "key": np.arange(n),
-        "x": rng.normal(50, 10, n).astype(np.float64),
-        "y": rng.normal(50, 10, n).astype(np.float64),
-    }))
-    idx = lkt_build(df, max_depth=16, strategy="mean", leaf_size=64,
-                    local_threshold=5_000)
-    depths = [node_depth(nid) for nid in idx.tree.node_bounds]
-    # distributed phase stops at ~log2(n/threshold) = 2 levels; local
-    # splits must contribute bounds at leaf depth (64-point leaves at
-    # depth ~8)
-    assert max(depths) >= 6, sorted(set(depths))
-    # spot-check exactness: a recorded deep node's bbox contains exactly
-    # its subtree's points
-    pts = idx.points.toPandas()
-    deep = max(idx.tree.node_bounds, key=node_depth)
-    from linear_kdtree_spark.operators.tree import node_interval
+    if case == "all_duplicates":
+        x = np.full(16, 5.0, dtype=np.float32)
+        return _points_df(spark, np.arange(16), x, x.copy()), {}
+    if case == "degenerate_stripe":
+        # the duplicate and constant-x stripe of test_build_invariants
+        n = 1500
+        x = rng.uniform(-180, 180, n).astype(np.float32)
+        y = rng.uniform(-85, 85, n).astype(np.float32)
+        x[:50] = x[0]
+        y[:10] = y[0]
+        df = _points_df(spark, np.arange(n), x, y)
+        return df, dict(max_depth=8, local_threshold=500)
+    # clustered points plus a 2,500-point duplicate cluster: above the
+    # fused case's local_threshold, so the distributed phase decides it is
+    # a leaf (degenerate split) and the fused pass routes it through
+    n = 12_000
+    xy = rng.normal(50, 10, (n, 2))
+    xy[:2500] = (120.0, 120.0)
+    df = spark.createDataFrame(
+        pd.DataFrame({"key": np.arange(n), "x": xy[:, 0], "y": xy[:, 1]})
+    )
+    kw = dict(max_depth=12, leaf_size=32)
+    if case == "fused":
+        return df, dict(kw, local_threshold=2_000)
+    if case == "level_sync_median":
+        return df, dict(kw, local_threshold=0, strategy="median")
+    # resumed: an interrupted run stops after depth 3, then resumes to a
+    # depth where the loop ends at max_depth (children counted after it)
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(ckpt)
+    lkt_build(df, max_depth=4, checkpoint_dir=ckpt, checkpoint_every=2)
+    return df, dict(max_depth=7, checkpoint_dir=ckpt, checkpoint_every=2)
 
-    lo, hi = node_interval(deep, idx.tree.max_depth)
-    sub = pts[(pts.sort_key >= lo) & (pts.sort_key < hi)]
-    xmin, xmax, ymin, ymax = idx.tree.node_bounds[deep]
-    assert len(sub) > 0
-    assert np.isclose(sub.x.min(), xmin) and np.isclose(sub.x.max(), xmax)
-    assert np.isclose(sub.y.min(), ymin) and np.isclose(sub.y.max(), ymax)
+
+@pytest.mark.parametrize(
+    "case",
+    ["fused", "level_sync_median", "resumed", "all_duplicates",
+     "degenerate_stripe"],
+)
+def test_leaf_table_equals_group_by(spark, tmp_path, case):
+    """On every build path the leaf table is exactly a groupBy("node")
+    over the built points: one row per non-empty leaf with its count and
+    data bbox, and each row's [lo, hi) holds its points' sort_keys."""
+    df, kw = _leaf_case(spark, case, tmp_path)
+    idx = lkt_build(df, strategy=kw.pop("strategy", "mean"), **kw)
+    want = sorted(
+        tuple(r)
+        for r in idx.points.groupBy("node").agg(
+            F.count(F.lit(1)), F.min("x"), F.max("x"), F.min("y"),
+            F.max("y"), F.min("sort_key"), F.max("sort_key"),
+        ).collect()
+    )
+    L = idx.tree.leaves
+    got = sorted(zip(*(L[c].tolist() for c in (
+        "node", "count", "xmin", "xmax", "ymin", "ymax"))))
+    assert got == [w[:6] for w in want]
+    assert idx.tree.total_points == df.count()
+    # sorted by lo, tiling the key space, each interval holding its points
+    assert (L["lo"][1:] == L["hi"][:-1]).all()
+    assert L["lo"][0] == 0 and L["hi"][-1] == 1 << idx.max_depth
+    span = {w[0]: w[6:] for w in want}
+    for node, lo, hi in zip(L["node"], L["lo"], L["hi"]):
+        assert lo <= span[node][0] and span[node][1] < hi
+
+
+def test_build_local_fast_leaf_rows():
+    """The fused kernel's leaf rows, including a subtree that never
+    splits (all points equal: one leaf, the subtree root)."""
+    from linear_kdtree_spark.oracle import build_local_fast
+
+    rng = np.random.default_rng(4)
+    x = rng.uniform(0, 10, 500).astype(np.float32)
+    y = rng.uniform(0, 10, 500).astype(np.float32)
+    for xs, ys in ((x, y), (np.full(40, 3.0, np.float32),) * 2):
+        res = build_local_fast(xs, ys, max_depth=10, min_split=9)
+        lv = res.leaves
+        assert lv["count"].sum() == len(xs)
+        for i, node in enumerate(lv["node"]):
+            sel = res.node == node
+            assert lv["count"][i] == sel.sum()
+            assert lv["path_len"][i] == res.path_len[sel][0]
+            assert (lv["xmin"][i], lv["xmax"][i]) == (xs[sel].min(), xs[sel].max())
+            assert (lv["ymin"][i], lv["ymax"][i]) == (ys[sel].min(), ys[sel].max())
+    assert list(lv["node"]) == [0] and not res.splits

@@ -77,7 +77,11 @@ def test_write_modes_error_and_ignore(spark, tmp_path):
         cat.write("t", df5, mode="bogus")
 
 
-def test_save_index_bounds_roundtrip(spark, tmp_path):
+def test_save_index_leaf_table_roundtrip(spark, tmp_path):
+    """save_index writes the leaf table; reading the saved tables back
+    gives the identical tree leaves."""
+    from linear_kdtree_spark.operators.tree import SplitTree
+
     rng = np.random.default_rng(2)
     pts = spark.createDataFrame(
         pd.DataFrame(
@@ -89,14 +93,16 @@ def test_save_index_bounds_roundtrip(spark, tmp_path):
         )
     )
     idx = lkt_build(pts, max_depth=6, strategy="mean", local_threshold=0)
-    assert idx.tree.node_bounds  # distributed levels record bboxes
     cat = TableCatalog(spark, str(tmp_path / "cat3"))
     save_index(cat, idx, prefix="b")
-    got = {
-        int(r["node"]): (r["xmin"], r["xmax"], r["ymin"], r["ymax"])
-        for r in cat.read("b_bounds").collect()
-    }
-    assert got == idx.tree.node_bounds
+    tree = SplitTree.from_frames(
+        cat.read("b_splits"), cat.read("b_points"), cat.read("b_leaves"),
+        max_depth=idx.max_depth,
+    )
+    assert len(tree.leaves["node"]) > 1
+    for c, want in idx.tree.leaves.items():
+        assert np.array_equal(tree.leaves[c], want), c
+    assert tree.nodes == idx.tree.nodes
 
 
 def test_iceberg_probe_documented(spark):

@@ -7,7 +7,7 @@ exactly — the strongest cheap correctness evidence after the DuckDB gates.
 - convex half-plane refine ≡ general ray-cast refine on convex polygons;
 - distributed batch kNN ≡ numpy brute force (more configs than the
   targeted test in test_queries);
-- the vectorized kNN planner ≡ the scalar SplitTree seed/bound/cover.
+- the leaf-table kNN planner's bound and cover ⊇ brute force.
 """
 
 from __future__ import annotations
@@ -135,36 +135,50 @@ def test_knn_batch_brute_force_configs(spark):
         assert got == want, (k, leaf)
 
 
-def test_knn_planner_matches_scalar_tree(spark):
-    """knn_batch's vectorized planner ≡ the scalar SplitTree traversals it
-    twins: ``_seed_r2_bound`` equals ``knn_r2_bound(knn_seed_node(...))``
-    bit for bit, and each query's ``_cover_intervals``, merged, equals
-    ``ranges_for_circle`` at that radius — for queries inside and outside
-    the data, several k and leaf sizes."""
-    import math
+def test_knn_planner_bound_and_cover_brute_force(spark):
+    """The leaf-table kNN planner against brute force: for every query,
+    r² is ≥ the exact k-th distance², and every point within that
+    distance (each true neighbour, ties included) lies in the query's
+    cover — on random, clustered and duplicate-coordinate data, queries
+    inside and outside the data bbox, k larger than a leaf and k equal to
+    the total. The scalar SplitTree methods give the same bound."""
+    from linear_kdtree_spark.operators.tree import circle_cover, knn_seed
 
-    from linear_kdtree_spark.operators.knn import _cover_intervals, _seed_r2_bound
-    from linear_kdtree_spark.operators.tree import merge_intervals
-
-    pts = _pts(spark, 20000, seed=21)
     rng = np.random.default_rng(5)
     q = np.vstack([
-        rng.uniform(0, 100, (200, 2)),
-        rng.uniform(-60, -10, (50, 2)),  # outside the data bbox
-        rng.uniform(110, 160, (50, 2)),
+        rng.uniform(0, 100, (100, 2)),
+        rng.uniform(-60, -10, (20, 2)),  # outside the data bbox
+        rng.uniform(110, 160, (20, 2)),
     ])
     qx, qy = q[:, 0].copy(), q[:, 1].copy()
-    for leaf in (4, 64):
-        tree = lkt_build(pts, max_depth=16, leaf_size=leaf,
-                         coord_type="double").tree
-        A = tree.to_query_arrays()
-        for k in (1, 7, 50):
-            r2 = _seed_r2_bound(qx, qy, A, k)
-            assert np.isfinite(r2).all()
-            qi, lo, hi = _cover_intervals(qx, qy, r2, A)
-            for i, (x, y) in enumerate(zip(qx.tolist(), qy.tolist())):
-                want = tree.knn_r2_bound(x, y, tree.knn_seed_node(x, y, k))
-                assert r2[i] == want, (leaf, k, i)
-                sel = qi == i
-                got = merge_intervals(list(zip(lo[sel].tolist(), hi[sel].tolist())))
-                assert got == tree.ranges_for_circle(x, y, math.sqrt(want)), (leaf, k, i)
+    dup = rng.uniform(0, 100, (40, 2))[rng.integers(0, 40, 3000)]
+    datasets = {
+        "random": _pts(spark, 3000, seed=21, clustered=False),
+        "clustered": _pts(spark, 3000, seed=22),
+        "duplicates": spark.createDataFrame(pd.DataFrame(
+            {"key": np.arange(3000), "x": dup[:, 0], "y": dup[:, 1]})),
+    }
+    for name, pts in datasets.items():
+        for leaf in (4, 64):
+            idx = lkt_build(pts, max_depth=16, leaf_size=leaf)
+            p = idx.points.select("x", "y", "sort_key").toPandas()
+            px, py = p.x.to_numpy(np.float64), p.y.to_numpy(np.float64)
+            sk = p.sort_key.to_numpy()
+            L = idx.tree.leaves
+            total = idx.tree.total_points
+            for k in (1, 7, 100, total):  # 100 > any leaf at leaf_size 64
+                _, r2 = knn_seed(qx, qy, L, k)
+                qi, lo, hi = circle_cover(qx, qy, r2, L)
+                for i in range(len(qx)):
+                    d2 = (px - qx[i]) ** 2 + (py - qy[i]) ** 2
+                    kth = np.partition(d2, k - 1)[k - 1]
+                    assert r2[i] >= kth, (name, leaf, k, i)
+                    sel = qi == i
+                    near = sk[d2 <= kth]
+                    at = np.searchsorted(lo[sel], near, side="right") - 1
+                    assert (at >= 0).all() and (near < hi[sel][at]).all(), (
+                        name, leaf, k, i)
+                for i in range(0, len(qx), 35):
+                    x, y = float(qx[i]), float(qy[i])
+                    seed = idx.tree.knn_seed_node(x, y, k)
+                    assert idx.tree.knn_r2_bound(x, y, seed) == r2[i]

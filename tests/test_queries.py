@@ -291,37 +291,29 @@ def test_deinterleave_exact_above_2_53(spark):
     assert (row["ix"], row["iy"]) == (ix_ref, iy_ref)
 
 
-def test_knn_batch_degrades_without_node_bounds(spark, index, dataset):
-    """A tree reloaded without node_bounds gives every query an infinite
-    seed radius; the batch cover must then emit ONE full-range interval
-    per query, not one interval per leaf — and the results must still
-    equal the bounded path's."""
-    from linear_kdtree_spark.operators.build import LktIndex
-    from linear_kdtree_spark.operators.knn import _cover_intervals, knn_batch
-    from linear_kdtree_spark.operators.tree import SplitTree
+def test_knn_batch_derives_missing_leaf_table(spark, index, tmp_path):
+    """An index saved without a leaf table (the format before it existed)
+    is reloaded with the table derived from its points: identical to the
+    build's, and kNN gives identical rows."""
+    import json
 
-    bare_tree = SplitTree(index.tree.nodes, index.tree.max_depth,
-                          index.tree.total_points)
-    assert not bare_tree.node_bounds
-    bare = LktIndex(points=index.points, splits=index.splits, tree=bare_tree,
-                    max_depth=index.max_depth, coord_type=index.coord_type)
+    from linear_kdtree_spark.cli import _load_index
+    from linear_kdtree_spark.operators.knn import knn_batch
 
-    # unit: infinite radius -> one full-range interval per query
-    A = bare_tree.to_query_arrays()
-    qx = np.array([10.0, 50.0, 90.0])
-    qy = np.array([10.0, 50.0, 90.0])
-    q, lo, hi = _cover_intervals(qx, qy, np.full(3, np.inf), A)
-    assert len(q) == 3 and set(q) == {0, 1, 2}
-    assert (lo == 0).all() and (hi == (1 << A["max_depth"])).all()
+    path = str(tmp_path / "old_index")
+    index.points.write.parquet(f"{path}/points")
+    index.splits.write.parquet(f"{path}/splits")
+    with open(f"{path}/lineage.json", "w") as f:
+        json.dump({"max_depth": index.max_depth, "levels": []}, f)
+    reloaded = _load_index(spark, path)
+    for c, want in index.tree.leaves.items():
+        assert np.array_equal(reloaded.tree.leaves[c], want), c
 
-    # end-to-end: boundless batch == bounded batch
     queries = [(i, float(v), float(v * 0.7)) for i, v in
-               enumerate(range(0, 100, 9))]
+               enumerate(range(-20, 130, 9))]
     qdf = spark.createDataFrame(queries, "query_id long, qx double, qy double")
-    got = sorted((r["query_id"], r["rank"], r["key"])
-                 for r in knn_batch(bare, qdf, 5).collect())
-    want = sorted((r["query_id"], r["rank"], r["key"])
-                  for r in knn_batch(index, qdf, 5).collect())
+    got = sorted(tuple(r) for r in knn_batch(reloaded, qdf, 5).collect())
+    want = sorted(tuple(r) for r in knn_batch(index, qdf, 5).collect())
     assert got == want
 
 

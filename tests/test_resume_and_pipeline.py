@@ -137,7 +137,7 @@ def test_cli_roundtrip(spark, tmp_path):
                             "--depth", "6"]) == 0
     assert "tile" in spark.read.parquet(out_tile).columns
 
-    # kNN through a RELOADED index (bounds parquet round-trip) must equal
+    # kNN through a RELOADED index (leaf table round-trip) must equal
     # the numpy brute force over the extracted points
     from linear_kdtree_spark.oracle import brute_knn
 

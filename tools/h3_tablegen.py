@@ -84,11 +84,6 @@ def pos_angle(a: float) -> float:
     return a
 
 
-def ang_diff(a: float, b: float) -> float:
-    d = abs(pos_angle(a) - pos_angle(b))
-    return min(d, M_2PI - d)
-
-
 def normalize_ijk(i: int, j: int, k: int) -> tuple[int, int, int]:
     if i < 0:
         j -= i
@@ -153,15 +148,6 @@ def chord(a, b) -> float:
     ax = geo_to_xyz(*a)
     bx = geo_to_xyz(*b)
     return math.sqrt(sum((p - q) ** 2 for p, q in zip(ax, bx)))
-
-
-def geo_azimuth(p1, p2) -> float:
-    """bosch.c::_geoAzimuthRads — azimuth p1 -> p2."""
-    return math.atan2(
-        math.cos(p2[0]) * math.sin(p2[1] - p1[1]),
-        math.cos(p1[0]) * math.sin(p2[0])
-        - math.sin(p1[0]) * math.cos(p2[0]) * math.cos(p2[1] - p1[1]),
-    )
 
 
 def derive_table(verbose: bool = False):
