@@ -7,17 +7,13 @@ Prints ONE JSON line:
    "queries": {...per-stage sec...}, "sf": ..., "points": N,
    "build_knn_pip_points_per_sec": ...}
 
-Scaling protocol (BASELINE.md): `python bench.py --scaling` runs the same
-suite in two fresh JVMs at local[8] and local[32] and reports throughput at
-both plus efficiency = (T8/T32)/4 — the sandbox proxy for the north_rule's
-N → 4N executor scaling target (≥ 0.8).
+`--cpus N` runs it at local[N]; `SPARK_GRAFT_MASTER` overrides the master.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -43,8 +39,6 @@ def run_suite(sf_dir: str, cpus: int, reps: int | None = None) -> dict:
     from linear_kdtree_spark.operators.dedup import lsh_candidate_pairs
     from linear_kdtree_spark.operators.similarity import brute_topk_cosine
 
-    # SPARK_GRAFT_MASTER overrides the thread-local master — the cluster
-    # scaling mode sets local-cluster[n,c,m] (real separate executor JVMs)
     master = os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     spark = get_spark(
         app_name="lkt_bench",
@@ -192,87 +186,6 @@ def main(argv=None) -> int:
     argv = argv if argv is not None else sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-
-    if "--scaling-cluster" in argv:
-        # REAL multi-executor scaling: local-cluster[n,c,m] spawns n
-        # SEPARATE executor JVMs (own heap, netty shuffle service, own
-        # Arrow python workers; the package ships as a zip via addPyFile,
-        # the spark-submit --py-files path) — the sandbox's closest
-        # realization of the north rule's "N and 4N executors". Default
-        # pair: 1 executor vs 4 executors, 2 cores each.
-        exec_mb = int(os.environ.get("SPARK_GRAFT_EXEC_MB", "8192"))
-        cores = int(os.environ.get("SPARK_GRAFT_EXEC_CORES", "2"))
-        base_n = int(os.environ.get("SPARK_GRAFT_SCALING_BASE_EXECUTORS", "1"))
-        pair = (base_n, base_n * 4)
-        results = {}
-        for n_exec in pair:
-            env = dict(
-                os.environ,
-                SPARK_GRAFT_MASTER=f"local-cluster[{n_exec},{cores},{exec_mb}]",
-                SPARK_GRAFT_CPUS=str(n_exec * cores),
-            )
-            env.setdefault("SPARK_GRAFT_BENCH_REPS", "3")
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=env, capture_output=True, text=True, check=True,
-            )
-            results[n_exec] = json.loads(out.stdout.strip().splitlines()[-1])
-        t_lo = results[pair[0]]["build_knn_pip_points_per_sec"]
-        t_hi = results[pair[1]]["build_knn_pip_points_per_sec"]
-        print(json.dumps({
-            "mode": "cluster",
-            "executors_pair": list(pair),
-            "cores_per_executor": cores,
-            "executor_mb": exec_mb,
-            f"throughput_{pair[0]}exec_pps": t_lo,
-            f"throughput_{pair[1]}exec_pps": t_hi,
-            "scaling_efficiency": round((t_hi / t_lo) / 4, 3),
-            "detail": results,
-        }))
-        return 0
-
-    if "--scaling" in argv or "--scaling-weak" in argv:
-        # strong scaling: identical input at local[8] vs local[32].
-        # weak scaling (--scaling-weak): input ∝ cores (amp 8 → 32), the
-        # second lens from BENCH/SCALING.md — per-core load held fixed, as
-        # when a 4× cluster ingests 4× data.
-        weak = "--scaling-weak" in argv
-        base_amp = int(os.environ.get("SPARK_GRAFT_BENCH_AMP", "8"))
-        # the N → 4N pair; default 8 → 32. SPARK_GRAFT_SCALING_BASE=2 or 4
-        # measures 2→8 / 4→16 — the north rule fixes the RATIO (4×), not N,
-        # and on a single shared-memory box the 8→32 pair is confounded by
-        # memory-bus saturation (BENCH/SCALING.md substrate control), so
-        # the smaller pairs are the honest sandbox proxy for adding
-        # EXECUTORS (which add memory channels along with cores).
-        base = int(os.environ.get("SPARK_GRAFT_SCALING_BASE", "8"))
-        pair = (base, base * 4)
-        results = {}
-        for c in pair:
-            env = dict(os.environ, SPARK_GRAFT_CPUS=str(c))
-            env.setdefault("SPARK_GRAFT_BENCH_REPS", "3")
-            if weak:
-                env["SPARK_GRAFT_BENCH_AMP"] = str(base_amp * c // base)
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=env, capture_output=True, text=True, check=True,
-            )
-            results[c] = json.loads(out.stdout.strip().splitlines()[-1])
-        t_lo = results[pair[0]]["build_knn_pip_points_per_sec"]
-        t_hi = results[pair[1]]["build_knn_pip_points_per_sec"]
-        # strong: ideal = 4× throughput on the same input. weak: ideal =
-        # 4× throughput on 4× input (equal wall-clock), same formula.
-        print(json.dumps({
-            "mode": "weak" if weak else "strong",
-            "pair": list(pair),
-            f"throughput_local{pair[0]}_pps": t_lo,
-            f"throughput_local{pair[1]}_pps": t_hi,
-            # legacy keys so older tooling keeps parsing the default pair
-            "throughput_local8_pps": t_lo,
-            "throughput_local32_pps": t_hi,
-            "scaling_efficiency": round((t_hi / t_lo) / 4, 3),
-            "detail": results,
-        }))
-        return 0
 
     if "--cpus" in argv:
         cpus = int(argv[argv.index("--cpus") + 1])

@@ -22,6 +22,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from linear_kdtree_spark.session import memo
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -122,7 +124,9 @@ def q_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return points_df(spark, sf_dir)
 
 
-_LEVELSYNC_CACHE: dict = {}
+# the gate builds, made once per session (session.memo) and shared by
+# every gate that reads the same build
+_GATE_INDEXES: dict = {}
 
 
 def _levelsync_build(spark, sf_dir, strategy="mean", coord_type="double",
@@ -132,22 +136,17 @@ def _levelsync_build(spark, sf_dir, strategy="mean", coord_type="double",
     share one build; the f32/median variants get their own entries."""
     from linear_kdtree_spark.operators.build import lkt_build
 
-    # applicationId, not id(spark): CPython reuses freed addresses, so a
-    # new session could alias a dead session's cached index (same hazard
-    # build.py fixed for its token cache — ADVICE r3)
-    key = (spark.sparkContext.applicationId, sf_dir, strategy, coord_type,
-           max_depth)
-    if key in _LEVELSYNC_CACHE:
-        return _LEVELSYNC_CACHE[key]
-    idx = lkt_build(
-        points_df(spark, sf_dir),
-        max_depth=max_depth,
-        strategy=strategy,
-        coord_type=coord_type,
-        local_threshold=0,
+    return memo(
+        spark, _GATE_INDEXES,
+        ("levelsync", sf_dir, strategy, coord_type, max_depth),
+        lambda: lkt_build(
+            points_df(spark, sf_dir),
+            max_depth=max_depth,
+            strategy=strategy,
+            coord_type=coord_type,
+            local_threshold=0,
+        ),
     )
-    _LEVELSYNC_CACHE[key] = idx
-    return idx
 
 
 def q_lkt_build_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,28 +207,20 @@ def q_lkt_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.points.select("key", "code", "sort_key")
 
 
-_INDEX_CACHE: dict = {}
-
-
 def _gate_index(spark, sf_dir, leaf_size=16, max_depth=16):
-    """Build (once per sf_dir per session) the shared gate index."""
+    """The shared kNN/PIP gate index, built once per sf_dir per session."""
     from linear_kdtree_spark.operators.build import lkt_build
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir, leaf_size,
-                 max_depth)
-    if cache_key in _INDEX_CACHE:
-        return _INDEX_CACHE[cache_key]
-    idx = lkt_build(
-        points_df(spark, sf_dir),
-        max_depth=max_depth,
-        strategy="mean",
-        leaf_size=leaf_size,
-        coord_type="double",
+    return memo(
+        spark, _GATE_INDEXES, ("index", sf_dir, leaf_size, max_depth),
+        lambda: lkt_build(
+            points_df(spark, sf_dir),
+            max_depth=max_depth,
+            strategy="mean",
+            leaf_size=leaf_size,
+            coord_type="double",
+        ),
     )
-    idx.points = idx.points.persist()
-    idx.points.count()
-    _INDEX_CACHE[cache_key] = idx
-    return idx
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -54,8 +54,10 @@ from pyspark.sql import types as T
 
 from linear_kdtree_spark.functions.morton import with_derived_cols
 from linear_kdtree_spark.oracle import MAX_DEPTH
-from linear_kdtree_spark.operators.tree import LEAF_COLUMNS, SplitTree, leaf_stats
-from linear_kdtree_spark.session import local_frame, memo_put
+from linear_kdtree_spark.operators.tree import (
+    LEAF_COLUMNS, SplitTree, leaf_stats, node_depth,
+)
+from linear_kdtree_spark.session import local_frame, memo
 
 # levels with at most this many split nodes inline the node→split-value
 # table as a literal CASE chain instead of a broadcast join (see _lookup);
@@ -79,7 +81,11 @@ def _lookup(spark, df: DataFrame, pairs: list, name: str, dtype: str) -> DataFra
     row: CreateMap of literals is not constant-folded, and with mid-loop
     persists stretched out that compounded to a measured 6× build
     regression, r6 persist-every experiment.) Above it, a broadcast left
-    join against the pairs as a LocalRelation."""
+    join against the pairs as a LocalRelation.
+
+    The pairs are sorted by node first, so the plan does not depend on the
+    order a stats job returned them in."""
+    pairs = sorted(pairs)
     if len(pairs) <= SPLIT_MAP_MAX:
         expr = None
         for k, v in pairs:
@@ -230,7 +236,6 @@ def lkt_build(
     y_col: str = "y",
     coord_type: str = "float",
     local_threshold: int = 200_000,
-    materialize: bool = True,
 ) -> LktIndex:
     """Build the index over a points DataFrame.
 
@@ -260,13 +265,8 @@ def lkt_build(
     ``points`` must carry (key_col, x_col, y_col); other columns are dropped
     (join them back by ``key``). Returns an :class:`LktIndex` whose
     ``points`` are range-partitioned and sorted by ``sort_key`` — the
-    physical kd order of the reference's in-place array.
-
-    ``materialize=False`` defers persist()+count() of the output only on
-    the pure level-synchronous path; when the fused local finish triggers
-    (the default whenever nodes shrink under ``local_threshold``) the build
-    is ALWAYS materialized — the finish pass must run to deliver its split
-    rows through the accumulator, so laziness has nothing left to save.
+    physical kd order of the reference's in-place array, persisted and
+    counted.
     """
     spark = points.sparkSession
     if checkpoint_dir:
@@ -296,8 +296,7 @@ def lkt_build(
             F.lit(0).cast("long").alias("node"),
         )
 
-    pts = pts.persist()
-    last_cached = pts
+    pts = last_cached = pts.persist()
     min_split = max(2, leaf_size + 1)
     fused_out = None  # set by the fused local finish (final, materialized)
     # nodes withdrawn from the distributed phase the moment they fit a
@@ -398,15 +397,10 @@ def lkt_build(
 
         new_pts = _apply_level(spark, pts, axis, splittable)
         if checkpoint_dir and (depth + 1) % checkpoint_every == 0:
-            prev_cached = last_cached
             pts = _checkpoint_level(
                 spark, new_pts, checkpoint_dir, depth, split_rows, lineage,
                 node_stats,
             )
-            last_cached = pts
-            chain_base, chain = pts, []
-            if prev_cached is not None:
-                prev_cached.unpersist()
         elif (depth + 1) % PERSIST_EVERY == 0:
             # Caching policy, from measurement at 19.2 M points:
             # - localCheckpoint every level: ~7× slower than persist
@@ -416,15 +410,14 @@ def lkt_build(
             # - persist every PERSIST_EVERY levels: the skipped levels
             #   recompute ≤ PERSIST_EVERY-1 broadcast-hash joins from the
             #   last cache — far cheaper than rewriting the cache.
-            prev_cached = last_cached
             pts = new_pts.persist()
-            last_cached = pts
-            chain_base, chain = pts, []
-            if prev_cached is not None:
-                prev_cached.unpersist()
         else:
             pts = new_pts
             chain.append((depth, axis, splittable))
+            continue
+        last_cached.unpersist()
+        last_cached = chain_base = pts
+        chain = []
 
     # counts and bboxes of the children of distributed split nodes at the
     # deepest level (the loop may have ended at max_depth before their
@@ -439,7 +432,7 @@ def lkt_build(
         if 2 * r["node_id"] + 1 not in node_stats
     ]
     if missing:
-        lo = min((1 << (node_depth_py(m) + 1)) - 1 for m in missing)
+        lo = min((1 << (node_depth(m) + 1)) - 1 for m in missing)
         for r in _group_rows(leaf_stats, lo):
             node_stats[int(r["node"])] = (
                 int(r["count"]), r["xmin"], r["xmax"], r["ymin"], r["ymax"],
@@ -492,26 +485,21 @@ def lkt_build(
         SPLITS_SCHEMA,
     )
 
-    if fused_out is not None:
-        # the fused finish already emitted, materialized, and cached the
-        # FINAL kd-ordered 7-column table in one pass; the loop cache is
-        # dead — free it now so repeated builds don't pile up dead cache
-        # copies (measured 86 s → 236 s degradation before this)
-        out = fused_out
-        if last_cached is not None:
-            last_cached.unpersist()
-    else:
+    # the fused finish already emitted, materialized, and cached the FINAL
+    # kd-ordered 7-column table in one pass
+    out = fused_out
+    if out is None:
         n_parts = num_partitions or spark.sparkContext.defaultParallelism
         out = (
             with_derived_cols(pts.select("key", "x", "y", "node"), max_depth)
             .repartitionByRange(n_parts, "sort_key", "key")
             .sortWithinPartitions("sort_key", "key")
+            .persist()
         )
-        if materialize:
-            out = out.persist()
-            out.count()
-            if last_cached is not None:
-                last_cached.unpersist()
+        out.count()
+    # the loop cache is dead — free it now so repeated builds don't pile up
+    # dead cache copies (measured 86 s → 236 s degradation before this)
+    last_cached.unpersist()
     return LktIndex(
         points=out,
         splits=splits_df,
@@ -520,10 +508,6 @@ def lkt_build(
         max_depth=max_depth,
         coord_type=coord_type,
     )
-
-
-def node_depth_py(node_id: int) -> int:
-    return (node_id + 1).bit_length() - 1
 
 
 def _node_prefix(g: int, max_depth: int) -> tuple[int, int, int, int]:
@@ -559,7 +543,8 @@ class _ListAccum:
         return a
 
 
-_TOKEN_CACHE: dict = {}
+# n_parts → verified partition tokens, per session (session.memo)
+_TOKENS: dict = {}
 
 
 def _verified_tokens(spark, n_parts: int):
@@ -571,17 +556,14 @@ def _verified_tokens(spark, n_parts: int):
         verify_tokens,
     )
 
-    # applicationId is stable for the session's lifetime and never reused
-    # by a successor session in-process (id(spark) can be — ADVICE r3)
-    key = (spark.sparkContext.applicationId, n_parts)
-    if key in _TOKEN_CACHE:
-        return _TOKEN_CACHE[key]
-    try:
-        toks = partition_tokens(n_parts)
-        toks = toks if verify_tokens(spark, toks) else None
-    except Exception:
-        toks = None
-    return memo_put(_TOKEN_CACHE, key, toks)
+    def make():
+        try:
+            toks = partition_tokens(n_parts)
+            return toks if verify_tokens(spark, toks) else None
+        except Exception:
+            return None
+
+    return memo(spark, _TOKENS, n_parts, make)
 
 
 def _local_finish_fused(

@@ -7,8 +7,10 @@ All three reference variants collapse into ONE Arrow-batched pandas UDF:
 Spark task parallelism across batches plays the MIMD role, and the inner
 numpy formulation — one gather per tree level across the whole Arrow batch,
 ≤ max_depth levels — plays the SIMT one-thread-per-point role
-(SURVEY.md §2.1-B1..B3). The broadcast positional arrays are the analogue of
-the device-side flat node array the CUDA wrapper copies (lkt.cu:55-59).
+(SURVEY.md §2.1-B1..B3). The positional split arrays come from the tree's
+one broadcast per session (``SplitTree.broadcast``, shared with the kNN
+planner) — the analogue of the device-side flat node array the CUDA wrapper
+copies once (lkt.cu:55-59).
 
 Used for labelling *new* points against an existing index (queries,
 incremental ingest). The build does not call it: its level loop routes
@@ -20,8 +22,6 @@ in one numpy pass (a mapInPandas, operators/build.py), and both derive
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -32,9 +32,6 @@ from linear_kdtree_spark.oracle import MAX_DEPTH
 from linear_kdtree_spark.operators.tree import SplitTree
 
 LABEL_SCHEMA = "code: long, node: long, path_len: int"
-
-# guards the per-tree broadcast cache in make_label_udf (ADVICE r5)
-_LABEL_BC_LOCK = threading.Lock()
 
 
 def _traverse(
@@ -74,32 +71,12 @@ def _traverse(
 def make_label_udf(
     spark, tree: SplitTree, max_depth: int | None = None, coord_type: str = "float"
 ):
-    """Returns a pandas UDF (x, y) → struct<code, node, path_len> bound to a
-    broadcast of the tree's positional arrays.
-
-    The broadcast is cached ON the (immutable) tree per application —
-    repeated labelling against the same tree (e.g. the streaming indexer
-    calling attach_labels every micro-batch) previously re-serialized and
-    re-broadcast the arrays each call and never released them, leaking one
-    broadcast per batch (review r5)."""
+    """Returns a pandas UDF (x, y) → struct<code, node, path_len> that reads
+    the tree's split arrays from :meth:`SplitTree.broadcast`: one broadcast
+    per tree per application, so repeated labelling against the same tree
+    (the streaming indexer, every ingest batch) ships the arrays once."""
     md = max_depth or tree.max_depth
-    app_id = spark.sparkContext.applicationId
-    # serialized check-then-set: concurrent first calls against a shared
-    # tree (e.g. parallel streaming queries) would otherwise each create
-    # a broadcast and leak all but the last one (ADVICE r5); the lock is
-    # cheap next to broadcast creation
-    with _LABEL_BC_LOCK:
-        cached = getattr(tree, "_label_bc", None)
-        if cached is not None and cached[0] == app_id:
-            bc = cached[1]
-        else:
-            if cached is not None:  # stale broadcast from a prev session
-                try:
-                    cached[1].unpersist()
-                except Exception:
-                    pass
-            bc = spark.sparkContext.broadcast(tree.to_arrays())
-            tree._label_bc = (app_id, bc)
+    bc = tree.broadcast(spark)
     quantize = coord_type == "float"
 
     @F.pandas_udf(LABEL_SCHEMA)
@@ -114,7 +91,7 @@ def make_label_udf(
         else:
             xv = x.to_numpy(dtype=np.float64)
             yv = y.to_numpy(dtype=np.float64)
-        code, node, plen = _traverse(xv, yv, bc.value, md)
+        code, node, plen = _traverse(xv, yv, bc.value["splits"], md)
         return pd.DataFrame({"code": code, "node": node, "path_len": plen})
 
     return label

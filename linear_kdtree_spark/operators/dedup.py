@@ -19,7 +19,7 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from linear_kdtree_spark.session import memo_put
+from linear_kdtree_spark.session import memo
 
 logger = logging.getLogger(__name__)
 
@@ -85,13 +85,11 @@ def drop_oversized_buckets(
     return bucketed.join(F.broadcast(sizes.select(*keys)), keys, "left_anti")
 
 
-# physical-parallelism probe memo for widen_partitions: keyed on
-# (applicationId, analyzed-plan semantic hash, parallelism). The cached
-# value is a PARTITION COUNT, never data — a stale hit can only change
-# how many tasks run the projection, not any result row. An insert drops
-# the entries of stopped sessions (session.memo_put), so the memo holds
-# one application's plans at a time.
-_WIDEN_PROBE_CACHE: dict = {}
+# widen_partitions' probe memo, per session (session.memo): keyed on
+# (analyzed-plan semantic hash, parallelism). The cached value is a
+# PARTITION COUNT, never data — a stale hit can only change how many tasks
+# run the projection, not any result row.
+_WIDTHS: dict = {}
 
 
 def widen_partitions(df: DataFrame) -> DataFrame:
@@ -106,23 +104,17 @@ def widen_partitions(df: DataFrame) -> DataFrame:
 
     The ``.rdd.getNumPartitions()`` probe costs ~45 ms of driver work per
     call (measured r6: python RDD wrapper + physical planning), so it is
-    memoized per (app, analyzed-plan semantic hash, parallelism) — callers
-    like lsh_candidate_pairs re-invoke this on an identical plan every
-    call."""
-    par = df.sparkSession.sparkContext.defaultParallelism
+    memoized per session on (analyzed-plan semantic hash, parallelism) —
+    callers like lsh_candidate_pairs re-invoke this on an identical plan
+    every call."""
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
     try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            par,
-        )
+        plan = df._jdf.queryExecution().analyzed().semanticHash()
     except Exception:  # non-JVM plan surface — probe directly
-        key = None
-    n = _WIDEN_PROBE_CACHE.get(key) if key is not None else None
-    if n is None:
         n = df.rdd.getNumPartitions()
-        if key is not None:
-            memo_put(_WIDEN_PROBE_CACHE, key, n)
+    else:
+        n = memo(spark, _WIDTHS, (plan, par), lambda: df.rdd.getNumPartitions())
     if n < par:
         return df.repartition(par)
     return df

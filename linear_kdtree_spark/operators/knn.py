@@ -8,8 +8,9 @@ Single-scan exact algorithm, all pruning expressed as ``sort_key``
 intervals (each subtree is contiguous in kd order):
 
   Plan (a ``mapInPandas`` stage over the query DataFrame, against the
-  broadcast leaf table — one row per non-empty leaf with its interval,
-  count and exact data bbox; no data scan): each query orders the leaves
+  leaf table — one row per non-empty leaf with its interval, count and
+  exact data bbox — read from the tree's one broadcast per session,
+  ``SplitTree.broadcast``, shared with the label UDF; no data scan): each query orders the leaves
   by the distance to their bbox's far corner, and r_q is that distance at
   the first leaf where the running point count reaches k — those leaves
   hold ≥ k points within r_q, so r_q bounds the k-th distance. Every leaf
@@ -114,10 +115,10 @@ def knn_batch(
     out_schema = "query_id long, qx double, qy double, r2 double, lo long, hi long"
 
     pts = index.points.select("key", "x", "y", "sort_key")
-    bc = spark.sparkContext.broadcast(tree.to_query_arrays())
+    bc = tree.broadcast(spark)
 
     def plan(batches):
-        L = bc.value
+        L = bc.value["leaves"]
         for pdf in batches:
             ids = pdf[query_id].to_numpy()
             qxs = pdf[qx_col].to_numpy(dtype=np.float64)

@@ -169,6 +169,8 @@ class SplitTree:
         # the index's points, so every cover is a filter over it
         self.leaves = leaves
         self.total_points = int(leaves["count"].sum())
+        # this tree's session memo (see broadcast): freed with the tree
+        self._memo: dict = {}
 
     # ------------------------------------------------------------------ IO
     @classmethod
@@ -244,6 +246,21 @@ class SplitTree:
         """The leaf table's arrays — all the batch-kNN planner needs inside
         an executor (operators/knn.py knn_batch)."""
         return self.leaves
+
+    def broadcast(self, spark):
+        """ONE Broadcast of ``{"splits": to_arrays(), "leaves": leaves}``
+        per Spark application (``session.memo``), read by both the label
+        UDF (operators/codes.py) and the kNN planner (operators/knn.py) —
+        the analogue of the reference's one copy of the flat node array to
+        the device per tree (lkt.cu:55-59)."""
+        from linear_kdtree_spark.session import memo
+
+        def make():
+            return spark.sparkContext.broadcast(
+                {"splits": self.to_arrays(), "leaves": self.to_query_arrays()}
+            )
+
+        return memo(spark, self._memo, "broadcast", make)
 
     # ----------------------------------------------------------- structure
     def leaf_for(self, x: float, y: float) -> int:

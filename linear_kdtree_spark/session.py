@@ -4,11 +4,18 @@ Local mode is a correctness/bench sandbox; the configs are chosen so the
 same code runs unchanged on a multi-executor cluster (AQE, adaptive skew
 join, Arrow batching). Shuffle partition count follows the core count
 instead of Spark's default 200.
+
+Also the two session-scoped helpers every operator uses: ``local_frame``
+(driver-side tables as Arrow LocalRelations) and ``memo`` (a value made
+once per Spark application: partition tokens, widen probes, gate builds
+and each tree's broadcast). This is the only module that reads the
+applicationId.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
@@ -89,15 +96,26 @@ def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
     return spark.createDataFrame(table, schema)
 
 
-def memo_put(cache: dict, key: tuple, value):
-    """``cache[key] = value`` for a memo keyed by ``(applicationId, ...)``,
-    dropping the entries of every other application first: an
+# the one lock of every memo: re-entrant, because a make() may call memo
+# (a gate build's make runs lkt_build, whose fused path reads the tokens)
+_MEMO_LOCK = threading.RLock()
+
+
+def memo(spark: SparkSession, store: dict, key, make):
+    """``store[(applicationId, key)]``, calling ``make()`` only on a miss:
+    the one way the library keeps a value once per Spark application.
+    Before it inserts, it drops the entries of every other application (an
     applicationId is never reused in-process, so a stopped session's
-    entries can never hit again. Returns ``value``."""
-    for stale in [k for k in cache if k[0] != key[0]]:
-        del cache[stale]
-    cache[key] = value
-    return value
+    entries can never hit again). Check, make and insert run under one
+    lock, so concurrent first calls on a key get one value, not two."""
+    app = spark.sparkContext.applicationId
+    with _MEMO_LOCK:
+        if (app, key) not in store:
+            value = make()
+            for stale in [k for k in store if k[0] != app]:
+                del store[stale]
+            store[(app, key)] = value
+        return store[(app, key)]
 
 
 def _default_local_dir(extra_conf: dict[str, str] | None) -> str | None:

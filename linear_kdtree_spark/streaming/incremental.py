@@ -110,6 +110,10 @@ class StreamingIndexer:
                 .select("key", "x", "y")
                 .unionAll(batch_df.select("key", "x", "y"))
             )
+            # both build paths persist their points: free the replaced
+            # index's, or every rebuild leaves one more cached table behind
+            if self.index is not None:
+                self.index.points.unpersist()
             self.index = lkt_build(
                 base,
                 max_depth=self.max_depth,

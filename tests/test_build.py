@@ -181,6 +181,28 @@ def test_aggregate_over_derived_cols(spark):
     )
 
 
+@pytest.mark.parametrize("n_pairs", [5, 70])  # CASE chain, broadcast join
+def test_lookup_plan_independent_of_pair_order(spark, n_pairs):
+    """The stats job returns the split nodes in no fixed order: ``_lookup``
+    over a pair list and over the same list reversed gives one optimized
+    plan (expression ids aside) and the same values."""
+    import re
+
+    from linear_kdtree_spark.operators.build import _lookup
+
+    df = spark.range(0, 2 * n_pairs).withColumnRenamed("id", "node")
+    pairs = [(3 * i % (2 * n_pairs), i + 0.5) for i in range(n_pairs)]
+    outs = [_lookup(spark, df, p, "sv", "double") for p in (pairs, pairs[::-1])]
+    plans = [
+        re.sub(r"#\d+L?", "#", o._jdf.queryExecution().optimizedPlan().toString())
+        for o in outs
+    ]
+    assert plans[0] == plans[1]
+    want = sorted((int(n), dict(pairs).get(n)) for n in range(2 * n_pairs))
+    for o in outs:
+        assert sorted(tuple(r) for r in o.collect()) == want
+
+
 def test_node_transform_exprs(spark, random_points):
     """code/sort_key derived from the heap node id alone must equal the
     values accumulated during the build (functions/morton.py)."""

@@ -1,9 +1,12 @@
 """Driver-side tables as Arrow LocalRelations (``session.local_frame``):
 types and rows survive, the library's plans read no Python-built RDD, the
-payload-aware interval broadcast, and the applicationId-keyed memos."""
+payload-aware interval broadcast, and the session memo (``session.memo``)."""
 
 import ast
 import os
+import sys
+import threading
+import time
 
 import numpy as np
 import pytest
@@ -13,10 +16,12 @@ from pyspark.sql import functions as F
 import linear_kdtree_spark
 from linear_kdtree_spark.functions.murmur import partition_tokens, verify_tokens
 from linear_kdtree_spark.operators.build import SPLITS_SCHEMA, lkt_build
-from linear_kdtree_spark.operators.knn import knn
+from linear_kdtree_spark.operators.codes import attach_labels
+from linear_kdtree_spark.operators.knn import knn, knn_batch
 from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
+from linear_kdtree_spark.operators.tree import SplitTree
 from linear_kdtree_spark.oracle import point_in_polygon
-from linear_kdtree_spark.session import local_frame
+from linear_kdtree_spark.session import local_frame, memo
 
 EDGES = "array<struct<x1:double,y1:double,dx:double,dy:double>>"
 
@@ -154,22 +159,122 @@ def test_wide_convex_cover_plans_a_shuffle_join(spark, index, dataset):
     assert "BroadcastHashJoin" in small._jdf.queryExecution().executedPlan().toString()
 
 
-def test_memos_drop_stopped_sessions(spark):
+def test_memos_drop_stopped_sessions(spark, index):
+    """One token, widen or tree-broadcast call that makes a value drops
+    the entries of a stopped session (an applicationId never reused)."""
     import linear_kdtree_spark.operators.build as build
     import linear_kdtree_spark.operators.dedup as dedup
 
-    stale = ("app-stopped-0000", 4)
-    build._TOKEN_CACHE[stale] = [0, 1, 2, 3]
-    build._verified_tokens(spark, 13)
-    assert stale not in build._TOKEN_CACHE
-    assert (spark.sparkContext.applicationId, 13) in build._TOKEN_CACHE
-
-    stale = ("app-stopped-0000", 123, 4)
-    dedup._WIDEN_PROBE_CACHE[stale] = 1
-    dedup.widen_partitions(spark.range(17).withColumn("v", F.col("id") * 3))
-    assert stale not in dedup._WIDEN_PROBE_CACHE
     app = spark.sparkContext.applicationId
-    assert any(k[0] == app for k in dedup._WIDEN_PROBE_CACHE)
+    stale = ("app-stopped-0000", "key")
+    # a fresh tree over the same tables: its memo is empty
+    tree = SplitTree(index.tree.nodes, index.tree.leaves, index.max_depth)
+    for store, call in (
+        (build._TOKENS, lambda: build._verified_tokens(spark, 13)),
+        (dedup._WIDTHS, lambda: dedup.widen_partitions(
+            spark.range(17).withColumn("v", F.col("id") * 3))),
+        (tree._memo, lambda: tree.broadcast(spark)),
+    ):
+        store[stale] = object()
+        call()
+        assert stale not in store
+        assert store and all(k[0] == app for k in store)
+
+
+def test_tree_broadcast_once_per_session(spark, dataset, monkeypatch):
+    """Two knn_batch and two attach_labels calls on one fresh index make
+    one broadcast: the tree's, which both read."""
+    keys, x, y = dataset
+    rows = [(int(k), float(a), float(b)) for k, a, b in zip(keys, x, y)]
+    pts = local_frame(spark, rows, "key long, x float, y float")
+    idx = lkt_build(pts, max_depth=16, strategy="mean", leaf_size=8)
+    queries = local_frame(
+        spark, [(0, 50.0, 50.0), (1, 5.0, 95.0)], "query_id long, qx double, qy double"
+    )
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def counting(value):
+        made.append(value)
+        return real(value)
+
+    monkeypatch.setattr(sc, "broadcast", counting)
+    for _ in range(2):
+        assert len(knn_batch(idx, queries, 3).collect()) == 6
+        labelled = attach_labels(pts.limit(50), idx.tree).collect()
+        assert all(idx.tree.leaf_for(r["x"], r["y"]) == r["node"] for r in labelled)
+    assert len(made) == 1
+    assert set(made[0]) == {"splits", "leaves"}
+
+
+def _within(seconds, fn):
+    """fn() in a daemon thread; its result, or a failure if it has not
+    returned after ``seconds`` (a deadlock)."""
+    out = []
+    t = threading.Thread(target=lambda: out.append(fn()), daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), "memo call did not return"
+    return out[0]
+
+
+def test_memo_nested_and_concurrent(spark):
+    """A make() that calls memo on another key completes (the lock is
+    re-entrant), and threads racing first calls on the same keys get one
+    value per key, made once."""
+    store = {}
+    outer = _within(10, lambda: memo(
+        spark, store, "outer", lambda: ("outer", memo(spark, store, "inner", object))
+    ))
+    assert outer[1] is memo(spark, store, "inner", object)
+
+    n_threads, keys = 8, range(4)
+    made, got = [], {k: [] for k in keys}
+    start = threading.Barrier(n_threads)
+
+    def make():
+        made.append(1)
+        time.sleep(0.02)  # the other threads arrive while this one makes
+        return object()
+
+    def racer():
+        start.wait()
+        for k in keys:
+            got[k].append(memo(spark, store, ("raced", k), make))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=racer, daemon=True) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(30)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert len(made) == len(keys)
+    for k in keys:
+        assert len(got[k]) == n_threads and all(v is got[k][0] for v in got[k])
+
+
+def test_application_id_read_in_session_only():
+    """Every per-application memo goes through ``session.memo``, the one
+    reader of the applicationId."""
+    root = os.path.dirname(linear_kdtree_spark.__file__)
+    readers = set()
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Attribute) and node.attr == "applicationId":
+                    readers.add(os.path.relpath(path, root))
+    assert readers == {"session.py"}
 
 
 # the two writers that infer a schema from lineage dicts; an explicit

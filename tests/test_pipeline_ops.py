@@ -5,6 +5,7 @@ import hashlib
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 
@@ -351,6 +352,7 @@ def test_streaming_incremental_build(spark, tmp_path):
     rng = np.random.default_rng(5)
     out = str(tmp_path / "stream_out")
     indexer = StreamingIndexer(out_path=out, max_depth=8, rebuild_every=2)
+    indexes = []
     for batch_id in range(3):
         pdf = pd.DataFrame(
             {
@@ -360,6 +362,11 @@ def test_streaming_incremental_build(spark, tmp_path):
             }
         )
         indexer.process_batch(spark.createDataFrame(pdf), batch_id)
+        indexes.append(indexer.index)
+    # batch 2 rebuilt the index; the replaced one's cached points are freed
+    assert indexes[0] is indexes[1] is not indexes[2]
+    assert indexes[0].points.storageLevel == StorageLevel.NONE
+    assert indexes[2].points.storageLevel != StorageLevel.NONE
     result = spark.read.parquet(out)
     assert result.count() == 300
     assert result.select("batch_id").distinct().count() == 3
