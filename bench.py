@@ -172,14 +172,12 @@ def _materialized_build(pts, cpus: int, n_points: int):
     # 20.3 s. Capped at 4 M so a group always fits one task's pandas
     # memory (the rule a real cluster would use; beyond ~n/4 the few huge
     # subtrees starve the cores — 2.4 M threshold at 4.8 M regressed)
+    # (lkt_build returns its points persisted and counted)
     threshold = max(200_000, min(n_points // 8, 4_000_000))
-    idx = lkt_build(
+    return lkt_build(
         pts, max_depth=24, strategy="mean", leaf_size=512, num_partitions=cpus,
         local_threshold=threshold,
     )
-    idx.points = idx.points.persist()
-    idx.points.count()
-    return idx
 
 
 def main(argv=None) -> int:

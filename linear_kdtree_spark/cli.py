@@ -10,12 +10,14 @@ Usage (local or cluster; zip the package for --py-files):
 
 Commands
 --------
-build     points parquet (key, x, y) → kd index (points + splits + leaves + lineage)
+build     points parquet (key, x, y) → kd index directory (a TableCatalog
+          written by sources/catalog.save_index)
 extract   pages parquet (url, text, …) → points parquet
 knn       index dir + queries parquet (query_id, qx, qy) → top-k parquet
 pip       index dir + rectangles CSV "poly_id,xmin,ymin,xmax,ymax" → parquet
 tile      points parquet → Z-order tile assignment parquet
-bench     run the benchmark pipeline (same code path as bench.py)
+
+knn and pip read the index with sources/catalog.load_index.
 
 The CLI mirrors the reference's single binary dispatch (main.cpp:446-463)
 with subcommands replacing the numeric test selector.
@@ -40,9 +42,8 @@ def _spark(args):
 
 
 def cmd_build(args) -> int:
-    from pyspark.sql import functions as F
-
     from linear_kdtree_spark.operators.build import lkt_build
+    from linear_kdtree_spark.sources.catalog import TableCatalog, save_index
 
     spark = _spark(args)
     pts = spark.read.parquet(args.input)
@@ -57,39 +58,17 @@ def cmd_build(args) -> int:
         checkpoint_dir=ckpt,
         coord_type=args.coord_type,
     )
-    idx.points.write.mode("overwrite").parquet(os.path.join(args.output, "points"))
-    idx.splits.write.mode("overwrite").parquet(os.path.join(args.output, "splits"))
-    idx.tree.leaf_frame(spark).write.mode("overwrite").parquet(
-        os.path.join(args.output, "leaves")
-    )
-    with open(os.path.join(args.output, "lineage.json"), "w") as f:
-        json.dump(
-            {"max_depth": idx.max_depth, "coord_type": idx.coord_type,
-             "levels": idx.lineage},
-            f, indent=2,
-        )
-    n = spark.read.parquet(os.path.join(args.output, "points")).count()
+    cat = TableCatalog(spark, args.output)
+    save_index(cat, idx)
+    n = cat.read("lkt_points").count()
     print(json.dumps({"built_points": n, "splits": idx.splits.count()}))
     return 0
 
 
-def _load_index(spark, index_dir: str):
-    from linear_kdtree_spark.operators.build import LktIndex
-    from linear_kdtree_spark.operators.tree import SplitTree
+def _load(spark, index_dir: str):
+    from linear_kdtree_spark.sources.catalog import TableCatalog, load_index
 
-    with open(os.path.join(index_dir, "lineage.json")) as f:
-        meta = json.load(f)
-    points = spark.read.parquet(os.path.join(index_dir, "points"))
-    splits = spark.read.parquet(os.path.join(index_dir, "splits"))
-    # an index saved before the leaf table existed gets it derived
-    leaves_path = os.path.join(index_dir, "leaves")
-    leaves = spark.read.parquet(leaves_path) if os.path.isdir(leaves_path) else None
-    tree = SplitTree.from_frames(splits, points, leaves, max_depth=meta["max_depth"])
-    return LktIndex(
-        points=points, splits=splits, tree=tree,
-        lineage=meta.get("levels", []), max_depth=meta["max_depth"],
-        coord_type=meta.get("coord_type", "float"),
-    )
+    return load_index(TableCatalog(spark, index_dir))
 
 
 def cmd_extract(args) -> int:
@@ -107,7 +86,7 @@ def cmd_knn(args) -> int:
     from linear_kdtree_spark.operators.knn import knn
 
     spark = _spark(args)
-    idx = _load_index(spark, args.index)
+    idx = _load(spark, args.index)
     out = knn(idx, spark.read.parquet(args.queries), args.k)
     out.write.mode("overwrite").parquet(args.output)
     print(json.dumps({"knn_rows": spark.read.parquet(args.output).count()}))
@@ -118,7 +97,7 @@ def cmd_pip(args) -> int:
     from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
 
     spark = _spark(args)
-    idx = _load_index(spark, args.index)
+    idx = _load(spark, args.index)
     polys = []
     with open(args.polygons) as f:
         for line in f:
@@ -155,46 +134,6 @@ def cmd_tile(args) -> int:
     out.write.mode("overwrite").parquet(args.output)
     print(json.dumps({"tiled_rows": spark.read.parquet(args.output).count()}))
     return 0
-
-
-def cmd_bench(args) -> int:
-    # bench.py lives at the repo root, not inside the package, so under
-    # the documented `spark-submit --py-files engine.zip` deployment a
-    # bare import fails (review r5) — fall back to loading it from the
-    # directory next to this package, and thread the parsed --master /
-    # --shuffle-partitions through the env knobs bench actually reads.
-    import os
-
-    if args.master:
-        os.environ["SPARK_GRAFT_MASTER"] = args.master
-    if args.shuffle_partitions:
-        # bench.py sizes BOTH the default master local[N] and the shuffle
-        # partition count from SPARK_GRAFT_CPUS; pin the master to the
-        # real core count first so a high --shuffle-partitions does not
-        # silently start that many executor threads (ADVICE r5)
-        if not args.master and not os.environ.get("SPARK_GRAFT_MASTER"):
-            cpus = int(
-                os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)
-            )
-            os.environ["SPARK_GRAFT_MASTER"] = f"local[{cpus}]"
-        os.environ["SPARK_GRAFT_CPUS"] = str(args.shuffle_partitions)
-    try:
-        import bench
-    except ModuleNotFoundError:
-        import importlib.util
-
-        cand = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "bench.py",
-        )
-        if not os.path.exists(cand):
-            print(json.dumps({"error": "bench.py not found; run from the "
-                              "repo root or ship it alongside the package"}))
-            return 2
-        spec = importlib.util.spec_from_file_location("bench", cand)
-        bench = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(bench)
-    return bench.main()
 
 
 def make_parser() -> argparse.ArgumentParser:
@@ -241,9 +180,6 @@ def make_parser() -> argparse.ArgumentParser:
     t.add_argument("--level", type=int, default=12, help="s2 cell level")
     t.add_argument("--res", type=int, default=7, help="aperture-7 hex res")
     t.set_defaults(fn=cmd_tile)
-
-    bn = sub.add_parser("bench")
-    bn.set_defaults(fn=cmd_bench)
     return p
 
 

@@ -116,7 +116,8 @@ class LktIndex:
     the kd-ordered point DataFrame (``code`` + ``sort_key`` columns in place
     of the reference's parallel ``morton_codes`` array, lkt.h:31), the flat
     heap-ordered split DataFrame (analogue of ``fixlentree``,
-    fixlentree.hh:20-81), and the broadcastable driver-side tree.
+    fixlentree.hh:20-81), and the broadcastable driver-side tree, which
+    also carries the index's ``max_depth`` and ``coord_type``.
 
     Invariant: ``tree.leaves`` (the leaf table: count and data bbox per
     non-empty leaf) describes exactly ``points``, and every query cover is
@@ -127,8 +128,6 @@ class LktIndex:
     splits: DataFrame
     tree: SplitTree
     lineage: list = field(default_factory=list)
-    max_depth: int = MAX_DEPTH
-    coord_type: str = "float"
 
 
 def _apply_level(spark, df: DataFrame, axis: str, splittable: list) -> DataFrame:
@@ -296,7 +295,12 @@ def lkt_build(
             F.lit(0).cast("long").alias("node"),
         )
 
-    pts = last_cached = pts.persist()
+    # the level caches alive: the newest one (``pts`` after a persist or
+    # checkpoint) and, until a scan has materialized it, the one it is
+    # computed from — freeing that earlier sends the next scan back to the
+    # build's source
+    cached = [pts.persist()]
+    pts = cached[0]
     min_split = max(2, leaf_size + 1)
     fused_out = None  # set by the fused local finish (final, materialized)
     # nodes withdrawn from the distributed phase the moment they fit a
@@ -348,6 +352,9 @@ def lkt_build(
             lambda src: _split_stats(src, axis, strategy), level_lo
         )
         t_stats = time.time() - t_level
+        for c in cached[:-1]:
+            c.unpersist()
+        del cached[:-1]
         for r in stats:
             xb = ("mn", "mx") if axis == "x" else ("mn2", "mx2")
             yb = ("mn2", "mx2") if axis == "x" else ("mn", "mx")
@@ -415,8 +422,8 @@ def lkt_build(
             pts = new_pts
             chain.append((depth, axis, splittable))
             continue
-        last_cached.unpersist()
-        last_cached = chain_base = pts
+        cached.append(pts)
+        chain_base = pts
         chain = []
 
     # counts and bboxes of the children of distributed split nodes at the
@@ -472,7 +479,7 @@ def lkt_build(
         r["n_left"] = node_stats.get(2 * r["node_id"] + 1, (0,))[0]
         r["n_right"] = node_stats.get(2 * r["node_id"] + 2, (0,))[0]
 
-    tree = SplitTree.from_rows(split_rows, leaf_rows, max_depth=max_depth)
+    tree = SplitTree.from_rows(split_rows, leaf_rows, max_depth, coord_type)
     splits_df = local_frame(
         spark,
         [
@@ -499,14 +506,13 @@ def lkt_build(
         out.count()
     # the loop cache is dead — free it now so repeated builds don't pile up
     # dead cache copies (measured 86 s → 236 s degradation before this)
-    last_cached.unpersist()
+    for c in cached:
+        c.unpersist()
     return LktIndex(
         points=out,
         splits=splits_df,
         tree=tree,
         lineage=lineage,
-        max_depth=max_depth,
-        coord_type=coord_type,
     )
 
 

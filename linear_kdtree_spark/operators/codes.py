@@ -24,11 +24,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linear_kdtree_spark.functions.morton import sort_key_from_path_len
-from linear_kdtree_spark.oracle import MAX_DEPTH
 from linear_kdtree_spark.operators.tree import SplitTree
 
 LABEL_SCHEMA = "code: long, node: long, path_len: int"
@@ -68,23 +67,22 @@ def _traverse(
     return code, node, plen
 
 
-def make_label_udf(
-    spark, tree: SplitTree, max_depth: int | None = None, coord_type: str = "float"
-):
+def make_label_udf(spark, tree: SplitTree):
     """Returns a pandas UDF (x, y) → struct<code, node, path_len> that reads
     the tree's split arrays from :meth:`SplitTree.broadcast`: one broadcast
     per tree per application, so repeated labelling against the same tree
     (the streaming indexer, every ingest batch) ships the arrays once."""
-    md = max_depth or tree.max_depth
+    md = tree.max_depth
     bc = tree.broadcast(spark)
-    quantize = coord_type == "float"
+    quantize = tree.coord_type == "float"
 
     @F.pandas_udf(LABEL_SCHEMA)
     def label(x: pd.Series, y: pd.Series) -> pd.DataFrame:
         # the build casts coordinates to the index coord_type before
         # comparing (canonical: float32 — ord_t, reference lkt.h:13), so
         # must we — feeding raw float64 into a float32 index flips
-        # comparisons near deep split boundaries
+        # comparisons near deep split boundaries, and quantizing input to
+        # a double index flips them the other way
         if quantize:
             xv = x.to_numpy(dtype=np.float32).astype(np.float64)
             yv = y.to_numpy(dtype=np.float32).astype(np.float64)
@@ -98,21 +96,17 @@ def make_label_udf(
 
 
 def attach_labels(
-    df: DataFrame,
-    tree: SplitTree,
-    x_col: str = "x",
-    y_col: str = "y",
-    max_depth: int | None = None,
-    coord_type: str = "float",
+    df: DataFrame, tree: SplitTree, x_col: str = "x", y_col: str = "y"
 ) -> DataFrame:
     """Adds ``code``, ``node``, ``path_len`` and ``sort_key`` columns to any
-    DataFrame of points, against an existing tree."""
-    md = max_depth or tree.max_depth
-    udf = make_label_udf(df.sparkSession, tree, md, coord_type=coord_type)
+    DataFrame of points, against an existing tree (its ``max_depth`` and
+    ``coord_type`` are the index's)."""
+    udf = make_label_udf(df.sparkSession, tree)
     out = df.withColumn("_lbl", udf(F.col(x_col), F.col(y_col)))
     out = out.select("*", "_lbl.code", "_lbl.node", "_lbl.path_len").drop("_lbl")
     # the UDF already knows each point's depth, so sort_key is two shifts —
     # the same expression the build's derived-column chain uses
     return out.withColumn(
-        "sort_key", sort_key_from_path_len(F.col("node"), F.col("path_len"), md)
+        "sort_key",
+        sort_key_from_path_len(F.col("node"), F.col("path_len"), tree.max_depth),
     )

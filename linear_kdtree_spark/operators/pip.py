@@ -48,7 +48,7 @@ def _pruned_candidates(index: LktIndex, polygons: list[Polygon]) -> DataFrame:
         return local_frame(spark, [], "poly_id long, key long, x double, y double")
     pts = index.points.select("key", "x", "y", "sort_key")
     return interval_join(
-        pts, rows, "poly_id long, lo long, hi long", max_depth=index.max_depth
+        pts, rows, "poly_id long, lo long, hi long", max_depth=index.tree.max_depth
     ).select("poly_id", "key", "x", "y")
 
 
@@ -92,7 +92,7 @@ def point_in_polygons(
             pts, rows,
             "poly_id long, edges array<struct<x1:double,y1:double,"
             "dx:double,dy:double>>, lo long, hi long",
-            max_depth=index.max_depth,
+            max_depth=index.tree.max_depth,
         )
         xd, yd = F.col("x").cast("double"), F.col("y").cast("double")
         # strict half-plane conjunction: inside ⇔ strictly left of every

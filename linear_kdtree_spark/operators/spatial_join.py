@@ -17,8 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linear_kdtree_spark.functions.geometry import dist2, make_raycast_udf
-from linear_kdtree_spark.functions.morton import WORLD, grid_cell_col
-from linear_kdtree_spark.operators.build import LktIndex
+from linear_kdtree_spark.functions.morton import WORLD
 from linear_kdtree_spark.operators.pip import Polygon
 from linear_kdtree_spark.operators.tile import assign_tiles_morton
 from linear_kdtree_spark.session import local_frame
@@ -33,8 +32,6 @@ def polygon_tiles(
     """(poly_id, tile) covering tiles of each polygon's bbox at ``depth``
     (driver-side — the polygon set is the small dim; exact refine follows
     the join so bbox cover is sufficient)."""
-    from linear_kdtree_spark.functions.morton import morton_tile_col  # noqa: F401
-
     xmin_b, ymin_b, xmax_b, ymax_b = bounds
     nx = 1 << depth
     wx = (xmax_b - xmin_b) / nx

@@ -159,12 +159,18 @@ class TreeNode:
 
 class SplitTree:
     """Immutable driver-side kd split tree (for labelling new points) and
-    its leaf table (for planning every query cover)."""
+    its leaf table (for planning every query cover).
+
+    It carries the two parameters that define the index's key space and
+    comparisons: ``max_depth`` (``sort_key`` spans ``2**max_depth``) and
+    ``coord_type`` ('float' or 'double', the type the build cast the
+    coordinates to before comparing them with the splits)."""
 
     def __init__(self, nodes: dict[int, TreeNode], leaves: dict[str, np.ndarray],
-                 max_depth: int = MAX_DEPTH):
+                 max_depth: int = MAX_DEPTH, coord_type: str = "float"):
         self.nodes = nodes
         self.max_depth = max_depth
+        self.coord_type = coord_type
         # one row per non-empty leaf (see leaf_table); it describes exactly
         # the index's points, so every cover is a filter over it
         self.leaves = leaves
@@ -174,7 +180,8 @@ class SplitTree:
 
     # ------------------------------------------------------------------ IO
     @classmethod
-    def from_rows(cls, rows, leaf_rows, max_depth: int = MAX_DEPTH) -> "SplitTree":
+    def from_rows(cls, rows, leaf_rows, max_depth: int,
+                  coord_type: str) -> "SplitTree":
         nodes = {
             int(r["node_id"]): TreeNode(
                 node_id=int(r["node_id"]),
@@ -186,21 +193,18 @@ class SplitTree:
             )
             for r in rows
         }
-        return cls(nodes, leaf_table(leaf_rows, max_depth), max_depth=max_depth)
+        return cls(nodes, leaf_table(leaf_rows, max_depth), max_depth, coord_type)
 
     @classmethod
-    def from_frames(cls, splits, points, leaves=None,
-                    max_depth: int = MAX_DEPTH) -> "SplitTree":
-        """A saved tree from its splits table and its leaf table. An index
-        saved without a leaf table gets it derived, exactly, by one
-        ``groupBy("node")`` over its points."""
-        if leaves is None:
-            leaves = leaf_stats(points)
+    def from_frames(cls, splits, leaves, max_depth: int,
+                    coord_type: str) -> "SplitTree":
+        """A saved tree from its splits table and its leaf table
+        (``sources/catalog.load_index``)."""
         cols = ("node", "count", "xmin", "xmax", "ymin", "ymax")
         return cls.from_rows(
             [r.asDict() for r in splits.collect()],
             [tuple(r) for r in leaves.select(*cols).collect()],
-            max_depth=max_depth,
+            max_depth, coord_type,
         )
 
     def leaf_frame(self, spark):
@@ -265,7 +269,10 @@ class SplitTree:
     # ----------------------------------------------------------- structure
     def leaf_for(self, x: float, y: float) -> int:
         """Heap id of the leaf region containing (x, y) — the query-side
-        replay of the build's descent (reference lkt.cpp:146-152)."""
+        replay of the build's descent (reference lkt.cpp:146-152), after
+        the same cast to ``coord_type`` the build applies."""
+        if self.coord_type == "float":
+            x, y = float(np.float32(x)), float(np.float32(y))
         j = 0
         while j in self.nodes:
             s = self.nodes[j]

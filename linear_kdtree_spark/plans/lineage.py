@@ -4,19 +4,14 @@ with per-partition lineage + metrics").
 The build loop already records per-level node statistics (LktIndex.lineage);
 this module adds the physical-layout side: per-partition row counts and
 sort_key ranges of the final kd-ordered table — the skew signal that drives
-salting decisions (SURVEY.md §4.3) — and persists everything as parquet
-tables next to the index.
+salting decisions (SURVEY.md §4.3). ``sources/catalog.save_index`` persists
+both next to the index.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from linear_kdtree_spark.operators.build import LktIndex
 
 
 def partition_metrics(points: DataFrame) -> DataFrame:
@@ -47,17 +42,3 @@ def skew_stats(points: DataFrame) -> dict:
         "p50_rows": counts[len(counts) // 2],
         "skew_ratio": round(counts[-1] / max(1, total / len(counts)), 3),
     }
-
-
-def write_lineage(index: LktIndex, out_dir: str) -> None:
-    os.makedirs(out_dir, exist_ok=True)
-    spark = index.points.sparkSession
-    if index.lineage:
-        spark.createDataFrame(index.lineage).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "build_levels")
-        )
-    partition_metrics(index.points).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "partitions")
-    )
-    with open(os.path.join(out_dir, "skew.json"), "w") as f:
-        json.dump(skew_stats(index.points), f, indent=2)

@@ -2,10 +2,14 @@
 parquet + JSON-manifest emulation with the same API shape
 (SURVEY.md §7 "Iceberg availability in sandbox").
 
-The engine persists four tables per index (SURVEY.md §1.2): ``lkt_points``
-(kd-ordered, code + sort_key columns), ``lkt_splits`` (heap-ordered flat
-tree), ``lkt_leaves`` (the leaf table every query cover is planned from,
-``SplitTree.leaf_frame``) and ``lkt_build_log`` (per-level lineage). On a real cluster the
+This module holds the engine's one on-disk index format: :func:`save_index`
+writes an index as tables (SURVEY.md §1.2) — ``lkt_points`` (kd-ordered,
+code + sort_key columns), ``lkt_splits`` (heap-ordered flat tree),
+``lkt_leaves`` (the leaf table every query cover is planned from,
+``SplitTree.leaf_frame``), ``lkt_meta`` (``max_depth`` and ``coord_type``,
+without which the keys and splits cannot be read), ``lkt_build_log``
+(per-level lineage) and ``lkt_partition_metrics`` — and
+:func:`load_index` reads it back. On a real cluster the
 Iceberg path adds snapshot isolation, min-max file pruning on ``sort_key``
 (which the query planner's interval predicates exploit directly) and
 time-travel over build checkpoints; the fallback keeps snapshot ids +
@@ -138,14 +142,43 @@ class TableCatalog:
 
 
 def save_index(catalog: TableCatalog, index, prefix: str = "lkt") -> None:
+    """Persist ``index`` as the tables ``{prefix}_points``, ``_splits``,
+    ``_leaves``, ``_meta`` (one row: ``max_depth``, ``coord_type``),
+    ``_build_log`` (its lineage) and ``_partition_metrics``. The first four
+    are the index, read back by :func:`load_index`; the last two are
+    records of the build."""
     from linear_kdtree_spark.plans.lineage import partition_metrics
+    from linear_kdtree_spark.session import local_frame
 
+    tree = index.tree
     catalog.write(f"{prefix}_points", index.points)
     catalog.write(f"{prefix}_splits", index.splits)
-    catalog.write(f"{prefix}_leaves", index.tree.leaf_frame(catalog.spark))
+    catalog.write(f"{prefix}_leaves", tree.leaf_frame(catalog.spark))
+    catalog.write(
+        f"{prefix}_meta",
+        local_frame(catalog.spark, [(tree.max_depth, tree.coord_type)],
+                    "max_depth int, coord_type string"),
+    )
     if index.lineage:
         catalog.write(
             f"{prefix}_build_log",
             catalog.spark.createDataFrame(index.lineage),
         )
     catalog.write(f"{prefix}_partition_metrics", partition_metrics(index.points))
+
+
+def load_index(catalog: TableCatalog, prefix: str = "lkt"):
+    """The index :func:`save_index` wrote under ``prefix``. Its lineage is
+    empty: the build it describes ran elsewhere (``{prefix}_build_log``)."""
+    from linear_kdtree_spark.operators.build import LktIndex
+    from linear_kdtree_spark.operators.tree import SplitTree
+
+    meta = catalog.read(f"{prefix}_meta").first()
+    splits = catalog.read(f"{prefix}_splits")
+    tree = SplitTree.from_frames(
+        splits, catalog.read(f"{prefix}_leaves"),
+        meta["max_depth"], meta["coord_type"],
+    )
+    return LktIndex(
+        points=catalog.read(f"{prefix}_points"), splits=splits, tree=tree
+    )

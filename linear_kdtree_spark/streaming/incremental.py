@@ -121,8 +121,7 @@ class StreamingIndexer:
                 leaf_size=self.leaf_size,
             )
         labelled = attach_labels(
-            batch_df.select("key", "x", "y"), self.index.tree,
-            max_depth=self.max_depth,
+            batch_df.select("key", "x", "y"), self.index.tree
         ).withColumn("batch_id", F.lit(batch_id))
         # idempotent replay: dynamic partition overwrite on batch_id
         # rewrites ONLY this batch's partition, so a batch replayed after a

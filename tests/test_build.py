@@ -104,7 +104,7 @@ def test_label_udf_matches_build(spark, random_points):
     keys, x, y = random_points
     idx = lkt_build(_points_df(spark, keys, x, y), max_depth=10, strategy="median")
     raw = _points_df(spark, keys, x, y)
-    labelled = attach_labels(raw, idx.tree, max_depth=10)
+    labelled = attach_labels(raw, idx.tree)
     joined = (
         labelled.alias("l")
         .join(idx.points.alias("b"), "key")
@@ -117,6 +117,48 @@ def test_label_udf_matches_build(spark, random_points):
     )
     bad = joined.filter(~(F.col("code_ok") & F.col("node_ok") & F.col("sk_ok"))).count()
     assert bad == 0
+
+
+@pytest.mark.parametrize("coord_type, node_3", [("double", 1), ("float", 2)])
+def test_labels_compare_in_index_coord_type(spark, coord_type, node_3):
+    """The tree carries its coord_type: labels and ``leaf_for`` cast new
+    points to it before comparing, as the build did. Key 3's x is
+    0.1 - 1e-12; the root split (the mean x) is 0.09999999999975 in double,
+    which key 3 lies below, and 0.1f in float, where key 3 rounds to 0.1f
+    and goes right."""
+    pts = spark.createDataFrame(
+        [(0, 0.0, 0.0), (1, 0.0, 0.0), (2, 0.3, 0.0), (3, 0.1 - 1e-12, 0.0)],
+        "key long, x double, y double",
+    )
+    idx = lkt_build(pts, max_depth=1, coord_type=coord_type, local_threshold=0)
+    built = {r["key"]: r["node"] for r in idx.points.collect()}
+    assert built == {0: 1, 1: 1, 2: 2, 3: node_3}
+    labelled = attach_labels(pts, idx.tree).collect()
+    assert {r["key"]: r["node"] for r in labelled} == built
+    assert all(idx.tree.leaf_for(r["x"], r["y"]) == r["node"] for r in labelled)
+
+
+@pytest.mark.parametrize("max_depth", [3, 6])
+def test_level_loop_reads_source_once(spark, max_depth):
+    """A level-synchronous build reads its source once: a level cache is
+    freed only after a scan has materialized the next one, so no later
+    scan recomputes the levels from the source."""
+    n = 4000
+    scanned = spark.sparkContext.accumulator(0)
+
+    @F.udf("double")
+    def counted(v):
+        scanned.add(1)
+        return v
+
+    src = spark.range(n).select(
+        F.col("id").alias("key"),
+        counted((F.col("id") * 7919 % 4001).cast("double")).alias("x"),
+        (F.col("id") * 104729 % 3989).cast("double").alias("y"),
+    )
+    idx = lkt_build(src, max_depth=max_depth, leaf_size=1, local_threshold=0)
+    idx.points.unpersist()
+    assert scanned.value / n == 1
 
 
 def _derived_node_df(spark):
@@ -212,9 +254,9 @@ def test_node_transform_exprs(spark, random_points):
         "code",
         "sort_key",
         "path_len",
-        code_from_node(F.col("node"), idx.max_depth).alias("code2"),
-        sort_key_from_node(F.col("node"), idx.max_depth).alias("sort_key2"),
-        path_len_from_node(F.col("node"), idx.max_depth).alias("plen2"),
+        code_from_node(F.col("node"), idx.tree.max_depth).alias("code2"),
+        sort_key_from_node(F.col("node"), idx.tree.max_depth).alias("sort_key2"),
+        path_len_from_node(F.col("node"), idx.tree.max_depth).alias("plen2"),
     )
     bad = df.filter(
         (F.col("code") != F.col("code2"))
@@ -314,7 +356,7 @@ def test_leaf_table_equals_group_by(spark, tmp_path, case):
     assert idx.tree.total_points == df.count()
     # sorted by lo, tiling the key space, each interval holding its points
     assert (L["lo"][1:] == L["hi"][:-1]).all()
-    assert L["lo"][0] == 0 and L["hi"][-1] == 1 << idx.max_depth
+    assert L["lo"][0] == 0 and L["hi"][-1] == 1 << idx.tree.max_depth
     span = {w[0]: w[6:] for w in want}
     for node, lo, hi in zip(L["node"], L["lo"], L["hi"]):
         assert lo <= span[node][0] and span[node][1] < hi

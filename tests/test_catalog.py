@@ -96,13 +96,49 @@ def test_save_index_leaf_table_roundtrip(spark, tmp_path):
     cat = TableCatalog(spark, str(tmp_path / "cat3"))
     save_index(cat, idx, prefix="b")
     tree = SplitTree.from_frames(
-        cat.read("b_splits"), cat.read("b_points"), cat.read("b_leaves"),
-        max_depth=idx.max_depth,
+        cat.read("b_splits"), cat.read("b_leaves"), idx.tree.max_depth, "float"
     )
     assert len(tree.leaves["node"]) > 1
     for c, want in idx.tree.leaves.items():
         assert np.array_equal(tree.leaves[c], want), c
     assert tree.nodes == idx.tree.nodes
+
+
+def test_load_index_roundtrip(spark, tmp_path):
+    """load_index reads back what save_index wrote: the same splits, leaf
+    table, max_depth and coord_type, and the same kNN and label rows."""
+    from linear_kdtree_spark.operators.codes import attach_labels
+    from linear_kdtree_spark.operators.knn import knn_batch
+    from linear_kdtree_spark.sources.catalog import load_index
+
+    rng = np.random.default_rng(3)
+    pts = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "key": np.arange(600),
+                "x": rng.uniform(0, 100, 600),
+                "y": rng.uniform(0, 100, 600),
+            }
+        )
+    )
+    idx = lkt_build(pts, max_depth=11, coord_type="double")
+    cat = TableCatalog(spark, str(tmp_path / "cat4"))
+    save_index(cat, idx, prefix="d")
+    got = load_index(cat, prefix="d")
+    assert (got.tree.max_depth, got.tree.coord_type) == (11, "double")
+    assert got.tree.nodes == idx.tree.nodes
+    for c, want in idx.tree.leaves.items():
+        assert np.array_equal(got.tree.leaves[c], want), c
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    queries = spark.createDataFrame(
+        [(i, float(v), float(100 - v)) for i, v in enumerate(range(-10, 111, 11))],
+        "query_id long, qx double, qy double",
+    )
+    assert rows(knn_batch(got, queries, 5)) == rows(knn_batch(idx, queries, 5))
+    assert rows(attach_labels(pts, got.tree)) == rows(attach_labels(pts, idx.tree))
 
 
 def test_iceberg_probe_documented(spark):

@@ -97,7 +97,7 @@ def test_library_plans_read_no_python_rdd(spark, index, monkeypatch):
         "pip_raycast": point_in_polygons(index, polys),
         "interval_join": interval_join(
             index.points, ivals, "poly_id long, lo long, hi long",
-            max_depth=index.max_depth,
+            max_depth=index.tree.max_depth,
         ),
         "knn_list": knn(index, [(0, 50.0, 50.0), (1, 10.0, 90.0)], 3),
     }
@@ -137,7 +137,7 @@ def test_wide_convex_cover_plans_a_shuffle_join(spark, index, dataset):
 
     xmin, ymin, xmax, ymax = poly.bbox()
     cover = index.tree.ranges_for_bbox(xmin, ymin, xmax, ymax)
-    shift = choose_shift(cover, index.max_depth)
+    shift = choose_shift(cover, index.tree.max_depth)
     replicated = sum(((hi - 1) >> shift) - (lo >> shift) + 1 for lo, hi in cover)
     threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     assert replicated * m * 32 > threshold  # the case under test
@@ -168,7 +168,7 @@ def test_memos_drop_stopped_sessions(spark, index):
     app = spark.sparkContext.applicationId
     stale = ("app-stopped-0000", "key")
     # a fresh tree over the same tables: its memo is empty
-    tree = SplitTree(index.tree.nodes, index.tree.leaves, index.max_depth)
+    tree = SplitTree(index.tree.nodes, index.tree.leaves, index.tree.max_depth)
     for store, call in (
         (build._TOKENS, lambda: build._verified_tokens(spark, 13)),
         (dedup._WIDTHS, lambda: dedup.widen_partitions(
@@ -277,12 +277,9 @@ def test_application_id_read_in_session_only():
     assert readers == {"session.py"}
 
 
-# the two writers that infer a schema from lineage dicts; an explicit
-# schema there could reorder the columns of persisted tables
-_LINEAGE_WRITERS = {
-    ("sources/catalog.py", "save_index"),
-    ("plans/lineage.py", "write_lineage"),
-}
+# the writer that infers a schema from lineage dicts; an explicit schema
+# there could reorder the columns of the persisted build log
+_LINEAGE_WRITER = ("sources/catalog.py", "save_index")
 
 
 class _CreateDataFrameCalls(ast.NodeVisitor):
@@ -311,7 +308,7 @@ def test_no_create_dataframe_outside_local_frame():
     a job on Python workers every time the table is read. Library code
     goes through ``session.local_frame``."""
     root = os.path.dirname(linear_kdtree_spark.__file__)
-    allowed = {("session.py", "local_frame")} | _LINEAGE_WRITERS
+    allowed = {("session.py", "local_frame"), _LINEAGE_WRITER}
     seen, bad = set(), []
     for dirpath, _dirs, files in os.walk(root):
         for fname in files:

@@ -179,7 +179,7 @@ def test_tiles_lkt_prefix(spark, index):
     )
     for r in rows:
         if r["path_len"] >= d:
-            prefix = r["sort_key"] >> (index.max_depth - d)
+            prefix = r["sort_key"] >> (index.tree.max_depth - d)
             assert r["tile"] == prefix + (1 << d) - 1
         else:
             assert r["tile"] == r["node"]
@@ -289,32 +289,6 @@ def test_deinterleave_exact_above_2_53(spark):
         .first()
     )
     assert (row["ix"], row["iy"]) == (ix_ref, iy_ref)
-
-
-def test_knn_batch_derives_missing_leaf_table(spark, index, tmp_path):
-    """An index saved without a leaf table (the format before it existed)
-    is reloaded with the table derived from its points: identical to the
-    build's, and kNN gives identical rows."""
-    import json
-
-    from linear_kdtree_spark.cli import _load_index
-    from linear_kdtree_spark.operators.knn import knn_batch
-
-    path = str(tmp_path / "old_index")
-    index.points.write.parquet(f"{path}/points")
-    index.splits.write.parquet(f"{path}/splits")
-    with open(f"{path}/lineage.json", "w") as f:
-        json.dump({"max_depth": index.max_depth, "levels": []}, f)
-    reloaded = _load_index(spark, path)
-    for c, want in index.tree.leaves.items():
-        assert np.array_equal(reloaded.tree.leaves[c], want), c
-
-    queries = [(i, float(v), float(v * 0.7)) for i, v in
-               enumerate(range(-20, 130, 9))]
-    qdf = spark.createDataFrame(queries, "query_id long, qx double, qy double")
-    got = sorted(tuple(r) for r in knn_batch(reloaded, qdf, 5).collect())
-    want = sorted(tuple(r) for r in knn_batch(index, qdf, 5).collect())
-    assert got == want
 
 
 def test_interval_join_auto_broadcast_cap(spark):

@@ -10,7 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from linear_kdtree_spark.operators.build import lkt_build
-from linear_kdtree_spark.plans.lineage import skew_stats, write_lineage
+from linear_kdtree_spark.plans.lineage import skew_stats
+from linear_kdtree_spark.sources.catalog import TableCatalog, save_index
 from linear_kdtree_spark.sources.pages import synth_pages
 from linear_kdtree_spark.sources.points import extract_points, text_from_html
 
@@ -68,14 +69,12 @@ def test_lineage_and_skew_metrics(spark, tmp_path):
         assert lv["n_active_points"] <= 2000
     assert idx.lineage[0]["n_active_points"] == 2000
 
-    out = str(tmp_path / "lineage")
-    write_lineage(idx, out)
-    levels = spark.read.parquet(os.path.join(out, "build_levels"))
-    assert levels.count() == len(idx.lineage)
-    parts = spark.read.parquet(os.path.join(out, "partitions"))
+    cat = TableCatalog(spark, str(tmp_path / "cat"))
+    save_index(cat, idx)
+    assert cat.read("lkt_build_log").count() == len(idx.lineage)
+    parts = cat.read("lkt_partition_metrics")
     assert parts.agg(F.sum("n_rows")).first()[0] == 2000
-    stats = json.load(open(os.path.join(out, "skew.json")))
-    assert stats["rows"] == 2000
+    assert skew_stats(idx.points)["rows"] == 2000
 
     # range partitions must be sort_key-disjoint (the linear layout)
     rows = sorted(

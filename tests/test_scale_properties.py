@@ -117,7 +117,7 @@ def test_interval_join_matches_theta_join(spark):
     idx = lkt_build(pts, max_depth=12, strategy="mean", leaf_size=16)
     intervals = []
     # synthesize assorted intervals incl. degenerate and whole-range
-    md = idx.max_depth
+    md = idx.tree.max_depth
     intervals = [
         (0, 0, 1 << md),
         (1, 123456, 123456),  # empty (hi == lo) — must yield nothing

@@ -4,8 +4,9 @@ The north rule mandates the engine "run via spark-submit --py-files on a
 multi-executor cluster"; every other test drives the CLI in-process. This
 one zips the package, launches an actual spark-submit JVM with the zip on
 ``--py-files`` and a 3-line driver script, builds an index, and checks the
-emitted points parquet matches an in-process build on the same input
-bit-for-bit — proving the deployable artifact (the zip) is self-contained.
+saved index, read back with ``load_index``, matches an in-process build on
+the same input bit-for-bit — proving the deployable artifact (the zip) is
+self-contained.
 
 The subprocess runs with ``cwd`` set to an empty temp dir and PYTHONPATH
 stripped, so ``linear_kdtree_spark`` can only resolve from the zip.
@@ -111,18 +112,16 @@ def test_spark_submit_py_files_build(spark, tmp_path):
 
     # the submitted JVM's output must equal an in-process build bit-for-bit
     from linear_kdtree_spark.operators.build import lkt_build
+    from linear_kdtree_spark.sources.catalog import TableCatalog, load_index
 
     ours = lkt_build(pts, max_depth=8, strategy="mean", leaf_size=16)
-    got = {
-        (r["key"], r["code"])
-        for r in spark.read.parquet(os.path.join(idx_path, "points"))
-        .select("key", "code").collect()
-    }
+    # the index dir is a TableCatalog that load_index reads back whole
+    saved = load_index(TableCatalog(spark, idx_path))
+    got = {(r["key"], r["code"]) for r in saved.points.select("key", "code").collect()}
     want = {(r["key"], r["code"]) for r in ours.points.select("key", "code").collect()}
     assert got == want
-    # index dir carries the full deployable surface: splits + lineage
-    assert os.path.exists(os.path.join(idx_path, "lineage.json"))
-    assert spark.read.parquet(os.path.join(idx_path, "splits")).count() > 0
+    assert saved.tree.nodes == ours.tree.nodes
+    assert (saved.tree.max_depth, saved.tree.coord_type) == (8, "float")
 
 
 def test_ship_package_zip_contents_and_master_parse(tmp_path):

@@ -1,7 +1,6 @@
-"""Dump .explain("formatted") for every declared gate query to
-plans/r06/<query>_<tag>.txt  (tag = before/after), plus the bench-suite
-stages that are not gate queries (they share operators, but the bench
-shapes differ: amplified points, depth-24 hybrid build).
+"""Dump .explain("formatted") of the gate queries (``__spark_entry__``'s
+``queries()``, all of them or the ones named) to plans/<tag>/<query>.txt,
+so two tags (say, before/after) can be diffed file by file.
 
 Usage: python tools/dump_plans.py <tag> [sf_dir] [query ...]
 """
@@ -25,7 +24,7 @@ def main() -> int:
     from linear_kdtree_spark.session import get_spark
 
     spark = get_spark(app_name="dump_plans")
-    outdir = os.path.join("plans", "r06")
+    outdir = os.path.join("plans", tag)
     os.makedirs(outdir, exist_ok=True)
     for name, fn in se.queries().items():
         if only and name not in only:
@@ -38,7 +37,7 @@ def main() -> int:
             text = buf.getvalue()
         except Exception as e:  # pragma: no cover
             text = f"ERROR building plan: {e!r}\n"
-        path = os.path.join(outdir, f"{name}_{tag}.txt")
+        path = os.path.join(outdir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(f"# query: {name}  sf_dir: {sf_dir}  tag: {tag}\n")
             f.write(text)
