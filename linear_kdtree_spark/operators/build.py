@@ -9,10 +9,12 @@ the build is **level-synchronous**: one aggregation shuffle per tree level
 computes *all* of that level's split values at once, a broadcast join
 reassigns every point to its child node as pure JVM column expressions
 (whole-stage codegen, no Python in the loop), and the physical kd order is
-realized exactly once at the end by ``repartitionByRange('sort_key') +
-sortWithinPartitions`` — the distributed generalization of the reference's
-parallel block-partition machinery (sample → range bounds → shuffle →
-local sort), which it fully subsumes.
+realized exactly once at the end: by one token-routed shuffle and a
+``mapInPandas`` pass that finishes the small subtrees and emits them in kd
+order (the default hybrid build), or by ``repartitionByRange('sort_key') +
+sortWithinPartitions`` (the pure level-synchronous build) — the
+distributed generalization of the reference's parallel block-partition
+machinery (sample → range bounds → shuffle → local sort).
 
 Scale design (100 TB / 10^12 rows):
 - the split-table size is bounded by ``leaf_size`` (a node splits only while
@@ -248,24 +250,27 @@ def lkt_build(
     distributed phase the moment it fits a task (so under skew each
     level's stats scan shrinks to the heavy spine instead of re-scanning
     all mass until the global max fits). When no node exceeds the
-    threshold, ONE range shuffle keyed on each subtree's
-    sort_key-interval start both co-locates whole subtrees and places
-    partitions in global kd order, and a ``mapInPandas`` pass finishes
-    every deferred subtree locally — from its own depth — with the numpy
-    implementation of the identical canonical semantics
-    (oracle.build_oracle with depth/axis offset); the terminal kd order
-    then costs only a partition-local sort — no second full-data shuffle
+    threshold, ONE hash shuffle routes whole subtrees to pre-planned
+    partitions: each row is tagged with its bin's verified murmur token
+    (``repartition(n_parts, "_tok")``, a ``hashpartitioning(_tok)``
+    Exchange; ``repartitionByRange`` on ``sort_key`` only if the tokens
+    fail verification), bins being contiguous ``sort_key`` ranges. A
+    ``mapInPandas`` pass then finishes every deferred subtree locally —
+    from its own depth — with the numpy implementation of the identical
+    canonical semantics (oracle.build_oracle with depth/axis offset) and
+    emits its rows already in kd order: no Sort and no second shuffle
     (see :func:`_local_finish_fused`). At 10^12 points with a 2e5
     threshold that is ~22 distributed levels + one local pass.
     Set ``local_threshold=0`` to force the pure level-synchronous path
     (resumable/checkpointed builds use it; they need durable per-level
-    state).
+    state), which ends with ``repartitionByRange(sort_key, key)`` and a
+    partition-local sort.
 
     ``points`` must carry (key_col, x_col, y_col); other columns are dropped
     (join them back by ``key``). Returns an :class:`LktIndex` whose
-    ``points`` are range-partitioned and sorted by ``sort_key`` — the
-    physical kd order of the reference's in-place array, persisted and
-    counted.
+    ``points`` partitions are contiguous ``sort_key`` ranges in partition
+    order, each in ``(sort_key, key)`` order — the physical kd order of
+    the reference's in-place array, persisted and counted.
     """
     spark = points.sparkSession
     if checkpoint_dir:

@@ -1,12 +1,17 @@
 """Driver-side tables as Arrow LocalRelations (``session.local_frame``):
 types and rows survive, the library's plans read no Python-built RDD, the
-payload-aware interval broadcast, and the session memo (``session.memo``)."""
+payload-aware interval broadcast, the session memo (``session.memo``), and
+the Python workers' zip importers that re-read only a changed archive
+(``session._install_zip_stamps``)."""
 
 import ast
+import importlib
 import os
 import sys
 import threading
 import time
+import zipfile
+import zipimport
 
 import numpy as np
 import pytest
@@ -21,7 +26,7 @@ from linear_kdtree_spark.operators.knn import knn, knn_batch
 from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
 from linear_kdtree_spark.operators.tree import SplitTree
 from linear_kdtree_spark.oracle import point_in_polygon
-from linear_kdtree_spark.session import local_frame, memo
+from linear_kdtree_spark.session import _install_zip_stamps, local_frame, memo
 
 EDGES = "array<struct<x1:double,y1:double,dx:double,dy:double>>"
 
@@ -325,3 +330,89 @@ def test_no_create_dataframe_outside_local_frame():
                     bad.append(f"{rel}:{line} in {fn}")
     assert not bad, f"createDataFrame outside session.local_frame: {bad}"
     assert seen == allowed  # the scan sees the calls it allows
+
+
+def _write_module_zip(path, body, mtime_ns):
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("zstamp_mod.py", body)
+    os.utime(path, ns=(mtime_ns, mtime_ns))
+
+
+def test_zip_importer_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """Once installed, ``importlib.invalidate_caches()`` re-reads a zip
+    importer's archive on its first call and when the archive changed,
+    and never otherwise; installing twice leaves one wrapper."""
+    archive = str(tmp_path / "mods.zip")
+    _write_module_zip(archive, "VALUE = 1\n", 1_700_000_000 * 10**9)
+    monkeypatch.syspath_prepend(archive)
+    stdlib = zipimport.zipimporter.invalidate_caches
+    # restores the stdlib method at teardown
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stdlib)
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory", lambda p: reads.append(p) or real(p))
+    try:
+        import zstamp_mod
+
+        assert zstamp_mod.VALUE == 1
+        _install_zip_stamps()
+        _install_zip_stamps()
+        assert zipimport.zipimporter.invalidate_caches.__wrapped__ is stdlib
+        importlib.invalidate_caches()  # the importer's first call reads
+        before = reads.count(archive)
+        assert before == 2  # the import's read, then the first call's
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads.count(archive) == before
+
+        # a new body of another length: a stale directory would misread it
+        _write_module_zip(archive, "VALUE = 'rewritten'\n", 1_700_000_001 * 10**9)
+        importlib.invalidate_caches()
+        assert reads.count(archive) == before + 1
+        del sys.modules["zstamp_mod"]
+        import zstamp_mod
+
+        assert zstamp_mod.VALUE == "rewritten"
+    finally:
+        sys.modules.pop("zstamp_mod", None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_reused_worker_rereads_no_archive(spark):
+    """A task on a Python worker that already ran a library closure
+    re-reads none of its zip archives (pyspark.zip, py4j's) on
+    ``importlib.invalidate_caches()``, the call Spark's worker setup makes
+    on every task. Each run's 16 tasks cycle through the idle workers, so
+    every task of the second run lands on a worker the first run used."""
+
+    def rereads(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        import linear_kdtree_spark.session  # noqa: F401
+
+        for _ in batches:
+            pass
+        calls = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda p: calls.append(p) or real(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        zips = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+        yield pd.DataFrame({"rereads": [len(calls)], "zips": [zips]})
+
+    def run():
+        df = spark.range(0, 16, 1, 16)
+        return df.mapInPandas(rereads, "rereads long, zips long").collect()
+
+    run()
+    second = run()
+    assert len(second) == 16
+    if not any(r["zips"] for r in second):
+        pytest.skip("the Python workers import nothing from a zip archive")
+    assert [r["rereads"] for r in second] == [0] * 16
