@@ -1063,7 +1063,7 @@ def _build_cte(
         )
         if strategy == "mean":
             # f32 builds quantize the mean split to FLOAT (ord_t, lkt.h:13)
-            # exactly like the engine (oracle.split_value / _split_stats).
+            # exactly like the engine (kernel.split_value / _split_stats).
             # The double path compares raw AVG(double) across engines whose
             # SUMMATION ORDER differs (Spark partial aggs vs DuckDB serial)
             # — bit-equal only while no point sits within ~1 ulp of a mean

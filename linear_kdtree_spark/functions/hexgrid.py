@@ -187,41 +187,6 @@ def hex_cell_from_face_xy(face, x, y, res: int):
     return cell
 
 
-def hex_cell_scalar(lat_deg: float, lng_deg: float, res: int) -> int:
-    """Independent scalar twin (pure python floats/ints) — the tests'
-    cross-check against the vectorized path."""
-    f, x, y = latlng_to_face_xy([lat_deg], [lng_deg])
-    face = int(f[0])
-    i0 = float(x[0]) * INV_SQRT3 - float(y[0]) / 3.0
-    j0 = float(y[0]) * (2.0 / 3.0)
-    vi = vj = 0
-    cell = (res << 50) | (face << 45)
-    a = [[1, 0], [0, 1]]
-    for k in range(1, res + 1):
-        a = [
-            [2 * a[0][0] - a[1][0], 2 * a[0][1] - a[1][1]],
-            [a[0][0] + 3 * a[1][0], a[0][1] + 3 * a[1][1]],
-        ]
-        fi = a[0][0] * i0 + a[0][1] * j0
-        fj = a[1][0] * i0 + a[1][1] * j0
-        pi = 2 * vi - vj
-        pj = vi + 3 * vj
-        best = None
-        chosen = (0, pi, pj)
-        for d, (di, dj) in enumerate(DIGIT_DIRS.tolist()):
-            ci, cj = pi + di, pj + dj
-            ei, ej = ci - fi, cj - fj
-            dist = ei * ei + ei * ej + ej * ej
-            if best is None or dist < best:
-                best = dist
-                chosen = (d, ci, cj)
-        d, vi, vj = chosen
-        cell |= d << (45 - 3 * k)
-    for k in range(res + 1, MAX_RES + 1):
-        cell |= 7 << (45 - 3 * k)
-    return cell
-
-
 def hex_parent(cell: int, parent_res: int) -> int:
     """Parent id = digit-prefix truncation (exact by construction)."""
     res = cell >> 50

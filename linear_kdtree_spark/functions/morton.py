@@ -11,10 +11,9 @@ Two code families live here:
    - ``sort_key`` — ``sk`` left-padded to ``max_depth`` bits (kd linear order),
    - ``code`` — the reference-faithful tree-path code (bit = 1 ⇔ left,
      LSB-first; reference lkt.cpp:140-157).
-   The per-bit ``*_from_node`` expressions spell out the definitions and are
-   the independent reference the tests check against; the build and ingest
-   use :func:`with_derived_cols`, a short chain of branch-free integer
-   projections, and :func:`sort_key_from_path_len`. No UDF either way.
+   The build and ingest use :func:`with_derived_cols`, a short chain of
+   branch-free integer projections, and :func:`sort_key_from_path_len`; no
+   UDF. The tests check them against a per-bit definition.
 
 2. **Fixed-grid Z-order tiles** — the textbook interleaved Morton cell id at
    a fixed depth over a fixed bounding box, the engine's H3/S2-style tile
@@ -27,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from linear_kdtree_spark.oracle import MAX_DEPTH
+MAX_DEPTH = 32  # reference nocuda.cpp:113: sizeof(mortoncode_t) * CHAR_BIT
 
 # world bounds used by default for lon/lat tiles
 WORLD = (-180.0, -90.0, 180.0, 90.0)
@@ -35,46 +34,6 @@ WORLD = (-180.0, -90.0, 180.0, 90.0)
 
 def _pow2_long(exp: Column) -> Column:
     return F.pow(F.lit(2.0), exp.cast("double")).cast("long")
-
-
-def path_len_from_node(node: Column, max_depth: int = MAX_DEPTH) -> Column:
-    """Depth of a heap node id: number of i ≥ 1 with node+1 ≥ 2^i."""
-    v = node + 1
-    out = F.lit(0)
-    for i in range(1, max_depth + 1):
-        out = out + F.when(v >= F.lit(1 << i), 1).otherwise(0)
-    return out.cast("int")
-
-
-def sk_from_node(node: Column, path_len: Column) -> Column:
-    """MSB-first (0 = left) path integer: node + 1 with the leading 1 bit
-    dropped."""
-    return (node + 1 - _pow2_long(path_len)).cast("long")
-
-
-def sort_key_from_node(
-    node: Column, max_depth: int = MAX_DEPTH, path_len: Column | None = None
-) -> Column:
-    """Left-padded sort key whose ascending order is the reference's
-    physical kd array order (SURVEY.md §1.3, FIXTURES.md F3)."""
-    plen = path_len if path_len is not None else path_len_from_node(node, max_depth)
-    return (sk_from_node(node, plen) * _pow2_long(F.lit(max_depth) - plen)).cast("long")
-
-
-def code_from_node(node: Column, max_depth: int = MAX_DEPTH) -> Column:
-    """Reference-faithful tree-path code from the heap node id alone:
-    bit (i-1) of the code = 1 − b_i (went-left), LSB-first
-    (lkt.cpp:149-150: ``code |= left << i``)."""
-    v = node + 1
-    plen = path_len_from_node(node, max_depth)
-    out = F.lit(0).cast("long")
-    for i in range(1, max_depth + 1):
-        shift = F.greatest(plen - F.lit(i), F.lit(0))
-        b_i = F.floor(v / _pow2_long(shift)) % 2  # 1 ⇔ went right
-        out = out + F.when(
-            F.lit(i) <= plen, (F.lit(1) - b_i) * F.lit(1 << (i - 1))
-        ).otherwise(0)
-    return out.cast("long")
 
 
 def ancestor_at_depth(node: Column, path_len: Column, depth: int) -> Column:
@@ -122,7 +81,7 @@ def with_derived_cols(df: DataFrame, max_depth: int = MAX_DEPTH) -> DataFrame:
     driver, seconds per call. Here every step is its own projection over a
     named intermediate column instead: CollapseProject does not inline a
     non-trivial producer that is referenced twice, so the plan stays linear
-    (equality with the per-bit expressions above and the plan size are
+    (equality with the per-bit definition and the plan size are
     unit-tested), and whole-stage codegen still fuses it into one function.
     """
     if max_depth > 32:

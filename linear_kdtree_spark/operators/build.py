@@ -54,8 +54,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from linear_kdtree_spark.functions.morton import with_derived_cols
-from linear_kdtree_spark.oracle import MAX_DEPTH
+from linear_kdtree_spark.functions.morton import MAX_DEPTH, with_derived_cols
 from linear_kdtree_spark.operators.tree import (
     LEAF_COLUMNS, SplitTree, leaf_stats, node_depth,
 )
@@ -173,7 +172,7 @@ def _split_stats(active: DataFrame, axis: str, strategy: str) -> DataFrame:
     if strategy == "mean":
         # float32 builds quantize the mean to the coordinate type
         # (reference ord_t splits, lkt.h:13) — kills last-ulp
-        # summation-order divergence across engines (oracle.split_value)
+        # summation-order divergence across engines (kernel.split_value)
         sv = F.avg(axis)
         if active.schema[axis].dataType.simpleString() == "float":
             sv = sv.cast("float").cast("double")
@@ -187,7 +186,7 @@ def _split_stats(active: DataFrame, axis: str, strategy: str) -> DataFrame:
         )
     if strategy == "median":
         # canonical discrete upper median sorted[n // 2] — an actual data
-        # value, bit-exact vs the serial oracle. One ordered window for the
+        # value, bit-exact vs kernel.split_value. One ordered window for the
         # rank + one plain aggregate for the per-node stats (joined back on
         # node — tiny side), instead of five window functions over the same
         # sort (measured 161 s → below at gate scale)
@@ -257,7 +256,7 @@ def lkt_build(
     fail verification), bins being contiguous ``sort_key`` ranges. A
     ``mapInPandas`` pass then finishes every deferred subtree locally —
     from its own depth — with the numpy implementation of the identical
-    canonical semantics (oracle.build_oracle with depth/axis offset) and
+    canonical semantics (operators/kernel.py) and
     emits its rows already in kd order: no Sort and no second shuffle
     (see :func:`_local_finish_fused`). At 10^12 points with a 2e5
     threshold that is ~22 distributed levels + one local pass.
@@ -597,14 +596,13 @@ def _local_finish_fused(
     2. **One mapInPandas pass emits the FINAL table.** Each partition
        pre-sorts its rows by (node, key), finishes every ``deferred``
        subtree with the serial canonical algorithm from that subtree's
-       OWN depth (oracle.build_local_fast — bit-identical to
-       build_oracle, O(n·depth); deferred subtrees root at different
-       depths because each withdrew from the distributed phase the
-       moment it fit a task), remaps local heap ids into the global
-       numbering (global_node + 1 = (g + 1)·2^p + local_path_bits), and
-       composes path_len/code/sort_key from the subtree's integer prefix
-       constants — emitting rows already in exact kd order (subtrees by
-       sort_key-interval start, rows by (sort_key, key)). Groups NOT in
+       OWN depth (kernel.build_local_fast, O(n·depth); deferred subtrees
+       root at different depths because each withdrew from the
+       distributed phase the moment it fit a task), remaps local heap
+       ids into the global numbering (global_node + 1 = (g + 1)·2^p +
+       local_path_bits) and emits rows already in exact kd order
+       (subtrees by sort_key-interval start, rows by (sort_key, key));
+       path_len/code/sort_key are derived JVM-side. Groups NOT in
        ``deferred`` are leaves the distributed phase already decided
        (< min_split or a degenerate split) and are emitted verbatim. No
        staging cache, no derived-column pass, no terminal sort.
@@ -616,7 +614,7 @@ def _local_finish_fused(
     import numpy as np
     import pandas as pd
 
-    from linear_kdtree_spark.oracle import build_local_fast
+    from linear_kdtree_spark.operators.kernel import build_local_fast
 
     local_strategy = "median" if strategy == "median_approx" else strategy
     dtype = np.float32 if coord_type == "float" else np.float64
@@ -754,26 +752,25 @@ def _local_finish_fused(
                 min_split=min_split,
                 coord_dtype=dtype,
             )
-            kd = res.kd_perm
             yield pd.DataFrame(
                 {
-                    "key": keys[s:e][kd],
-                    "x": xs[s:e][kd],
-                    "y": ys[s:e][kd],
-                    "node": _global_node(g, res.node[kd], res.path_len[kd]),
+                    "key": keys[s:e][res.perm],
+                    "x": res.x,
+                    "y": res.y,
+                    "node": _global_node(g, res.node, res.path_len),
                 },
                 copy=False,
             )
             srows = [
                 {
-                    "node_id": _global_node(g, nid, sp.depth),
-                    "depth": plen_g + sp.depth,
-                    "axis": sp.axis,
-                    "value": float(sp.value),
-                    "n_left": sp.n_left,
-                    "n_right": sp.n_right,
+                    "node_id": _global_node(g, nid, depth),
+                    "depth": plen_g + depth,
+                    "axis": axis,
+                    "value": value,
+                    "n_left": n_left,
+                    "n_right": n_right,
                 }
-                for nid, sp in res.splits.items()
+                for nid, depth, axis, value, n_left, n_right in res.splits
             ]
             lv = res.leaves
             lrows = list(zip(

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linear_kdtree_spark.oracle import MAX_DEPTH
+from linear_kdtree_spark.functions.morton import MAX_DEPTH
 from linear_kdtree_spark.session import arrow_table, local_frame
 
 

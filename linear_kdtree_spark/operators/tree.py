@@ -31,7 +31,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from linear_kdtree_spark.oracle import MAX_DEPTH
+from linear_kdtree_spark.functions.morton import MAX_DEPTH
 
 INF = float("inf")
 

@@ -5,16 +5,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from linear_kdtree_spark.functions.morton import (
-    code_from_node,
-    path_len_from_node,
-    sort_key_from_node,
-    with_derived_cols,
-)
+from linear_kdtree_spark.functions.morton import with_derived_cols
 from linear_kdtree_spark.operators.build import lkt_build
 from linear_kdtree_spark.operators.codes import attach_labels
-from linear_kdtree_spark.oracle import build_oracle
 from tests.conftest import F3_EXPECTED, F3_POINTS, F3_SPLITS
+from tests.oracle import build_oracle, node_bits
 
 
 def _points_df(spark, keys, x, y):
@@ -169,27 +164,15 @@ def _derived_node_df(spark):
 
 
 def test_with_derived_cols_equal_reference_exprs(spark):
-    """Branch-free projection chain == didactic per-bit expressions for
-    every node id up to depth 32."""
+    """Branch-free projection chain == the per-bit definition
+    (tests/oracle.node_bits) for every node id up to depth 32."""
     df, nodes = _derived_node_df(spark)
     for md in (8, 24, 32):
         ok_nodes = [n for n in nodes if (n + 2).bit_length() - 1 <= md]
         sub = with_derived_cols(df.filter(F.col("node").isin(ok_nodes)), md)
         assert sub.columns == ["node", "path_len", "code", "sort_key"]
-        out = sub.select(
-            "path_len",
-            "code",
-            "sort_key",
-            path_len_from_node(F.col("node"), md).alias("p1"),
-            code_from_node(F.col("node"), md).alias("c1"),
-            sort_key_from_node(F.col("node"), md).alias("s1"),
-        )
-        bad = out.filter(
-            (F.col("p1") != F.col("path_len"))
-            | (F.col("c1") != F.col("code"))
-            | (F.col("s1") != F.col("sort_key"))
-        ).count()
-        assert bad == 0, md
+        got = sorted(tuple(r) for r in sub.collect())
+        assert got == [(n, *node_bits(n, md)) for n in sorted(ok_nodes)], md
 
 
 def test_with_derived_cols_plan_stays_small(spark):
@@ -250,20 +233,12 @@ def test_node_transform_exprs(spark, random_points):
     values accumulated during the build (functions/morton.py)."""
     keys, x, y = random_points
     idx = lkt_build(_points_df(spark, keys, x, y), max_depth=10, strategy="median")
-    df = idx.points.select(
-        "code",
-        "sort_key",
-        "path_len",
-        code_from_node(F.col("node"), idx.tree.max_depth).alias("code2"),
-        sort_key_from_node(F.col("node"), idx.tree.max_depth).alias("sort_key2"),
-        path_len_from_node(F.col("node"), idx.tree.max_depth).alias("plen2"),
-    )
-    bad = df.filter(
-        (F.col("code") != F.col("code2"))
-        | (F.col("sort_key") != F.col("sort_key2"))
-        | (F.col("path_len") != F.col("plen2"))
-    ).count()
-    assert bad == 0
+    rows = idx.points.select("node", "path_len", "code", "sort_key").collect()
+    bad = [
+        r for r in rows
+        if tuple(r[1:]) != node_bits(r["node"], idx.tree.max_depth)
+    ]
+    assert rows and not bad
 
 
 def test_build_all_duplicate_points(spark):
@@ -365,19 +340,20 @@ def test_leaf_table_equals_group_by(spark, tmp_path, case):
 def test_build_local_fast_leaf_rows():
     """The fused kernel's leaf rows, including a subtree that never
     splits (all points equal: one leaf, the subtree root)."""
-    from linear_kdtree_spark.oracle import build_local_fast
+    from linear_kdtree_spark.operators.kernel import build_local_fast
 
     rng = np.random.default_rng(4)
     x = rng.uniform(0, 10, 500).astype(np.float32)
     y = rng.uniform(0, 10, 500).astype(np.float32)
     for xs, ys in ((x, y), (np.full(40, 3.0, np.float32),) * 2):
         res = build_local_fast(xs, ys, max_depth=10, min_split=9)
+        xk, yk = xs[res.perm], ys[res.perm]  # rows come in kd order
         lv = res.leaves
         assert lv["count"].sum() == len(xs)
         for i, node in enumerate(lv["node"]):
             sel = res.node == node
             assert lv["count"][i] == sel.sum()
             assert lv["path_len"][i] == res.path_len[sel][0]
-            assert (lv["xmin"][i], lv["xmax"][i]) == (xs[sel].min(), xs[sel].max())
-            assert (lv["ymin"][i], lv["ymax"][i]) == (ys[sel].min(), ys[sel].max())
+            assert (lv["xmin"][i], lv["xmax"][i]) == (xk[sel].min(), xk[sel].max())
+            assert (lv["ymin"][i], lv["ymax"][i]) == (yk[sel].min(), yk[sel].max())
     assert list(lv["node"]) == [0] and not res.splits

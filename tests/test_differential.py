@@ -114,7 +114,7 @@ def test_convex_refine_equals_raycast(spark):
 
 def test_knn_batch_brute_force_configs(spark):
     from linear_kdtree_spark.operators.knn import knn_batch
-    from linear_kdtree_spark.oracle import brute_knn
+    from tests.oracle import brute_knn
 
     pts = _pts(spark, 5000, seed=9, clustered=True)
     ref = pts.toPandas()

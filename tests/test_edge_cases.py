@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from linear_kdtree_spark.operators.build import lkt_build
 from linear_kdtree_spark.operators.knn import knn
 from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
-from linear_kdtree_spark.oracle import build_oracle
+from tests.oracle import build_oracle
 
 
 def test_knn_duplicate_coordinates_tiebreak(spark):

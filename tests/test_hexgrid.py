@@ -14,10 +14,10 @@ from linear_kdtree_spark.functions.hexgrid import (
     hex_cell_from_face_xy,
     hex_cell_res,
     hex_cell_face,
-    hex_cell_scalar,
     hex_parent,
     latlng_to_face_xy,
 )
+from tests.oracle import hex_cell_scalar
 
 
 def _sample(n=20000, seed=5):

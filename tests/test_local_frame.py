@@ -25,8 +25,8 @@ from linear_kdtree_spark.operators.codes import attach_labels
 from linear_kdtree_spark.operators.knn import knn, knn_batch
 from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
 from linear_kdtree_spark.operators.tree import SplitTree
-from linear_kdtree_spark.oracle import point_in_polygon
 from linear_kdtree_spark.session import _install_zip_stamps, local_frame, memo
+from tests.oracle import point_in_polygon
 
 EDGES = "array<struct<x1:double,y1:double,dx:double,dy:double>>"
 

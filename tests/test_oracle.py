@@ -2,15 +2,17 @@
 example — the anchor for every downstream parity test."""
 
 import numpy as np
+import pytest
 
-from linear_kdtree_spark.oracle import (
+from linear_kdtree_spark.operators import kernel
+from tests.conftest import F3_EXPECTED, F3_POINTS, F3_SPLITS
+from tests.oracle import (
     MAX_DEPTH,
     brute_knn,
     build_oracle,
     codes_from_tree,
     point_in_polygon,
 )
-from tests.conftest import F3_EXPECTED, F3_POINTS, F3_SPLITS
 
 
 def _f3_arrays():
@@ -115,13 +117,12 @@ def test_point_in_polygon_square():
     assert not point_in_polygon(-1, -1, sq)
 
 
-def test_build_local_fast_bit_identical_to_oracle():
-    """The fused finish's hot path (O(n·depth) in-place partition build)
-    must reproduce build_oracle EXACTLY — every array, every split, every
-    tie — across strategies, coord types, depth offsets, leaf sizes, and
-    adversarial inputs (duplicates, all-equal, tiny n)."""
-    from linear_kdtree_spark.oracle import build_local_fast
-
+def _assert_kernel_matches_oracle():
+    """Every case of the fused finish's kernel equals build_oracle EXACTLY —
+    every row, every split, every tie — across strategies, coord types,
+    depth offsets, leaf sizes, and adversarial inputs (duplicates,
+    all-equal, tiny n). The kernel returns rows in kd order, the oracle in
+    input order."""
     rng = np.random.default_rng(7)
     cases = [
         (rng.uniform(-180, 180, n), rng.uniform(-85, 85, n))
@@ -141,23 +142,45 @@ def test_build_local_fast_bit_identical_to_oracle():
                             x, y, max_depth=12, strategy=strat,
                             depth_offset=off, min_split=ms, coord_dtype=dt,
                         )
-                        b = build_local_fast(
+                        b = kernel.build_local_fast(
                             x, y, max_depth=12, strategy=strat,
                             depth_offset=off, min_split=ms, coord_dtype=dt,
                         )
                         ctx = (i, strat, dt, off, ms)
-                        assert np.array_equal(a.node, b.node), ctx
-                        assert np.array_equal(a.code, b.code), ctx
-                        assert np.array_equal(a.sort_key, b.sort_key), ctx
-                        assert np.array_equal(a.path_len, b.path_len), ctx
-                        assert set(a.splits) == set(b.splits), ctx
-                        for k in a.splits:
-                            sa, sb = a.splits[k], b.splits[k]
-                            assert (
-                                sa.value, sa.n_left, sa.n_right, sa.depth,
-                                sa.axis, sa.left_child, sa.right_child,
-                            ) == (
-                                sb.value, sb.n_left, sb.n_right, sb.depth,
-                                sb.axis, sb.left_child, sb.right_child,
-                            ), (ctx, k)
-                        assert np.array_equal(a.kd_order(), b.kd_perm), ctx
+                        kd = a.kd_order()
+                        assert np.array_equal(kd, b.perm), ctx
+                        assert np.array_equal(a.node[kd], b.node), ctx
+                        assert np.array_equal(a.path_len[kd], b.path_len), ctx
+                        assert np.array_equal(np.asarray(x, dt)[kd], b.x), ctx
+                        assert np.array_equal(np.asarray(y, dt)[kd], b.y), ctx
+                        assert {r[0] for r in b.splits} == set(a.splits), ctx
+                        for nid, depth, axis, value, nl, nr in b.splits:
+                            sa = a.splits[nid]
+                            assert sa.depth == depth, (ctx, nid)
+                            assert sa.axis == axis, (ctx, nid)
+                            assert sa.value == value, (ctx, nid)
+                            assert sa.n_left == nl, (ctx, nid)
+                            assert sa.n_right == nr, (ctx, nid)
+
+
+def test_build_local_fast_bit_identical_to_oracle():
+    """The fused finish's hot path (O(n·depth) in-place partition build)
+    must reproduce build_oracle EXACTLY."""
+    _assert_kernel_matches_oracle()
+
+
+def test_kernel_split_value_is_checked_independently(monkeypatch):
+    """A one-ulp fault in the kernel's split_value fails the comparison:
+    the oracle computes its split values with code of its own."""
+    from tests import oracle
+
+    real = kernel.split_value
+    assert oracle.split_value.__code__ is not real.__code__
+    monkeypatch.setattr(
+        kernel, "split_value",
+        lambda values, strategy: float(
+            np.nextafter(real(values, strategy), np.inf)
+        ),
+    )
+    with pytest.raises(AssertionError):
+        _assert_kernel_matches_oracle()

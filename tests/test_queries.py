@@ -16,7 +16,7 @@ from linear_kdtree_spark.operators.spatial_join import (
     spatial_join_polygons,
 )
 from linear_kdtree_spark.operators.tile import assign_tiles_lkt, assign_tiles_morton
-from linear_kdtree_spark.oracle import brute_knn, point_in_polygon
+from tests.oracle import brute_knn, point_in_polygon
 
 BOUNDS = (0.0, 0.0, 100.0, 100.0)
 

@@ -138,7 +138,7 @@ def test_cli_roundtrip(spark, tmp_path):
 
     # kNN through a RELOADED index (leaf table round-trip) must equal
     # the numpy brute force over the extracted points
-    from linear_kdtree_spark.oracle import brute_knn
+    from tests.oracle import brute_knn
 
     ref = spark.read.parquet(pts_path).toPandas()
     keys, px, py = (ref[c].to_numpy() for c in ("key", "x", "y"))

@@ -151,6 +151,7 @@ def test_ship_package_zip_contents_and_master_parse(tmp_path):
         names = z.namelist()
     assert "linear_kdtree_spark/session.py" in names
     assert "linear_kdtree_spark/operators/build.py" in names
+    assert "linear_kdtree_spark/operators/kernel.py" in names
     assert all(n.startswith("linear_kdtree_spark/") for n in names)
     # idempotent per context
     S._ship_package(fake)
