@@ -61,7 +61,8 @@ def cmd_build(args) -> int:
     cat = TableCatalog(spark, args.output)
     save_index(cat, idx)
     n = cat.read("lkt_points").count()
-    print(json.dumps({"built_points": n, "splits": idx.splits.count()}))
+    n_splits = len(idx.tree.splits["node_id"])
+    print(json.dumps({"built_points": n, "splits": n_splits}))
     return 0
 
 

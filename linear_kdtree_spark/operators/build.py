@@ -52,11 +52,10 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from linear_kdtree_spark.functions.morton import MAX_DEPTH, with_derived_cols
 from linear_kdtree_spark.operators.tree import (
-    LEAF_COLUMNS, SplitTree, leaf_stats, node_depth,
+    LEAF_COLUMNS, SplitTree, leaf_stats, node_depth, node_interval,
 )
 from linear_kdtree_spark.session import local_frame, memo
 
@@ -97,28 +96,15 @@ def _lookup(spark, df: DataFrame, pairs: list, name: str, dtype: str) -> DataFra
     return df.join(F.broadcast(table), "node", "left")
 
 
-SPLITS_SCHEMA = T.StructType(
-    [
-        T.StructField("node_id", T.LongType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("axis", T.IntegerType(), False),
-        T.StructField("value", T.DoubleType(), False),
-        T.StructField("n_left", T.LongType(), False),
-        T.StructField("n_right", T.LongType(), False),
-        T.StructField("left_child", T.LongType(), False),
-        T.StructField("right_child", T.LongType(), False),
-    ]
-)
-
-
 @dataclass
 class LktIndex:
     """The complete index — Spark analogue of ``linear_kdtree`` (lkt.h:25-32):
     the kd-ordered point DataFrame (``code`` + ``sort_key`` columns in place
-    of the reference's parallel ``morton_codes`` array, lkt.h:31), the flat
-    heap-ordered split DataFrame (analogue of ``fixlentree``,
-    fixlentree.hh:20-81), and the broadcastable driver-side tree, which
-    also carries the index's ``max_depth`` and ``coord_type``.
+    of the reference's parallel ``morton_codes`` array, lkt.h:31) and the
+    broadcastable driver-side tree: its heap-ordered split table (analogue
+    of ``fixlentree``, fixlentree.hh:20-81), its leaf table, ``max_depth``
+    and ``coord_type``. :attr:`splits` is a DataFrame view of the split
+    table, not a second copy.
 
     Invariant: ``tree.leaves`` (the leaf table: count and data bbox per
     non-empty leaf) describes exactly ``points``, and every query cover is
@@ -126,9 +112,14 @@ class LktIndex:
     no current path does (streaming ingest rebuilds the whole index)."""
 
     points: DataFrame  # key, x, y, node, path_len, code, sort_key
-    splits: DataFrame
     tree: SplitTree
     lineage: list = field(default_factory=list)
+
+    @property
+    def splits(self) -> DataFrame:
+        """The tree's split table as a DataFrame of ``SPLITS_SCHEMA``
+        (:meth:`SplitTree.split_frame`)."""
+        return self.tree.split_frame(self.points.sparkSession)
 
 
 def _apply_level(spark, df: DataFrame, axis: str, splittable: list) -> DataFrame:
@@ -269,7 +260,11 @@ def lkt_build(
     (join them back by ``key``). Returns an :class:`LktIndex` whose
     ``points`` partitions are contiguous ``sort_key`` ranges in partition
     order, each in ``(sort_key, key)`` order — the physical kd order of
-    the reference's in-place array, persisted and counted.
+    the reference's in-place array, persisted and counted. Its ``tree``
+    holds the split table (one ``(node_id, depth, axis, value, n_left,
+    n_right)`` row per split, from the stats scans and the fused pass's
+    kernel rows) and the leaf table; ``splits`` is a DataFrame view of
+    the split table.
     """
     spark = points.sparkSession
     if checkpoint_dir:
@@ -279,7 +274,9 @@ def lkt_build(
         local_threshold = 0
 
     state = _load_manifest(checkpoint_dir) if checkpoint_dir else None
-    split_rows: list[dict] = []
+    # (node_id, depth, axis, value) of each distributed split; its child
+    # counts are known only once the children are aggregated
+    split_rows: list = []
     lineage: list[dict] = []
     # node → (count, xmin, xmax, ymin, ymax) of every node a stats scan
     # saw; the ones that never split are rows of the leaf table
@@ -383,14 +380,7 @@ def lkt_build(
                 n_deferred_here += 1
                 continue
             splittable.append((int(r["node"]), float(r["sv"])))
-            split_rows.append(
-                {
-                    "node_id": int(r["node"]),
-                    "depth": depth,
-                    "axis": depth % 2,
-                    "value": float(r["sv"]),
-                }
-            )
+            split_rows.append((int(r["node"]), depth, depth % 2, float(r["sv"])))
         lineage.append(
             {
                 "depth": depth,
@@ -436,12 +426,7 @@ def lkt_build(
     # counts. MUST run before the fused finish: uncounted final-level
     # children are leaves the fused routing would otherwise silently drop
     # (its route table is built from node_stats).
-    unpatched = [r for r in split_rows if "n_left" not in r]
-    missing = [
-        r["node_id"]
-        for r in unpatched
-        if 2 * r["node_id"] + 1 not in node_stats
-    ]
+    missing = [n for n, *_ in split_rows if 2 * n + 1 not in node_stats]
     if missing:
         lo = min((1 << (node_depth(m) + 1)) - 1 for m in missing)
         for r in _group_rows(leaf_stats, lo):
@@ -449,7 +434,16 @@ def lkt_build(
                 int(r["count"]), r["xmin"], r["xmax"], r["ymin"], r["ymax"],
             )
 
-    split_ids = {r["node_id"] for r in split_rows}
+    # every child of a distributed split is now counted (a split, a leaf
+    # or a deferred subtree root); the fused finish adds no node_stats
+    def count(n):
+        return node_stats.get(n, (0,))[0]
+
+    split_rows = [
+        (n, d, a, v, count(2 * n + 1), count(2 * n + 2))
+        for n, d, a, v in split_rows
+    ]
+    split_ids = {r[0] for r in split_rows}
     leaf_rows = [
         (n, *st) for n, st in node_stats.items()
         if n not in split_ids and n not in deferred
@@ -461,8 +455,8 @@ def lkt_build(
             spark, pts, max_depth, strategy, min_split, coord_type,
             num_partitions, counts, split_ids, deferred,
         )
-        split_rows.extend(local_split_rows)
-        leaf_rows.extend(local_leaf_rows)
+        split_rows += local_split_rows
+        leaf_rows += local_leaf_rows
         sizes = [counts[g] for g in deferred]
         lineage.append(
             {
@@ -479,22 +473,7 @@ def lkt_build(
             }
         )
 
-    for r in unpatched:
-        r["n_left"] = node_stats.get(2 * r["node_id"] + 1, (0,))[0]
-        r["n_right"] = node_stats.get(2 * r["node_id"] + 2, (0,))[0]
-
     tree = SplitTree.from_rows(split_rows, leaf_rows, max_depth, coord_type)
-    splits_df = local_frame(
-        spark,
-        [
-            (
-                r["node_id"], r["depth"], r["axis"], r["value"],
-                r["n_left"], r["n_right"], r["left_child"], r["right_child"],
-            )
-            for r in tree.to_rows()
-        ],
-        SPLITS_SCHEMA,
-    )
 
     # the fused finish already emitted, materialized, and cached the FINAL
     # kd-ordered 7-column table in one pass
@@ -512,26 +491,7 @@ def lkt_build(
     # dead cache copies (measured 86 s → 236 s degradation before this)
     for c in cached:
         c.unpersist()
-    return LktIndex(
-        points=out,
-        splits=splits_df,
-        tree=tree,
-        lineage=lineage,
-    )
-
-
-def _node_prefix(g: int, max_depth: int) -> tuple[int, int, int, int]:
-    """(path_len, code, sk, sort_key) of heap node ``g`` — the pure-int
-    prefix constants of its subtree (same bit semantics as
-    functions/morton.with_derived_cols, unit-tested equal)."""
-    p = g + 1
-    plen = p.bit_length() - 1
-    sk = p - (1 << plen)
-    code = 0
-    for i in range(plen):
-        b = (p >> (plen - 1 - i)) & 1  # 1 ⇔ went right at depth i
-        code |= (1 - b) << i
-    return plen, code, sk, sk << (max_depth - plen)
+    return LktIndex(points=out, tree=tree, lineage=lineage)
 
 
 def _global_node(g, local, path_len):
@@ -579,7 +539,7 @@ def _verified_tokens(spark, n_parts: int):
 def _local_finish_fused(
     spark, pts, max_depth, strategy, min_split, coord_type,
     num_partitions, node_counts, split_ids, deferred,
-) -> tuple[DataFrame, list[dict], list[tuple]]:
+) -> tuple[DataFrame, list[tuple], list[tuple]]:
     """Phase 2 of the hybrid build, fused with the terminal kd ordering —
     ONE shuffle and ONE pass from the loop state to the final, materialized,
     kd-ordered index table:
@@ -635,7 +595,7 @@ def _local_finish_fused(
         int(g): int(c) for g, c in node_counts.items() if g not in split_ids
     }
     total = sum(live.values())
-    ordered = sorted(live, key=lambda g: _node_prefix(g, max_depth)[3])
+    ordered = sorted(live, key=lambda g: node_interval(g, max_depth)[0])
     # optimal CONTIGUOUS packing (bins stay sort_key ranges — parquet
     # min-max pruning on sort_key survives): binary-search the smallest
     # max-bin-sum B admitting <= n_parts greedy chunks. The round-3
@@ -682,7 +642,7 @@ def _local_finish_fused(
             .repartition(n_parts, "_tok")
             .drop("_tok")
         )
-    else:  # pragma: no cover - JVM partitioning changed; keep correctness
+    else:  # JVM partitioning changed; keep correctness
         src = (
             with_derived_cols(base, max_depth)
             .repartitionByRange(n_parts, "sort_key")
@@ -717,13 +677,13 @@ def _local_finish_fused(
         edges = np.append(starts, len(keys))
         groups = sorted(
             range(len(uniq)),
-            key=lambda i: _node_prefix(int(uniq[i]), max_depth)[3],
+            key=lambda i: node_interval(int(uniq[i]), max_depth)[0],
         )
         done = []
         for gi in groups:
             g = int(uniq[gi])
             s, e = edges[gi], edges[gi + 1]
-            plen_g, code_g, sk_g, _ = _node_prefix(g, max_depth)
+            plen_g = node_depth(g)
             if g not in deferred:
                 # a leaf the distributed phase already DECIDED (too small
                 # or a degenerate split there) — honoring that decision
@@ -762,15 +722,8 @@ def _local_finish_fused(
                 copy=False,
             )
             srows = [
-                {
-                    "node_id": _global_node(g, nid, depth),
-                    "depth": plen_g + depth,
-                    "axis": axis,
-                    "value": value,
-                    "n_left": n_left,
-                    "n_right": n_right,
-                }
-                for nid, depth, axis, value, n_left, n_right in res.splits
+                (_global_node(g, nid, depth), plen_g + depth, *rest)
+                for nid, depth, *rest in res.splits
             ]
             lv = res.leaves
             lrows = list(zip(

@@ -33,14 +33,19 @@ from linear_kdtree_spark.functions.morton import MAX_DEPTH
 from linear_kdtree_spark.session import arrow_table, local_frame
 
 
+def bucket_shift(mean_len: float, max_depth: int = MAX_DEPTH) -> int:
+    """The bucket width 2^shift at which an interval of the mean length
+    ``mean_len`` covers ≲ 4 buckets."""
+    return min(max(0, int(mean_len / 4).bit_length() - 1), max_depth)
+
+
 def choose_shift(intervals: list[tuple], max_depth: int = MAX_DEPTH) -> int:
-    """Pick the bucket width 2^shift so the mean interval covers ≲ 4
-    buckets (intervals: anything with [-2] = lo and [-1] = hi)."""
+    """:func:`bucket_shift` for ``intervals`` (anything with [-2] = lo and
+    [-1] = hi)."""
     if not intervals:
         return max_depth
     mean_len = sum(hi - lo for *_, lo, hi in intervals) / len(intervals)
-    shift = max(0, int(mean_len / 4).bit_length() - 1)
-    return min(shift, max_depth)
+    return bucket_shift(mean_len, max_depth)
 
 
 BROADCAST_ROW_CAP = 200_000

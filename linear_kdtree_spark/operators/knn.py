@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from linear_kdtree_spark.functions.geometry import dist2
 from linear_kdtree_spark.operators.build import LktIndex
-from linear_kdtree_spark.operators.interval_join import bucket_join
+from linear_kdtree_spark.operators.interval_join import bucket_join, bucket_shift
 from linear_kdtree_spark.operators.tree import circle_cover, knn_seed
 from linear_kdtree_spark.session import local_frame
 
@@ -107,10 +107,8 @@ def knn_batch(
     k_eff = min(k, total)
     md = tree.max_depth
     n_leaves = len(tree.leaves["node"])
-    # bucket width: mean leaf interval spans ≲ 4 buckets (same rule as
-    # operators/interval_join.choose_shift, computed from the tree alone)
-    mean_len = (1 << md) / n_leaves
-    shift = min(max(0, int(mean_len / 4).bit_length() - 1), md)
+    # bucket width from the tree alone: the leaves tile the key space
+    shift = bucket_shift((1 << md) / n_leaves, md)
     chunk = max(1, PLAN_CELLS // n_leaves)
     out_schema = "query_id long, qx double, qy double, r2 double, lo long, hi long"
 

@@ -11,7 +11,10 @@ Differences from the reference, by design (SURVEY.md §1.2, §4.4):
 - each node carries its left/right subtree point counts (reference keeps
   only the partition index, lkt.h:21-24) for per-partition lineage.
 
-Beside the splits the tree holds one **leaf table**: a row per non-empty
+The splits are one **split table**: a numpy array per
+:data:`SPLIT_COLUMNS` name, a row per split node, sorted by heap id; its
+one DataFrame form is :meth:`SplitTree.split_frame`. Beside it the tree
+holds one **leaf table**: a row per non-empty
 leaf with its ``sort_key`` interval ``[lo, hi)``, point count and exact
 data bbox, recorded by the build at no extra job. In the linear layout
 every subtree is one contiguous ``sort_key`` interval (SURVEY.md §1.3), so
@@ -27,9 +30,8 @@ data bbox.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
+from pyspark.sql import types as T
 
 from linear_kdtree_spark.functions.morton import MAX_DEPTH
 
@@ -54,11 +56,44 @@ def node_interval(node_id: int, max_depth: int = MAX_DEPTH) -> tuple[int, int]:
     return lo, hi
 
 
+SPLIT_COLUMNS = ("node_id", "depth", "axis", "value", "n_left", "n_right")
+# the split table's DataFrame form adds each node's children: the child's
+# heap id where that child is a split node, else -1
+SPLITS_SCHEMA = T.StructType(
+    [
+        T.StructField("node_id", T.LongType(), False),
+        T.StructField("depth", T.IntegerType(), False),
+        T.StructField("axis", T.IntegerType(), False),
+        T.StructField("value", T.DoubleType(), False),
+        T.StructField("n_left", T.LongType(), False),
+        T.StructField("n_right", T.LongType(), False),
+        T.StructField("left_child", T.LongType(), False),
+        T.StructField("right_child", T.LongType(), False),
+    ]
+)
 LEAF_COLUMNS = ("node", "lo", "hi", "count", "xmin", "xmax", "ymin", "ymax")
 LEAF_SCHEMA = (
     "node long, lo long, hi long, count long, "
     "xmin double, xmax double, ymin double, ymax double"
 )
+
+
+def _sorted(t: dict, columns: tuple, by: str) -> dict[str, np.ndarray]:
+    """``t``'s ``columns``, each reordered by ascending ``t[by]``."""
+    order = np.argsort(t[by], kind="stable")
+    return {c: t[c][order] for c in columns}
+
+
+def split_table(rows) -> dict[str, np.ndarray]:
+    """The split table from rows in :data:`SPLIT_COLUMNS` order, one per
+    split node: a numpy array per column, sorted by ``node_id`` — the
+    analogue of the reference's flat node array (fixlentree.hh:20-81)."""
+    cols = list(zip(*rows)) or [()] * len(SPLIT_COLUMNS)
+    t = {
+        c: np.array(v, dtype=np.float64 if c == "value" else np.int64)
+        for c, v in zip(SPLIT_COLUMNS, cols)
+    }
+    return _sorted(t, SPLIT_COLUMNS, "node_id")
 
 
 def leaf_table(rows, max_depth: int = MAX_DEPTH) -> dict[str, np.ndarray]:
@@ -76,8 +111,23 @@ def leaf_table(rows, max_depth: int = MAX_DEPTH) -> dict[str, np.ndarray]:
     }
     for c, v in zip(LEAF_COLUMNS[4:], cols[2:]):
         t[c] = np.array(v, dtype=np.float64)
-    order = np.argsort(lo, kind="stable")
-    return {c: t[c][order] for c in LEAF_COLUMNS}
+    return _sorted(t, LEAF_COLUMNS, "lo")
+
+
+def _child_pos(ids: np.ndarray, side: int) -> np.ndarray:
+    """Position in the sorted ``ids`` of each node's child ``2j + side``
+    (1 left, 2 right), or -1 where that child is not in ``ids``."""
+    child = 2 * ids + side
+    pos = np.searchsorted(ids, child)
+    # the -1 sentinel past the end never equals a child id (≥ 1)
+    return np.where(np.append(ids, -1)[pos] == child, pos, -1)
+
+
+def _frame(spark, cols: list, schema):
+    """Equal-length numpy columns as a DataFrame of ``schema``."""
+    from linear_kdtree_spark.session import local_frame
+
+    return local_frame(spark, list(zip(*(c.tolist() for c in cols))), schema)
 
 
 def leaf_stats(points):
@@ -147,28 +197,20 @@ def circle_cover(qx: np.ndarray, qy: np.ndarray, r2: np.ndarray, L: dict):
     return _leaf_runs(dx * dx + dy * dy <= r2[:, None], L)
 
 
-@dataclass
-class TreeNode:
-    node_id: int
-    depth: int
-    axis: int  # 0 = x, 1 = y
-    value: float
-    n_left: int
-    n_right: int
-
-
 class SplitTree:
-    """Immutable driver-side kd split tree (for labelling new points) and
-    its leaf table (for planning every query cover).
+    """Immutable driver-side kd tree: the split table (for labelling new
+    points) and the leaf table (for planning every query cover).
 
     It carries the two parameters that define the index's key space and
     comparisons: ``max_depth`` (``sort_key`` spans ``2**max_depth``) and
     ``coord_type`` ('float' or 'double', the type the build cast the
     coordinates to before comparing them with the splits)."""
 
-    def __init__(self, nodes: dict[int, TreeNode], leaves: dict[str, np.ndarray],
+    def __init__(self, splits: dict[str, np.ndarray],
+                 leaves: dict[str, np.ndarray],
                  max_depth: int = MAX_DEPTH, coord_type: str = "float"):
-        self.nodes = nodes
+        # one row per split node (see split_table)
+        self.splits = splits
         self.max_depth = max_depth
         self.coord_type = coord_type
         # one row per non-empty leaf (see leaf_table); it describes exactly
@@ -182,69 +224,51 @@ class SplitTree:
     @classmethod
     def from_rows(cls, rows, leaf_rows, max_depth: int,
                   coord_type: str) -> "SplitTree":
-        nodes = {
-            int(r["node_id"]): TreeNode(
-                node_id=int(r["node_id"]),
-                depth=int(r["depth"]),
-                axis=int(r["axis"]),
-                value=float(r["value"]),
-                n_left=int(r["n_left"]),
-                n_right=int(r["n_right"]),
-            )
-            for r in rows
-        }
-        return cls(nodes, leaf_table(leaf_rows, max_depth), max_depth, coord_type)
+        """A tree from split rows in :data:`SPLIT_COLUMNS` order and leaf
+        rows as :func:`leaf_table` reads them."""
+        return cls(split_table(rows), leaf_table(leaf_rows, max_depth),
+                   max_depth, coord_type)
 
     @classmethod
     def from_frames(cls, splits, leaves, max_depth: int,
                     coord_type: str) -> "SplitTree":
         """A saved tree from its splits table and its leaf table
         (``sources/catalog.load_index``)."""
-        cols = ("node", "count", "xmin", "xmax", "ymin", "ymax")
         return cls.from_rows(
-            [r.asDict() for r in splits.collect()],
-            [tuple(r) for r in leaves.select(*cols).collect()],
+            splits.select(*SPLIT_COLUMNS).collect(),
+            leaves.select("node", *LEAF_COLUMNS[3:]).collect(),
             max_depth, coord_type,
         )
+
+    def split_frame(self, spark):
+        """The split table as a DataFrame of :data:`SPLITS_SCHEMA` — the
+        one form an index saves it in (read back by :meth:`from_frames`)."""
+        S = self.splits
+        ids = S["node_id"]
+        children = [
+            np.where(_child_pos(ids, side) >= 0, 2 * ids + side, -1)
+            for side in (1, 2)
+        ]
+        return _frame(spark, [S[c] for c in SPLIT_COLUMNS] + children,
+                      SPLITS_SCHEMA)
 
     def leaf_frame(self, spark):
         """The leaf table as a DataFrame of :data:`LEAF_SCHEMA` — the one
         form an index saves it in (read back by :meth:`from_frames`)."""
-        from linear_kdtree_spark.session import local_frame
-
-        cols = [self.leaves[c].tolist() for c in LEAF_COLUMNS]
-        return local_frame(spark, list(zip(*cols)), LEAF_SCHEMA)
-
-    def to_rows(self) -> list[dict]:
-        out = []
-        for nid in sorted(self.nodes):
-            s = self.nodes[nid]
-            out.append(
-                {
-                    "node_id": nid,
-                    "depth": s.depth,
-                    "axis": s.axis,
-                    "value": s.value,
-                    "n_left": s.n_left,
-                    "n_right": s.n_right,
-                    "left_child": 2 * nid + 1 if 2 * nid + 1 in self.nodes else -1,
-                    "right_child": 2 * nid + 2 if 2 * nid + 2 in self.nodes else -1,
-                }
-            )
-        return out
+        return _frame(spark, [self.leaves[c] for c in LEAF_COLUMNS],
+                      LEAF_SCHEMA)
 
     def to_arrays(self) -> dict[str, np.ndarray]:
         """Positional arrays for the vectorized code UDF: for sorted node
         ids, ``(ids, axis, value, left_pos, right_pos)`` where ``*_pos`` is
         the child's position in the same arrays or -1 (the broadcastable
         analogue of the reference's flat node array, fixlentree.hh:25-30)."""
-        ids = np.array(sorted(self.nodes), dtype=np.int64)
-        pos = {int(n): i for i, n in enumerate(ids)}
-        axis = np.array([self.nodes[n].axis for n in ids], dtype=np.int64)
-        value = np.array([self.nodes[n].value for n in ids], dtype=np.float64)
-        left = np.array([pos.get(2 * n + 1, -1) for n in ids], dtype=np.int64)
-        right = np.array([pos.get(2 * n + 2, -1) for n in ids], dtype=np.int64)
-        return {"ids": ids, "axis": axis, "value": value, "left": left, "right": right}
+        S = self.splits
+        ids = S["node_id"]
+        return {
+            "ids": ids, "axis": S["axis"], "value": S["value"],
+            "left": _child_pos(ids, 1), "right": _child_pos(ids, 2),
+        }
 
     def to_query_arrays(self) -> dict[str, np.ndarray]:
         """The leaf table's arrays — all the batch-kNN planner needs inside
@@ -273,12 +297,15 @@ class SplitTree:
         the same cast to ``coord_type`` the build applies."""
         if self.coord_type == "float":
             x, y = float(np.float32(x)), float(np.float32(y))
+        S = self.splits
+        ids = S["node_id"]
         j = 0
-        while j in self.nodes:
-            s = self.nodes[j]
-            v = x if s.axis == 0 else y
-            j = 2 * j + 1 if v < s.value else 2 * j + 2
-        return j
+        while True:
+            i = int(np.searchsorted(ids, j))
+            if i == len(ids) or ids[i] != j:
+                return j
+            v = x if S["axis"][i] == 0 else y
+            j = 2 * j + 1 if v < S["value"][i] else 2 * j + 2
 
     def data_bbox(self, node_id: int) -> tuple[float, float, float, float] | None:
         """Exact (xmin, xmax, ymin, ymax) of the points under ``node_id``:

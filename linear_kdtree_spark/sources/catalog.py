@@ -4,7 +4,7 @@ parquet + JSON-manifest emulation with the same API shape
 
 This module holds the engine's one on-disk index format: :func:`save_index`
 writes an index as tables (SURVEY.md §1.2) — ``lkt_points`` (kd-ordered,
-code + sort_key columns), ``lkt_splits`` (heap-ordered flat tree),
+code + sort_key columns), ``lkt_splits`` (heap-ordered flat tree, ``SplitTree.split_frame``),
 ``lkt_leaves`` (the leaf table every query cover is planned from,
 ``SplitTree.leaf_frame``), ``lkt_meta`` (``max_depth`` and ``coord_type``,
 without which the keys and splits cannot be read), ``lkt_build_log``
@@ -152,7 +152,7 @@ def save_index(catalog: TableCatalog, index, prefix: str = "lkt") -> None:
 
     tree = index.tree
     catalog.write(f"{prefix}_points", index.points)
-    catalog.write(f"{prefix}_splits", index.splits)
+    catalog.write(f"{prefix}_splits", tree.split_frame(catalog.spark))
     catalog.write(f"{prefix}_leaves", tree.leaf_frame(catalog.spark))
     catalog.write(
         f"{prefix}_meta",
@@ -174,11 +174,8 @@ def load_index(catalog: TableCatalog, prefix: str = "lkt"):
     from linear_kdtree_spark.operators.tree import SplitTree
 
     meta = catalog.read(f"{prefix}_meta").first()
-    splits = catalog.read(f"{prefix}_splits")
     tree = SplitTree.from_frames(
-        splits, catalog.read(f"{prefix}_leaves"),
+        catalog.read(f"{prefix}_splits"), catalog.read(f"{prefix}_leaves"),
         meta["max_depth"], meta["coord_type"],
     )
-    return LktIndex(
-        points=catalog.read(f"{prefix}_points"), splits=splits, tree=tree
-    )
+    return LktIndex(catalog.read(f"{prefix}_points"), tree)

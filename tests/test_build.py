@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from linear_kdtree_spark.functions.morton import with_derived_cols
 from linear_kdtree_spark.operators.build import lkt_build
 from linear_kdtree_spark.operators.codes import attach_labels
+from linear_kdtree_spark.operators.tree import SPLITS_SCHEMA
 from tests.conftest import F3_EXPECTED, F3_POINTS, F3_SPLITS
 from tests.oracle import build_oracle, node_bits
 
@@ -72,6 +73,7 @@ def test_build_matches_oracle(spark, random_points, strategy, local_threshold):
     )
 
     # splits: node-for-node
+    assert idx.splits.schema == SPLITS_SCHEMA
     got = {r["node_id"]: r for r in idx.splits.collect()}
     assert set(got) == set(oracle.splits)
     for nid, s in oracle.splits.items():
@@ -82,6 +84,9 @@ def test_build_matches_oracle(spark, random_points, strategy, local_threshold):
         else:
             assert g["value"] == pytest.approx(s.value, rel=1e-12)
         assert (g["n_left"], g["n_right"]) == (s.n_left, s.n_right)
+        assert (g["left_child"], g["right_child"]) == (
+            s.left_child, s.right_child
+        )
 
     # points: row-for-row codes / nodes / sort keys
     rows = idx.points.select("key", "code", "node", "path_len", "sort_key").collect()
@@ -190,8 +195,6 @@ def test_aggregate_over_derived_cols(spark):
     """An aggregate directly over the three derived columns compiles and
     runs (the single-expression form failed codegen with IllegalAccessError
     in a generated hashAgg nested class) and sums to the pure-int values."""
-    from linear_kdtree_spark.operators.build import _node_prefix
-
     md = 24
     n = 5000
     d = with_derived_cols(spark.range(0, n).withColumnRenamed("id", "node"), md)
@@ -199,11 +202,8 @@ def test_aggregate_over_derived_cols(spark):
         F.sum("path_len").alias("p"), F.sum("code").alias("c"),
         F.sum("sort_key").alias("s"),
     ).collect()[0]
-    want = [_node_prefix(g, md) for g in range(n)]
-    assert (row.p, row.c, row.s) == (
-        sum(w[0] for w in want), sum(w[1] for w in want),
-        sum(w[3] for w in want),
-    )
+    want = [node_bits(g, md) for g in range(n)]
+    assert (row.p, row.c, row.s) == tuple(sum(w[i] for w in want) for i in range(3))
 
 
 @pytest.mark.parametrize("n_pairs", [5, 70])  # CASE chain, broadcast join

@@ -101,7 +101,8 @@ def test_save_index_leaf_table_roundtrip(spark, tmp_path):
     assert len(tree.leaves["node"]) > 1
     for c, want in idx.tree.leaves.items():
         assert np.array_equal(tree.leaves[c], want), c
-    assert tree.nodes == idx.tree.nodes
+    for c, want in idx.tree.splits.items():
+        assert np.array_equal(tree.splits[c], want), c
 
 
 def test_load_index_roundtrip(spark, tmp_path):
@@ -126,7 +127,8 @@ def test_load_index_roundtrip(spark, tmp_path):
     save_index(cat, idx, prefix="d")
     got = load_index(cat, prefix="d")
     assert (got.tree.max_depth, got.tree.coord_type) == (11, "double")
-    assert got.tree.nodes == idx.tree.nodes
+    for c, want in idx.tree.splits.items():
+        assert np.array_equal(got.tree.splits[c], want), c
     for c, want in idx.tree.leaves.items():
         assert np.array_equal(got.tree.leaves[c], want), c
 

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from linear_kdtree_spark.functions import h3
+from linear_kdtree_spark.functions import h3, h3_geom
 from linear_kdtree_spark.functions.h3_tables import (
     BASE_CELL_DATA,
     NUM_BASE_CELLS,
@@ -46,12 +46,17 @@ def test_published_example_cells():
 
 
 def test_scalar_vectorized_agree():
+    """The scalar wrapper gives the vectorized cell, and every cell's
+    centre, found by the independent inverse walk
+    (``h3_geom.cell_to_latlng``), maps back to that cell."""
     lat, lng = _sample(2000, seed=3)
     for res in (0, 1, 7, 15):
         vec = h3.latlng_to_cell(lat, lng, res)
         for idx in (0, 17, 999, 1999):
             assert vec[idx] == h3.latlng_to_cell_scalar(
                 float(lat[idx]), float(lng[idx]), res)
+        back = h3.latlng_to_cell(*h3_geom.cell_to_latlng(vec), res)
+        assert np.array_equal(back, vec), (res, int((back != vec).sum()))
 
 
 def test_global_cell_counts_exact():

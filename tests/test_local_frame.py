@@ -20,11 +20,11 @@ from pyspark.sql import functions as F
 
 import linear_kdtree_spark
 from linear_kdtree_spark.functions.murmur import partition_tokens, verify_tokens
-from linear_kdtree_spark.operators.build import SPLITS_SCHEMA, lkt_build
+from linear_kdtree_spark.operators.build import lkt_build
 from linear_kdtree_spark.operators.codes import attach_labels
 from linear_kdtree_spark.operators.knn import knn, knn_batch
 from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
-from linear_kdtree_spark.operators.tree import SplitTree
+from linear_kdtree_spark.operators.tree import SPLITS_SCHEMA, SplitTree
 from linear_kdtree_spark.session import _install_zip_stamps, local_frame, memo
 from tests.oracle import point_in_polygon
 
@@ -173,7 +173,7 @@ def test_memos_drop_stopped_sessions(spark, index):
     app = spark.sparkContext.applicationId
     stale = ("app-stopped-0000", "key")
     # a fresh tree over the same tables: its memo is empty
-    tree = SplitTree(index.tree.nodes, index.tree.leaves, index.tree.max_depth)
+    tree = SplitTree(index.tree.splits, index.tree.leaves, index.tree.max_depth)
     for store, call in (
         (build._TOKENS, lambda: build._verified_tokens(spark, 13)),
         (dedup._WIDTHS, lambda: dedup.widen_partitions(

@@ -110,6 +110,39 @@ def test_fused_build_plan_single_shuffle(spark):
     assert flat == sorted(flat)
 
 
+def test_fused_build_range_fallback(spark, monkeypatch):
+    """When the murmur tokens fail verification the fused pass routes its
+    subtrees with ``repartitionByRange(sort_key)`` instead, and builds the
+    same index: same points, splits and leaves, each partition one
+    contiguous ``sort_key`` range in ``(sort_key, key)`` order."""
+    import linear_kdtree_spark.operators.build as build
+
+    pts = _skewed_points(spark, 4000)
+    args = dict(max_depth=12, strategy="mean", leaf_size=16,
+                num_partitions=4, local_threshold=300)
+    want = lkt_build(pts, **args)
+    monkeypatch.setattr(build, "_verified_tokens", lambda spark, n: None)
+    got = lkt_build(pts, **args)
+
+    plan = got.points._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning(sort_key" in plan
+    assert "hashpartitioning(_tok" not in plan
+    assert sorted(map(tuple, got.points.collect())) == sorted(
+        map(tuple, want.points.collect())
+    )
+    for table in ("splits", "leaves"):
+        for c, v in getattr(want.tree, table).items():
+            assert np.array_equal(getattr(got.tree, table)[c], v), (table, c)
+    parts = [
+        [(r["sort_key"], r["key"]) for r in part]
+        for part in got.points.select("sort_key", "key").rdd.glom().collect()
+    ]
+    assert sum(1 for p in parts if p) > 1
+    # ascending across the partition sequence: each is one ordered range
+    flat = [v for p in parts for v in p]
+    assert flat == sorted(flat)
+
+
 def test_interval_join_matches_theta_join(spark):
     from linear_kdtree_spark.operators.interval_join import interval_join
 
