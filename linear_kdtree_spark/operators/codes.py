@@ -107,6 +107,5 @@ def attach_labels(
     # the UDF already knows each point's depth, so sort_key is two shifts —
     # the same expression the build's derived-column chain uses
     return out.withColumn(
-        "sort_key",
-        sort_key_from_path_len(F.col("node"), F.col("path_len"), tree.max_depth),
+        "sort_key", sort_key_from_path_len("node", "path_len", tree.max_depth)
     )

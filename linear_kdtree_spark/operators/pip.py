@@ -33,6 +33,42 @@ class Polygon:
         return min(xs), min(ys), max(xs), max(ys)
 
 
+# edges per polygon the convex refine tests in generated code; the rest of
+# a larger polygon's edges go through one interpreted forall
+UNROLL = 16
+
+
+def _left_of_edge(e: str) -> str:
+    """SQL: the point (x, y) lies strictly left of the CCW edge ``e``."""
+    return (f"{e}.dx * (CAST(y AS DOUBLE) - {e}.y1)"
+            f" - {e}.dy * (CAST(x AS DOUBLE) - {e}.x1) > 0.0D")
+
+
+def _convex_refine_sql(max_edges: int) -> str:
+    """SQL of the convex refine over the candidate columns ``x``, ``y`` and
+    ``edges`` (a polygon's CCW edges): the point is strictly left of every
+    edge. ``max_edges`` is the largest edge count of the call.
+
+    The half-plane test of the first ``M = min(max_edges, UNROLL)`` edges
+    is unrolled into plain expressions that whole-stage codegen compiles;
+    a higher-order ``forall`` over the edge array, the whole refine before,
+    runs interpreted on every candidate. Only a polygon with more than
+    ``M`` edges reaches the ``forall`` over the rest. The edges stay row
+    data, so the plan does not grow with the number of polygons.
+
+    Edge ``i`` is read with ``get(edges, i)``, which is NULL past the end,
+    never ``edges[i]``: subexpression elimination evaluates a repeated
+    ``edges[i]`` ahead of the ``size`` guard, and under ANSI mode that
+    raises ``INVALID_ARRAY_INDEX`` on a shorter polygon."""
+    m = min(max_edges, UNROLL)
+    terms = [f"(size(edges) <= {i} OR {_left_of_edge(f'get(edges, {i})')})"
+             for i in range(m)]
+    if max_edges > m:
+        terms.append(f"forall(slice(edges, {m + 1}, size(edges)), "
+                     f"e -> {_left_of_edge('e')})")
+    return " AND ".join(terms) or "true"
+
+
 def _pruned_candidates(index: LktIndex, polygons: list[Polygon]) -> DataFrame:
     """(poly_id, key, x, y) candidates from sort_key interval pruning —
     bucketed equi-join (operators/interval_join.py), not a nested loop."""
@@ -73,7 +109,8 @@ def point_in_polygons(
         # 4.8 M/local[32], identical output). Plan size stays independent
         # of |polygons| — the edge array is data, not codegen, exactly as
         # in the round-1 fix — and the replicated side only grows by ~64
-        # bytes/vertex per interval row.
+        # bytes/vertex per interval row. The refine's plan size is
+        # O(min(max vertices, UNROLL)) (_convex_refine_sql).
         rows = []
         for p in polygons:
             vs = ensure_ccw(p.vertices)
@@ -94,14 +131,8 @@ def point_in_polygons(
             "dx:double,dy:double>>, lo long, hi long",
             max_depth=index.tree.max_depth,
         )
-        xd, yd = F.col("x").cast("double"), F.col("y").cast("double")
-        # strict half-plane conjunction: inside ⇔ strictly left of every
-        # CCW edge
-        inside = F.forall(
-            F.col("edges"),
-            lambda e: e["dx"] * (yd - e["y1"]) - e["dy"] * (xd - e["x1"])
-            > F.lit(0.0),
-        )
+        max_edges = max((len(r[1]) for r in rows), default=0)
+        inside = F.expr(_convex_refine_sql(max_edges))
         return cand.filter(inside).select("poly_id", "key")
     cand = _pruned_candidates(index, polygons)
     udf = make_raycast_udf(

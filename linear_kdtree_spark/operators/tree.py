@@ -125,9 +125,9 @@ def _child_pos(ids: np.ndarray, side: int) -> np.ndarray:
 
 def _frame(spark, cols: list, schema):
     """Equal-length numpy columns as a DataFrame of ``schema``."""
-    from linear_kdtree_spark.session import local_frame
+    from linear_kdtree_spark.session import arrow_columns, local_frame
 
-    return local_frame(spark, list(zip(*(c.tolist() for c in cols))), schema)
+    return local_frame(spark, arrow_columns(cols, schema), schema)
 
 
 def leaf_stats(points):

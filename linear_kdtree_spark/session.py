@@ -53,6 +53,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark's DataFrame debugging captures the Python call site of
+        # every Column call: one F.shiftright(F.col(...)) then costs 16
+        # py4j round trips instead of 6, and an lkt_build of 20 k points
+        # 623 instead of 323. extra_conf can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
@@ -70,14 +75,20 @@ def arrow_table(rows: list[tuple], schema: str | StructType):
     ``pyarrow.Table``; ``schema`` is a DDL string or a ``StructType``.
     Nullability and nested types (``array<struct<...>>``) are kept, and an
     empty list gives an empty table of the same schema."""
+    schema = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    return arrow_columns(list(zip(*rows)) or [[]] * len(schema.fields), schema)
+
+
+def arrow_columns(cols: list, schema: str | StructType):
+    """Columns in ``schema`` field order (sequences or numpy arrays of one
+    length) as a typed ``pyarrow.Table``: :func:`arrow_table` without
+    the rows. A numpy column converts without passing through Python
+    objects."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = _parse_datatype_string(schema) if isinstance(schema, str) else schema
     arrow_schema = to_arrow_schema(schema)
-    if not rows:
-        return arrow_schema.empty_table()
-    cols = zip(*rows)
     return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,

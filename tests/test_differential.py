@@ -112,6 +112,104 @@ def test_convex_refine_equals_raycast(spark):
     assert len(a) > 50
 
 
+def _integer_ngon(cx, cy, r, m):
+    """A convex m-gon with integer vertices (CCW), so the midpoint of every
+    edge lies exactly on it in double arithmetic."""
+    ang = np.linspace(0.0, 2 * np.pi, m, endpoint=False)
+    verts = [(float(round(cx + r * np.cos(a))), float(round(cy + r * np.sin(a))))
+             for a in ang]
+    for i in range(m):  # strictly convex after rounding
+        (x0, y0), (x1, y1), (x2, y2) = (verts[(i + j) % m] for j in range(3))
+        assert (x1 - x0) * (y2 - y1) - (y1 - y0) * (x2 - x1) > 0
+    return verts
+
+
+def _half_plane_brute(px, py, verts):
+    """numpy: strictly left of every CCW edge (the convex refine's rule)."""
+    inside = np.ones(len(px), dtype=bool)
+    m = len(verts)
+    for i in range(m):
+        x1, y1 = verts[i]
+        x2, y2 = verts[(i + 1) % m]
+        inside &= (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1) > 0.0
+    return inside
+
+
+@pytest.fixture(scope="module")
+def mixed_polygons(spark):
+    """A triangle, a 16-gon and a 40-gon over one index whose points
+    include every vertex and every edge midpoint of the three polygons."""
+    from linear_kdtree_spark.operators.pip import Polygon
+
+    verts = {
+        1: [(100.0, 100.0), (700.0, 150.0), (300.0, 800.0)],
+        2: _integer_ngon(700, 2300, 400, 16),
+        3: _integer_ngon(2000, 800, 700, 40),
+    }
+    rng = np.random.default_rng(11)
+    xy = [rng.uniform(0, 3000, (6000, 2))]
+    boundary = []
+    for vs in verts.values():
+        a = np.asarray(vs)
+        boundary += [a, (a + np.roll(a, -1, axis=0)) / 2]
+    on_edge = np.concatenate(boundary)
+    xy = np.concatenate(xy + [on_edge])
+    n = len(xy)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"key": np.arange(n), "x": xy[:, 0], "y": xy[:, 1]})
+    )
+    idx = lkt_build(pts, max_depth=14, leaf_size=16, coord_type="double")
+    polys = [Polygon(pid, vs) for pid, vs in verts.items()]
+    return idx, polys, xy, n - len(on_edge)
+
+
+@pytest.mark.parametrize("unroll", [2, 16])
+def test_convex_refine_mixed_edge_counts(spark, mixed_polygons, monkeypatch,
+                                         unroll):
+    """Polygons of 3, 16 and 40 edges in one call: the unrolled edges plus
+    the forall over the rest (every polygon reaches it at unroll = 2, only
+    the 40-gon at 16) equal a numpy half-plane brute force, points on an
+    edge included (and excluded from the result), and equal the ray-cast
+    refine off the boundary. The ray cast's even-odd rule counts a point
+    on a left-hand edge as inside, so on-edge points are compared with
+    the brute force only."""
+    from linear_kdtree_spark.operators import pip
+    from linear_kdtree_spark.operators.pip import point_in_polygons
+
+    monkeypatch.setattr(pip, "UNROLL", unroll)
+    idx, polys, xy, n_interior = mixed_polygons
+    got = {tuple(r) for r in
+           point_in_polygons(idx, polys, exact="convex").collect()}
+    want = {
+        (p.poly_id, int(k))
+        for p in polys
+        for k in np.nonzero(_half_plane_brute(xy[:, 0], xy[:, 1], p.vertices))[0]
+    }
+    assert got == want
+    assert all(k < n_interior for _, k in got)  # no vertex or edge point
+    assert {pid for pid, _ in got} == {1, 2, 3}
+    raycast = {tuple(r) for r in
+               point_in_polygons(idx, polys, exact="raycast").collect()}
+    assert got == {(pid, k) for pid, k in raycast if k < n_interior}
+
+
+def test_convex_refine_runs_no_lambda(spark, mixed_polygons):
+    """Up to 16 edges per polygon the executed join condition has no
+    higher-order function: every half-plane test is generated code, not
+    an interpreted lambda on each candidate."""
+    from linear_kdtree_spark.operators.pip import point_in_polygons
+
+    idx, polys, _, _ = mixed_polygons
+    small = [p for p in polys if len(p.vertices) <= 16]
+    plan = point_in_polygons(idx, small, exact="convex")._jdf \
+        .queryExecution().executedPlan().toString()
+    assert "HashJoin" in plan
+    assert "lambdafunction" not in plan.lower()
+    wide = point_in_polygons(idx, polys, exact="convex")._jdf \
+        .queryExecution().executedPlan().toString()
+    assert "lambdafunction" in wide.lower()  # the 40-gon's tail
+
+
 def test_knn_batch_brute_force_configs(spark):
     from linear_kdtree_spark.operators.knn import knn_batch
     from tests.oracle import brute_knn

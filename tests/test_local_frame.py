@@ -86,6 +86,60 @@ def test_local_frame_keeps_nullability(spark):
     assert not any(f.nullable for f in got.schema.fields)
 
 
+def test_tree_frames_equal_row_frames(spark, index, monkeypatch):
+    """split_frame and leaf_frame hand local_frame the numpy columns as one
+    Arrow table; they equal the frames the same columns give as rows of
+    Python values, on a built tree and on an empty one."""
+    from linear_kdtree_spark.operators import tree as tree_mod
+
+    def row_frame(spark, cols, schema):
+        return local_frame(spark, list(zip(*(c.tolist() for c in cols))), schema)
+
+    empty = SplitTree.from_rows([], [], 16, "float")
+    for t in (index.tree, empty):
+        got = [t.split_frame(spark), t.leaf_frame(spark)]
+        with monkeypatch.context() as m:
+            m.setattr(tree_mod, "_frame", row_frame)
+            want = [t.split_frame(spark), t.leaf_frame(spark)]
+        for g, w in zip(got, want):
+            assert g.schema == w.schema
+            assert g.collect() == w.collect()
+    assert index.tree.split_frame(spark).count() == len(index.tree.splits["node_id"])
+
+
+def test_get_spark_turns_dataframe_debugging_off(spark, monkeypatch):
+    """get_spark turns PySpark's call-site capture off by default, and
+    extra_conf turns it back on. The conf is static, so the override is
+    checked on the builder get_spark configures, not on a second session."""
+    from linear_kdtree_spark import session
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def master(self, _):
+            return self
+
+        appName = master
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return self
+
+        sparkContext = property(lambda self: self)
+        setLogLevel = master
+
+    for extra, want in ((None, "false"), ({key: "true"}, "true")):
+        monkeypatch.setattr(session.SparkSession, "builder", Builder())
+        assert session.get_spark(master="local[1]", extra_conf=extra).conf[key] == want
+
+
 def test_library_plans_read_no_python_rdd(spark, index, monkeypatch):
     """PIP (convex and ray-cast), interval_join, knn over a list and the
     token check plan a LocalRelation and no LogicalRDD: none of them runs
