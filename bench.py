@@ -122,7 +122,7 @@ def run_suite(sf_dir: str, cpus: int, reps: int | None = None) -> dict:
         cx, cy, hw, hh = rect_params(nk)
         polys.append(Polygon(nk, [(cx - hw, cy - hh), (cx + hw, cy - hh),
                                   (cx + hw, cy + hh), (cx - hw, cy + hh)]))
-    timed("pip", lambda: point_in_polygons(idx, polys, exact="convex").count())
+    timed("pip", lambda: point_in_polygons(idx, polys).count())
 
     timed(
         "tile_raster",

@@ -111,7 +111,7 @@ def cmd_pip(args) -> int:
             polys.append(
                 Polygon(pid, [(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
             )
-    out = point_in_polygons(idx, polys, exact="convex")
+    out = point_in_polygons(idx, polys)
     out.write.mode("overwrite").parquet(args.output)
     print(json.dumps({"pip_rows": spark.read.parquet(args.output).count()}))
     return 0

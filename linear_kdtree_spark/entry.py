@@ -246,7 +246,8 @@ def q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pip_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-pruned point-in-polygon over nation-derived rectangles
-    (strict-inside, convex half-plane refine) → (poly_id, key)."""
+    (strict-inside; rectangles classify convex, so the half-plane
+    refine) → (poly_id, key)."""
     from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
 
     idx = _gate_index(spark, sf_dir)
@@ -259,7 +260,7 @@ def q_pip_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
             Polygon(nk, [(cx - hw, cy - hh), (cx + hw, cy - hh),
                          (cx + hw, cy + hh), (cx - hw, cy + hh)])
         )
-    return point_in_polygons(idx, polys, exact="convex")
+    return point_in_polygons(idx, polys)
 
 
 def hexagon_vertices(nationkey: int) -> list[tuple[float, float]]:
@@ -275,10 +276,10 @@ def hexagon_vertices(nationkey: int) -> list[tuple[float, float]]:
 
 
 def q_pip_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-pruned point-in-polygon over CONVEX HEXAGONS (strict
-    half-plane forall refine — the general-convex path, where pip_rect
-    only exercises axis-aligned rectangles) → (poly_id, key). Hash-exact:
-    the engine's broadcast edge-array cross products and the oracle's
+    """Index-pruned point-in-polygon over CONVEX HEXAGONS (they classify
+    convex: the strict half-plane refine on a general convex polygon,
+    where pip_rect only has axis-aligned rectangles) → (poly_id, key).
+    Hash-exact: the engine's edge-array cross products and the oracle's
     inline cross products compute identical IEEE expressions on identical
     exact-double vertices."""
     from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
@@ -289,7 +290,7 @@ def q_pip_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
         Polygon(int(r[0]), hexagon_vertices(int(r[0])))
         for r in spark.sql("SELECT n_nationkey FROM nation").collect()
     ]
-    return point_in_polygons(idx, polys, exact="convex")
+    return point_in_polygons(idx, polys)
 
 
 def pip_convex_oracle_sql(n_nations: int = 25) -> str:
@@ -330,11 +331,11 @@ def star_vertices(nationkey: int) -> list[tuple[float, float]]:
 
 def q_pip_concave(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-pruned point-in-polygon over CONCAVE star polygons — the
-    general simple-polygon path (Arrow-batched even-odd ray cast,
-    operators/pip.py exact='raycast'), which pip_rect/pip_convex do not
-    exercise. Hash-exact: the oracle recomputes the identical IEEE
-    crossing test (same literals, same divide) per edge →
-    (poly_id, key)."""
+    general simple-polygon path (stars classify non-convex, so the
+    Arrow-batched even-odd ray cast of operators/pip.refine), which
+    pip_rect/pip_convex do not exercise. Hash-exact: the oracle recomputes
+    the identical IEEE crossing test (same literals, same divide) per
+    edge, and no gate point lies on a star edge → (poly_id, key)."""
     from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
 
     idx = _gate_index(spark, sf_dir)
@@ -343,7 +344,7 @@ def q_pip_concave(spark: SparkSession, sf_dir: str) -> DataFrame:
         Polygon(int(r[0]), star_vertices(int(r[0])))
         for r in spark.sql("SELECT n_nationkey FROM nation").collect()
     ]
-    return point_in_polygons(idx, polys, exact="raycast")
+    return point_in_polygons(idx, polys)
 
 
 def pip_concave_oracle_sql(n_nations: int = 25) -> str:

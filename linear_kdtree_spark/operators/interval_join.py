@@ -93,12 +93,23 @@ def bucket_join(
         & (key >= ivals["lo"])
         & (key < ivals["hi"])
     )
-    if hint == "broadcast":
-        ivals = F.broadcast(ivals)
-    elif hint:
+    if hint:
         ivals = ivals.hint(hint)
     joined = points.join(ivals, on)
     return joined.drop("bucket", "lo", "hi")
+
+
+def broadcast_hint(spark, table, replicated: int) -> str:
+    """``"broadcast"`` for a driver-side join side of ``replicated`` rows of
+    ``table``'s mean Arrow width while they are at most BROADCAST_ROW_CAP
+    and fit ``spark.sql.autoBroadcastJoinThreshold``, else ``"merge"``.
+    Both are hints: Catalyst sizes a LocalRelation by default widths (one
+    element per array) and would broadcast a wide side it thinks tiny."""
+    payload = table.nbytes / max(table.num_rows, 1) * replicated
+    conf = spark._jsparkSession.sessionState().conf()
+    fits = (replicated <= BROADCAST_ROW_CAP
+            and payload <= conf.autoBroadcastJoinThreshold())
+    return "broadcast" if fits else "merge"
 
 
 def interval_join(
@@ -107,35 +118,20 @@ def interval_join(
     interval_schema: str,
     key_col: str = "sort_key",
     max_depth: int = MAX_DEPTH,
-    broadcast: bool | None = None,
 ) -> DataFrame:
-    """:func:`bucket_join` for a driver-side list of interval rows.
+    """:func:`bucket_join` for a driver-side list of interval rows, with
+    the join hint of :func:`broadcast_hint` over the exploded side.
 
     intervals: list of tuples whose LAST TWO fields are (lo, hi) half-open
     sort_key bounds; interval_schema describes the full tuple, e.g.
-    ``"poly_id long, lo long, hi long"``.
-
-    ``broadcast=None`` decides from the exploded side: a broadcast hint
-    while it is at most ``BROADCAST_ROW_CAP`` rows and its payload (Arrow
-    bytes per row × replicated rows) fits the session's
-    ``spark.sql.autoBroadcastJoinThreshold``, else a sort-merge hint. Both
-    are hints because Catalyst sizes a LocalRelation by default widths
-    (one element per array) and would broadcast a wide cover it thinks is
-    tiny. ``True`` hints broadcast; ``False`` leaves the strategy to
-    Catalyst/AQE."""
+    ``"poly_id long, lo long, hi long"``."""
     # an empty interval matches nothing, and sequence() would count down
     intervals = [t for t in intervals if t[-1] > t[-2]]
     shift = choose_shift(intervals, max_depth)
     spark = points.sparkSession
     table = arrow_table(intervals, interval_schema)
-    hint = "broadcast" if broadcast else None
-    if broadcast is None:
-        replicated = sum(((hi - 1) >> shift) - (lo >> shift) + 1
-                         for *_, lo, hi in intervals)
-        payload = table.nbytes / max(len(intervals), 1) * replicated
-        conf = spark._jsparkSession.sessionState().conf()
-        fits = (replicated <= BROADCAST_ROW_CAP
-                and payload <= conf.autoBroadcastJoinThreshold())
-        hint = "broadcast" if fits else "merge"
+    replicated = sum(((hi - 1) >> shift) - (lo >> shift) + 1
+                     for *_, lo, hi in intervals)
+    hint = broadcast_hint(spark, table, replicated)
     ivals = local_frame(spark, table, interval_schema)
     return bucket_join(points, ivals, shift, hint, key_col)

@@ -1,25 +1,33 @@
-"""Point-in-polygon filter over an :class:`LktIndex` (SURVEY.md §2.3-Q1).
+"""Point-in-polygon filter over an :class:`LktIndex` (SURVEY.md §2.3-Q1),
+and the one polygon refine every polygon operator shares (:func:`refine`).
 
 Plan: polygon bbox → leaf-table filter (``SplitTree.ranges_for_bbox``:
 the leaves whose exact data bbox meets the polygon's bbox; every point
 inside the polygon lies in one of them) → merged contiguous ``sort_key``
 intervals (leaves and subtrees are contiguous in kd order — the defining
 property of the *linear* layout) → pruned scan joined against the interval
-list → exact test per candidate. The exact test is a JVM expression for
-convex polygons / rectangles / diamonds, or an Arrow-batched ray-cast UDF
-for general simple polygons. No per-row Python anywhere (input_hint).
+list → exact test per candidate.
+
+The refine classifies each polygon on the driver (``geometry.ccw_edges``):
+convex ones get half-plane expressions in generated code, the rest the
+Arrow-batched even-odd ray cast. The classes are two joins under one
+union and an empty class builds none, so an all-convex call plans no
+Python stage and any other call exactly one. A point on an edge or a
+vertex is outside on both paths (FIXTURES.md F4).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linear_kdtree_spark.functions.geometry import make_raycast_udf
+from linear_kdtree_spark.functions.geometry import ccw_edges, make_raycast_udf
 from linear_kdtree_spark.operators.build import LktIndex
-from linear_kdtree_spark.session import local_frame
+from linear_kdtree_spark.operators.interval_join import interval_join
 
 
 @dataclass
@@ -37,14 +45,16 @@ class Polygon:
 # a larger polygon's edges go through one interpreted forall
 UNROLL = 16
 
+EDGES = "edges array<struct<x1:double,y1:double,dx:double,dy:double>>"
 
-def _left_of_edge(e: str) -> str:
+
+def _left_of_edge(e: str, x: str, y: str) -> str:
     """SQL: the point (x, y) lies strictly left of the CCW edge ``e``."""
-    return (f"{e}.dx * (CAST(y AS DOUBLE) - {e}.y1)"
-            f" - {e}.dy * (CAST(x AS DOUBLE) - {e}.x1) > 0.0D")
+    return (f"{e}.dx * (CAST({y} AS DOUBLE) - {e}.y1)"
+            f" - {e}.dy * (CAST({x} AS DOUBLE) - {e}.x1) > 0.0D")
 
 
-def _convex_refine_sql(max_edges: int) -> str:
+def _convex_refine_sql(max_edges: int, x: str, y: str) -> str:
     """SQL of the convex refine over the candidate columns ``x``, ``y`` and
     ``edges`` (a polygon's CCW edges): the point is strictly left of every
     edge. ``max_edges`` is the largest edge count of the call.
@@ -53,93 +63,67 @@ def _convex_refine_sql(max_edges: int) -> str:
     is unrolled into plain expressions that whole-stage codegen compiles;
     a higher-order ``forall`` over the edge array, the whole refine before,
     runs interpreted on every candidate. Only a polygon with more than
-    ``M`` edges reaches the ``forall`` over the rest. The edges stay row
-    data, so the plan does not grow with the number of polygons.
+    ``M`` edges reaches the ``forall`` over the rest.
 
     Edge ``i`` is read with ``get(edges, i)``, which is NULL past the end,
     never ``edges[i]``: subexpression elimination evaluates a repeated
     ``edges[i]`` ahead of the ``size`` guard, and under ANSI mode that
     raises ``INVALID_ARRAY_INDEX`` on a shorter polygon."""
     m = min(max_edges, UNROLL)
-    terms = [f"(size(edges) <= {i} OR {_left_of_edge(f'get(edges, {i})')})"
+    terms = [f"(size(edges) <= {i} OR {_left_of_edge(f'get(edges, {i})', x, y)})"
              for i in range(m)]
     if max_edges > m:
         terms.append(f"forall(slice(edges, {m + 1}, size(edges)), "
-                     f"e -> {_left_of_edge('e')})")
+                     f"e -> {_left_of_edge('e', x, y)})")
     return " AND ".join(terms) or "true"
 
 
-def _pruned_candidates(index: LktIndex, polygons: list[Polygon]) -> DataFrame:
-    """(poly_id, key, x, y) candidates from sort_key interval pruning —
-    bucketed equi-join (operators/interval_join.py), not a nested loop."""
-    from linear_kdtree_spark.operators.interval_join import interval_join
-
-    spark = index.points.sparkSession
-    rows = []
+def refine(polygons: list[Polygon], cover: Callable[[Polygon], list[tuple]],
+           cover_schema: str, join: Callable[[list[tuple], str], DataFrame],
+           cols: list[str], x: str = "x", y: str = "y") -> DataFrame:
+    """The ``cols`` of the joined candidates strictly inside their polygon,
+    for every polygon operator. ``cover(p)`` gives polygon ``p``'s cover
+    rows in ``cover_schema``; ``join(rows, schema)`` joins the points to
+    driver-side rows of ``poly_id``, a convex polygon's ``EDGES`` and the
+    cover row. The edges ride those rows instead of a second join on
+    poly_id (r6: 1.161 → 0.894 s best-of-8 at 4.8 M/local[32]), and as
+    data they keep the plan's size independent of the polygon count. The
+    ray cast's polygons ride the UDF's closure; its UDF sits in its own
+    branch, never in an OR or a CASE, which Spark evaluates over every
+    joined row. A polygon with fewer than 3 edges has no interior."""
+    convex, ray, rings, max_edges = [], [], {}, 0
     for p in polygons:
-        xmin, ymin, xmax, ymax = p.bbox()
-        for lo, hi in index.tree.ranges_for_bbox(xmin, ymin, xmax, ymax):
-            rows.append((p.poly_id, lo, hi))
-    if not rows:
-        return local_frame(spark, [], "poly_id long, key long, x double, y double")
-    pts = index.points.select("key", "x", "y", "sort_key")
-    return interval_join(
-        pts, rows, "poly_id long, lo long, hi long", max_depth=index.tree.max_depth
-    ).select("poly_id", "key", "x", "y")
+        edges, is_convex = ccw_edges(p.vertices)
+        if len(edges) < 3:
+            continue
+        if is_convex:
+            convex += [(p.poly_id, edges, *c) for c in cover(p)]
+            max_edges = max(max_edges, len(edges))
+        else:
+            ray += [(p.poly_id, *c) for c in cover(p)]
+            rings[p.poly_id] = p.vertices
+    parts = []
+    if convex or not ray:
+        cand = join(convex, f"poly_id long, {EDGES}, {cover_schema}")
+        parts.append(cand.filter(F.expr(_convex_refine_sql(max_edges, x, y))))
+    if ray:
+        cand = join(ray, f"poly_id long, {cover_schema}")
+        parts.append(cand.filter(make_raycast_udf(rings)("poly_id", x, y)))
+    return reduce(DataFrame.union, [df.select(*cols) for df in parts])
 
 
 def point_in_polygons(
-    index: LktIndex, polygons: list[Polygon], exact: str = "raycast"
+    index: LktIndex, polygons: list[Polygon], exact: str | None = None
 ) -> DataFrame:
-    """Returns (poly_id, key) for every point strictly inside each polygon.
-
-    exact='raycast' — general simple polygons, Arrow-batched even-odd UDF.
-    exact='convex'  — convex polygons as pure half-plane JVM expressions
-                      (faster; caller asserts convexity).
-    """
-    if exact == "convex":
-        from linear_kdtree_spark.functions.geometry import ensure_ccw
-        from linear_kdtree_spark.operators.interval_join import interval_join
-
-        # per-polygon edge coefficients carried ON the interval rows
-        # (poly_id, edges array, lo, hi) — the refine rides the pruning
-        # equi-join itself instead of a second broadcast join on poly_id
-        # (r6, guide §2.4 "share one exchange": one broadcast + one join
-        # per query instead of two; measured 1.161 → 0.894 s best-of-8 at
-        # 4.8 M/local[32], identical output). Plan size stays independent
-        # of |polygons| — the edge array is data, not codegen, exactly as
-        # in the round-1 fix — and the replicated side only grows by ~64
-        # bytes/vertex per interval row. The refine's plan size is
-        # O(min(max vertices, UNROLL)) (_convex_refine_sql).
-        rows = []
-        for p in polygons:
-            vs = ensure_ccw(p.vertices)
-            m = len(vs)
-            edges = []
-            for i in range(m):
-                x1, y1 = vs[i]
-                x2, y2 = vs[(i + 1) % m]
-                edges.append((float(x1), float(y1),
-                              float(x2 - x1), float(y2 - y1)))
-            xmin, ymin, xmax, ymax = p.bbox()
-            for lo, hi in index.tree.ranges_for_bbox(xmin, ymin, xmax, ymax):
-                rows.append((p.poly_id, edges, lo, hi))
-        pts = index.points.select("key", "x", "y", "sort_key")
-        cand = interval_join(
-            pts, rows,
-            "poly_id long, edges array<struct<x1:double,y1:double,"
-            "dx:double,dy:double>>, lo long, hi long",
-            max_depth=index.tree.max_depth,
-        )
-        max_edges = max((len(r[1]) for r in rows), default=0)
-        inside = F.expr(_convex_refine_sql(max_edges))
-        return cand.filter(inside).select("poly_id", "key")
-    cand = _pruned_candidates(index, polygons)
-    udf = make_raycast_udf(
-        index.points.sparkSession, {p.poly_id: p.vertices for p in polygons}
-    )
-    return (
-        cand.withColumn("inside", udf("poly_id", "x", "y"))
-        .filter(F.col("inside"))
-        .select("poly_id", "key")
+    """(poly_id, key) for every point strictly inside each polygon: the
+    polygon's bbox cover over the leaf table, one ``interval_join``, then
+    :func:`refine`. ``exact`` is ignored: the refine is chosen per polygon."""
+    pts = index.points.select("key", "x", "y", "sort_key")
+    return refine(
+        polygons,
+        lambda p: index.tree.ranges_for_bbox(*p.bbox()),
+        "lo long, hi long",
+        lambda rows, schema: interval_join(
+            pts, rows, schema, max_depth=index.tree.max_depth),
+        ["poly_id", "key"],
     )

@@ -4,8 +4,8 @@ radius joins, expressed as tile equi-joins + exact refinement.
 Scale notes (north_rule: partitioning / shuffle / skew handled explicitly):
 - the tile equi-join is a plain shuffle hash/sort-merge join on the tile id
   — Catalyst + AQE pick the physical join and split skewed partitions;
-- when one side is small it is broadcast (`F.broadcast`) and the shuffle
-  disappears entirely;
+- when one side is small and of known size it is broadcast and the
+  shuffle disappears entirely;
 - hot tiles (cities — skewed web-mined coordinates) can additionally be
   salted: `salt_tiles` splits each hot tile key into `n_salt` sub-keys on
   the big side and replicates the small side across salts.
@@ -16,22 +16,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linear_kdtree_spark.functions.geometry import dist2, make_raycast_udf
+from linear_kdtree_spark.functions.geometry import dist2
 from linear_kdtree_spark.functions.morton import WORLD
-from linear_kdtree_spark.operators.pip import Polygon
+from linear_kdtree_spark.operators.interval_join import broadcast_hint
+from linear_kdtree_spark.operators.pip import Polygon, refine
 from linear_kdtree_spark.operators.tile import assign_tiles_morton
-from linear_kdtree_spark.session import local_frame
+from linear_kdtree_spark.session import arrow_table, local_frame
 
 
-def polygon_tiles(
-    spark,
-    polygons: list[Polygon],
+def bbox_tiles(
+    polygon: Polygon,
     depth: int,
     bounds: tuple[float, float, float, float] = WORLD,
-) -> DataFrame:
-    """(poly_id, tile) covering tiles of each polygon's bbox at ``depth``
-    (driver-side — the polygon set is the small dim; exact refine follows
-    the join so bbox cover is sufficient)."""
+) -> list[tuple[int]]:
+    """The Z-order tiles at ``depth`` that cover ``polygon``'s bbox, as
+    ``(tile,)`` rows (driver-side: the polygon set is the small dim; the
+    exact refine follows the join, so a bbox cover suffices)."""
     xmin_b, ymin_b, xmax_b, ymax_b = bounds
     nx = 1 << depth
     wx = (xmax_b - xmin_b) / nx
@@ -42,16 +42,15 @@ def polygon_tiles(
         return min(max(c, 0), nx - 1)
 
     rows = []
-    for p in polygons:
-        x0, y0, x1, y1 = p.bbox()
-        for ix in range(cell(x0, xmin_b, wx), cell(x1, xmin_b, wx) + 1):
-            for iy in range(cell(y0, ymin_b, wy), cell(y1, ymin_b, wy) + 1):
-                tile = 0
-                for i in range(depth):
-                    tile |= ((ix >> i) & 1) << (2 * i)
-                    tile |= ((iy >> i) & 1) << (2 * i + 1)
-                rows.append((p.poly_id, tile))
-    return local_frame(spark, rows, "poly_id long, tile long")
+    x0, y0, x1, y1 = polygon.bbox()
+    for ix in range(cell(x0, xmin_b, wx), cell(x1, xmin_b, wx) + 1):
+        for iy in range(cell(y0, ymin_b, wy), cell(y1, ymin_b, wy) + 1):
+            tile = 0
+            for i in range(depth):
+                tile |= ((ix >> i) & 1) << (2 * i)
+                tile |= ((iy >> i) & 1) << (2 * i + 1)
+            rows.append((tile,))
+    return rows
 
 
 def spatial_join_polygons(
@@ -59,24 +58,21 @@ def spatial_join_polygons(
     polygons: list[Polygon],
     depth: int = 8,
     bounds: tuple[float, float, float, float] = WORLD,
-    broadcast_polygons: bool = True,
 ) -> DataFrame:
-    """(poly_id, key): shuffle-or-broadcast equi-join on Z-order tile +
-    exact ray-cast refine. Unlike operators/pip.py (which prunes through a
-    built LktIndex), this path needs no index — it is the two-sided join
+    """(poly_id, key): equi-join on the Z-order tile (hinted by
+    ``interval_join.broadcast_hint``), then ``pip.refine``. Unlike
+    ``point_in_polygons`` this needs no index: it is the two-sided join
     for raw point tables."""
     spark = points.sparkSession
-    tiles = polygon_tiles(spark, polygons, depth, bounds)
-    if broadcast_polygons:
-        tiles = F.broadcast(tiles)
-    pts = assign_tiles_morton(points, depth, bounds)
-    cand = pts.join(tiles, "tile").select("poly_id", "key", "x", "y")
-    udf = make_raycast_udf(spark, {p.poly_id: p.vertices for p in polygons})
-    return (
-        cand.withColumn("inside", udf("poly_id", "x", "y"))
-        .filter(F.col("inside"))
-        .select("poly_id", "key")
-    )
+    pts = assign_tiles_morton(points, depth, bounds).select("key", "x", "y", "tile")
+
+    def join(rows, schema):
+        table = arrow_table(rows, schema)
+        tiles = local_frame(spark, table, schema)
+        return pts.join(tiles.hint(broadcast_hint(spark, table, len(rows))), "tile")
+
+    return refine(polygons, lambda p: bbox_tiles(p, depth, bounds),
+                  "tile long", join, ["poly_id", "key"])
 
 
 def radius_join(

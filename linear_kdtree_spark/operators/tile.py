@@ -380,9 +380,8 @@ def pip_h3_cover(
     """EXACT point-in-polygon, H3-native: a driver-computed polyfill
     cover (functions/h3_geom.hex2d_polyfill) classifies every cover cell
     FULL (entirely inside — its points are accepted outright, no
-    per-point maths) or BAND (boundary — its points get the exact
-    Arrow-batched even-odd ray cast). Points outside the cover never
-    join at all.
+    per-point maths) or BAND (boundary — its points get the polygon
+    refine, ``pip.refine``). Points outside the cover never join at all.
 
     ``polygons``: poly_id → (face, hex2d ring at ``res`` scaling). The
     result is exactly the brute ray cast of every point against its
@@ -408,17 +407,17 @@ def pip_h3_cover(
     and point cell assignment cannot disagree."""
     import numpy as np
 
-    from linear_kdtree_spark.functions.geometry import make_raycast_udf
     from linear_kdtree_spark.functions.h3 import face_hex2d_to_cell
     from linear_kdtree_spark.functions.h3_geom import (
         _ax_to_hex2d,
         hex2d_polyfill,
     )
+    from linear_kdtree_spark.operators.pip import Polygon, refine
 
     spark = pts.sparkSession
-    rows = []
+    full, band = [], {}
     for pid, (face, ring) in polygons.items():
-        a, b, _cin, full = hex2d_polyfill(ring)
+        a, b, _cin, is_full = hex2d_polyfill(ring)
         cx, cy = _ax_to_hex2d(a, b)
         cells = face_hex2d_to_cell(
             np.full(len(cx), face, dtype=np.int64), cx, cy, res,
@@ -430,31 +429,22 @@ def pip_h3_cover(
         # fold can only demote FULL to BAND (extra refine, never a wrong
         # accept)
         merged: dict[int, bool] = {}
-        for c, f in zip(cells[ok], full[ok]):
-            c = int(c)
-            merged[c] = bool(f) and merged.get(c, True)
-        rows.extend(
-            (int(pid), int(face), c, f) for c, f in merged.items()
-        )
-    cover = local_frame(
-        spark, rows, "poly_id int, _poly_face long, _cover_cell long, _full boolean"
+        for c, f in zip(cells[ok].tolist(), is_full[ok].tolist()):
+            merged[c] = f and merged.get(c, True)
+        full += [(int(pid), int(face), c) for c, f in merged.items() if f]
+        band[int(pid)] = [(int(face), c) for c, f in merged.items() if not f]
+
+    def join(rows, schema):
+        cover = F.broadcast(local_frame(spark, rows, schema))
+        return pts.join(cover, (pts[cell_col] == F.col("_cover_cell"))
+                        & (pts[face_col] == F.col("_poly_face")))
+
+    schema = "_poly_face long, _cover_cell long"
+    cols = [*pts.columns, "poly_id"]
+    band_part = refine(
+        [Polygon(int(pid), ring) for pid, (_f, ring) in polygons.items()],
+        lambda p: band[p.poly_id], schema, join, cols, x_col, y_col,
     )
-    joined = pts.join(
-        F.broadcast(cover),
-        (pts[cell_col] == F.col("_cover_cell"))
-        & (pts[face_col] == F.col("_poly_face")),
-    )
-    refine = make_raycast_udf(
-        spark, {pid: ring for pid, (_f, ring) in polygons.items()}
-    )
-    # union instead of a single OR filter: a pandas UDF in a disjunction
-    # is evaluated as its own projection over EVERY joined row, which
-    # would hand the interior points right back to the refine the full
-    # cells exist to skip
-    full_part = joined.filter(F.col("_full"))
-    band_part = joined.filter(~F.col("_full")).filter(
-        refine(F.col("poly_id"), F.col(x_col), F.col(y_col))
-    )
-    return full_part.unionByName(band_part).drop(
-        "_poly_face", "_cover_cell", "_full"
-    )
+    # a union, not one OR filter: full cells skip the refine entirely
+    return (join(full, f"poly_id long, {schema}").select(*cols)
+            .union(band_part).withColumn("poly_id", F.col("poly_id").cast("int")))

@@ -205,12 +205,18 @@ def brute_knn(
 
 def point_in_polygon(px: float, py: float, vertices: list[tuple[float, float]]) -> bool:
     """Ray-casting (even-odd) PIP oracle; strictly-inside counts, points on
-    an edge are excluded (documented boundary rule, FIXTURES.md F4)."""
+    an edge or a vertex are excluded (documented boundary rule, FIXTURES.md
+    F4) by an explicit on-segment test: the crossing count alone takes a
+    point on a left-hand edge as inside."""
     inside = False
     m = len(vertices)
     for i in range(m):
         x1, y1 = vertices[i]
         x2, y2 = vertices[(i + 1) % m]
+        collinear = (px - x1) * (y2 - y1) == (py - y1) * (x2 - x1)
+        if (collinear and min(x1, x2) <= px <= max(x1, x2)
+                and min(y1, y2) <= py <= max(y1, y2)):
+            return False
         if (y1 > py) != (y2 > py):
             xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
             if px < xint:

@@ -4,7 +4,9 @@ exactly — the strongest cheap correctness evidence after the DuckDB gates.
 - fused hybrid build (mapInPandas local finish) ≡ pure level-synchronous
   build, per strategy and coord type — the fused path's global-id
   remapping and single-shuffle ordering are exactly equivalent;
-- convex half-plane refine ≡ general ray-cast refine on convex polygons;
+- convex half-plane refine ≡ general ray-cast refine on convex polygons,
+  and a mixed polygon batch ≡ the serial PIP oracle through both polygon
+  operators;
 - distributed batch kNN ≡ numpy brute force (more configs than the
   targeted test in test_queries);
 - the leaf-table kNN planner's bound and cover ⊇ brute force.
@@ -68,7 +70,17 @@ def test_fused_build_equals_level_sync(spark, strategy, coord_type, leaf):
     assert oa == ob
 
 
-def test_convex_refine_equals_raycast(spark):
+def _raycast_everything(monkeypatch):
+    """Classify every polygon non-convex, so ``pip.refine`` sends convex
+    polygons through the ray cast too."""
+    from linear_kdtree_spark.functions import geometry
+    from linear_kdtree_spark.operators import pip
+
+    monkeypatch.setattr(
+        pip, "ccw_edges", lambda v: (geometry.ccw_edges(v)[0], False))
+
+
+def test_convex_refine_equals_raycast(spark, monkeypatch):
     from linear_kdtree_spark.operators.pip import Polygon, point_in_polygons
 
     pts = _pts(spark, 6000, seed=3)
@@ -102,12 +114,12 @@ def test_convex_refine_equals_raycast(spark):
             [cx + rng.uniform(-12, 12, m), cy + rng.uniform(-12, 12, m)]
         )
         polys.append(Polygon(pid, hull(cloud)))
-    a = sorted(tuple(r) for r in
-               point_in_polygons(idx, polys, exact="convex").collect())
-    b = sorted(tuple(r) for r in
-               point_in_polygons(idx, polys, exact="raycast").collect())
-    # boundary points may differ between formulations at float ulps; the
-    # fixture draws continuous coordinates, so exact equality is expected
+    a = sorted(tuple(r) for r in point_in_polygons(idx, polys).collect())
+    _raycast_everything(monkeypatch)
+    b = sorted(tuple(r) for r in point_in_polygons(idx, polys).collect())
+    # near-boundary points may differ between formulations at float ulps;
+    # the fixture draws continuous coordinates, so exact equality is
+    # expected
     assert a == b
     assert len(a) > 50
 
@@ -135,16 +147,36 @@ def _half_plane_brute(px, py, verts):
     return inside
 
 
+def _star(cx, cy, a, b):
+    """A concave 4-pointed star, the shape of the ``pip_concave`` gate."""
+    return [(cx + a, cy), (cx + b / 2, cy + b / 2), (cx, cy + a),
+            (cx - b / 2, cy + b / 2), (cx - a, cy), (cx - b / 2, cy - b / 2),
+            (cx, cy - a), (cx + b / 2, cy - b / 2)]
+
+
 @pytest.fixture(scope="module")
 def mixed_polygons(spark):
-    """A triangle, a 16-gon and a 40-gon over one index whose points
-    include every vertex and every edge midpoint of the three polygons."""
+    """Over one index whose points include every vertex and every edge
+    midpoint: three convex polygons first (a triangle, a 16-gon and a
+    40-gon), then a concave star, a pentagram {5/2} (all five turns left,
+    but it winds twice), a rectangle as a closed ring (its last vertex
+    repeats the first), the same rectangle open, and the CLI's degenerate
+    rectangle of ``x0 == x1``."""
     from linear_kdtree_spark.operators.pip import Polygon
 
+    pent = [(1500 + round(300 * np.cos(np.pi / 2 + k * 4 * np.pi / 5)),
+             2400 + round(300 * np.sin(np.pi / 2 + k * 4 * np.pi / 5)))
+            for k in range(5)]
+    rect = [(100.0, 1000.0), (600.0, 1000.0), (600.0, 1600.0), (100.0, 1600.0)]
     verts = {
         1: [(100.0, 100.0), (700.0, 150.0), (300.0, 800.0)],
         2: _integer_ngon(700, 2300, 400, 16),
         3: _integer_ngon(2000, 800, 700, 40),
+        4: _star(2300.0, 2300.0, 400.0, 150.0),
+        5: [(float(x), float(y)) for x, y in pent],
+        6: rect + rect[:1],
+        7: rect,
+        8: [(800.0, 1000.0), (800.0, 1000.0), (800.0, 1600.0), (800.0, 1600.0)],
     }
     rng = np.random.default_rng(11)
     xy = [rng.uniform(0, 3000, (6000, 2))]
@@ -170,16 +202,14 @@ def test_convex_refine_mixed_edge_counts(spark, mixed_polygons, monkeypatch,
     the forall over the rest (every polygon reaches it at unroll = 2, only
     the 40-gon at 16) equal a numpy half-plane brute force, points on an
     edge included (and excluded from the result), and equal the ray-cast
-    refine off the boundary. The ray cast's even-odd rule counts a point
-    on a left-hand edge as inside, so on-edge points are compared with
-    the brute force only."""
+    refine, on-edge points included."""
     from linear_kdtree_spark.operators import pip
     from linear_kdtree_spark.operators.pip import point_in_polygons
 
     monkeypatch.setattr(pip, "UNROLL", unroll)
     idx, polys, xy, n_interior = mixed_polygons
-    got = {tuple(r) for r in
-           point_in_polygons(idx, polys, exact="convex").collect()}
+    polys = polys[:3]
+    got = {tuple(r) for r in point_in_polygons(idx, polys).collect()}
     want = {
         (p.poly_id, int(k))
         for p in polys
@@ -188,9 +218,8 @@ def test_convex_refine_mixed_edge_counts(spark, mixed_polygons, monkeypatch,
     assert got == want
     assert all(k < n_interior for _, k in got)  # no vertex or edge point
     assert {pid for pid, _ in got} == {1, 2, 3}
-    raycast = {tuple(r) for r in
-               point_in_polygons(idx, polys, exact="raycast").collect()}
-    assert got == {(pid, k) for pid, k in raycast if k < n_interior}
+    _raycast_everything(monkeypatch)
+    assert got == {tuple(r) for r in point_in_polygons(idx, polys).collect()}
 
 
 def test_convex_refine_runs_no_lambda(spark, mixed_polygons):
@@ -200,14 +229,72 @@ def test_convex_refine_runs_no_lambda(spark, mixed_polygons):
     from linear_kdtree_spark.operators.pip import point_in_polygons
 
     idx, polys, _, _ = mixed_polygons
-    small = [p for p in polys if len(p.vertices) <= 16]
-    plan = point_in_polygons(idx, small, exact="convex")._jdf \
+    small = [p for p in polys[:3] if len(p.vertices) <= 16]
+    plan = point_in_polygons(idx, small)._jdf \
         .queryExecution().executedPlan().toString()
     assert "HashJoin" in plan
     assert "lambdafunction" not in plan.lower()
-    wide = point_in_polygons(idx, polys, exact="convex")._jdf \
+    wide = point_in_polygons(idx, polys[:3])._jdf \
         .queryExecution().executedPlan().toString()
     assert "lambdafunction" in wide.lower()  # the 40-gon's tail
+
+
+def _brute(xy, polys):
+    """(poly_id, key) by the serial oracle: even-odd, on-edge excluded."""
+    from tests.oracle import point_in_polygon
+
+    out = set()
+    for p in polys:
+        xmin, ymin, xmax, ymax = p.bbox()
+        near = np.nonzero((xy[:, 0] >= xmin) & (xy[:, 0] <= xmax)
+                          & (xy[:, 1] >= ymin) & (xy[:, 1] <= ymax))[0]
+        out |= {(p.poly_id, int(k)) for k in near
+                if point_in_polygon(xy[k, 0], xy[k, 1], p.vertices)}
+    return out
+
+
+def test_pip_mixed_batch_equals_brute_force(spark, mixed_polygons):
+    """Convex, concave, self-intersecting, closed-ring and degenerate
+    polygons in one call: point_in_polygons and spatial_join_polygons
+    both equal the oracle, which excludes every vertex and edge midpoint;
+    the closed ring gives the open ring's rows, the degenerate rectangle
+    none."""
+    from linear_kdtree_spark.operators.pip import point_in_polygons
+    from linear_kdtree_spark.operators.spatial_join import spatial_join_polygons
+
+    idx, polys, xy, n_interior = mixed_polygons
+    want = _brute(xy, polys)
+    via_index = {tuple(r) for r in point_in_polygons(idx, polys).collect()}
+    raw = idx.points.select("key", "x", "y")
+    via_join = {tuple(r) for r in spatial_join_polygons(
+        raw, polys, depth=6, bounds=(0.0, 0.0, 3000.0, 3000.0)).collect()}
+    assert via_index == via_join == want
+    assert all(k < n_interior for _, k in want)
+    by_poly = {pid: {k for q, k in want if q == pid} for pid in range(1, 9)}
+    assert all(by_poly[pid] for pid in range(1, 8))
+    assert by_poly[6] == by_poly[7] and not by_poly[8]
+
+
+def _python_evals(df) -> int:
+    """Python UDF evaluation nodes in ``df``'s physical plan, planned but
+    not run, so an adaptive plan prints it once. (A run one prints a final
+    and an initial plan, and so does the cached index's own plan.)"""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
+
+
+def test_pip_plans_python_only_for_the_raycast(spark, mixed_polygons):
+    """An all-convex call plans no Python stage; a call with any other
+    polygon plans exactly one, however many such polygons it has."""
+    from linear_kdtree_spark.operators.pip import point_in_polygons
+    from linear_kdtree_spark.operators.spatial_join import spatial_join_polygons
+
+    idx, polys, _, _ = mixed_polygons
+    raw = idx.points.select("key", "x", "y")
+    for ps, want in ((polys[:3], 0), (polys, 1)):
+        assert _python_evals(point_in_polygons(idx, ps)) == want
+        assert _python_evals(spatial_join_polygons(
+            raw, ps, depth=6, bounds=(0.0, 0.0, 3000.0, 3000.0))) == want
 
 
 def test_knn_batch_brute_force_configs(spark):

@@ -1,5 +1,6 @@
 """Layering guards over the library source (AST scans, no Spark session):
-the library never imports the tests' oracles, and only the CLI prints."""
+the library never imports the tests' oracles, only the CLI prints, and
+only the split tree makes a SparkContext broadcast."""
 
 import ast
 import pathlib
@@ -73,3 +74,40 @@ def test_print_only_in_cli():
         and node.func.id == "print"
     }
     assert printers == {"cli.py"}  # the scan sees the prints it allows
+
+
+def _context_broadcasts(tree) -> int:
+    """Calls of ``<…>.sparkContext.broadcast(...)`` or ``sc.broadcast``."""
+    return sum(
+        1 for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "broadcast"
+        and ast.unparse(node.func.value).split(".")[-1]
+        in ("sparkContext", "sc", "_sc")
+    )
+
+
+@pytest.mark.parametrize(
+    "src, n",
+    [
+        ("bc = spark.sparkContext.broadcast(polys)", 1),
+        ("sc = spark.sparkContext\nbc = sc.broadcast(polys)", 1),
+        ("F.broadcast(cover)", 0),
+        ("tree.broadcast(spark)", 0),
+    ],
+)
+def test_guard_sees_context_broadcasts(src, n):
+    assert _context_broadcasts(ast.parse(src)) == n
+
+
+def test_broadcast_only_in_split_tree():
+    """A SparkContext broadcast lives until someone destroys it. The one
+    the library keeps is ``SplitTree.broadcast``, memoized per session;
+    every other driver-side value rides a closure or the rows."""
+    users = {
+        str(p.relative_to(ROOT))
+        for p in MODULES
+        if _context_broadcasts(_parse(p))
+    }
+    assert users == {"operators/tree.py"}

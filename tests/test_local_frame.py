@@ -143,7 +143,8 @@ def test_get_spark_turns_dataframe_debugging_off(spark, monkeypatch):
 def test_library_plans_read_no_python_rdd(spark, index, monkeypatch):
     """PIP (convex and ray-cast), interval_join, knn over a list and the
     token check plan a LocalRelation and no LogicalRDD: none of them runs
-    a Python job to read its driver-side table."""
+    a Python job to read its driver-side table. The star is concave, so
+    it takes the ray cast."""
     from linear_kdtree_spark.operators.interval_join import interval_join
 
     polys = [
@@ -152,8 +153,10 @@ def test_library_plans_read_no_python_rdd(spark, index, monkeypatch):
     ]
     ivals = [(1, 0, 1 << 10), (2, 1 << 12, 1 << 14)]
     frames = {
-        "pip_convex": point_in_polygons(index, polys, exact="convex"),
-        "pip_raycast": point_in_polygons(index, polys),
+        "pip_convex": point_in_polygons(index, polys),
+        "pip_raycast": point_in_polygons(index, [Polygon(3, [
+            (50.0, 30.0), (52.0, 48.0), (70.0, 50.0), (52.0, 52.0),
+            (50.0, 70.0), (48.0, 52.0), (30.0, 50.0), (48.0, 48.0)])]),
         "interval_join": interval_join(
             index.points, ivals, "poly_id long, lo long, hi long",
             max_depth=index.tree.max_depth,
@@ -201,7 +204,7 @@ def test_wide_convex_cover_plans_a_shuffle_join(spark, index, dataset):
     threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     assert replicated * m * 32 > threshold  # the case under test
 
-    out = point_in_polygons(index, [poly], exact="convex")
+    out = point_in_polygons(index, [poly])
     physical = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in physical
     assert "BroadcastExchange" not in physical
@@ -214,7 +217,7 @@ def test_wide_convex_cover_plans_a_shuffle_join(spark, index, dataset):
 
     # a 7-gon inscribed in the same circle: same cover, still broadcast
     few = Polygon(6, verts[:: m // 6])
-    small = point_in_polygons(index, [few], exact="convex")
+    small = point_in_polygons(index, [few])
     assert "BroadcastHashJoin" in small._jdf.queryExecution().executedPlan().toString()
 
 

@@ -115,6 +115,13 @@ def test_point_in_polygon_square():
     assert point_in_polygon(5, 5, sq)
     assert not point_in_polygon(15, 5, sq)
     assert not point_in_polygon(-1, -1, sq)
+    # F4: a point on an edge or a vertex is outside, the left-hand edge
+    # (which the crossing count alone would take) included
+    for on in ((0, 5), (10, 5), (5, 0), (5, 10), (0, 0), (10, 10)):
+        assert not point_in_polygon(*on, sq)
+    tri = [(100.0, 100.0), (700.0, 150.0), (300.0, 800.0)]
+    for (x1, y1), (x2, y2) in zip(tri, tri[1:] + tri[:1]):
+        assert not point_in_polygon((x1 + x2) / 2, (y1 + y2) / 2, tri)
 
 
 def _assert_kernel_matches_oracle():

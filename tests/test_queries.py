@@ -291,27 +291,30 @@ def test_deinterleave_exact_above_2_53(spark):
     assert (row["ix"], row["iy"]) == (ix_ref, iy_ref)
 
 
-def test_interval_join_auto_broadcast_cap(spark):
-    """interval_join only hints broadcast while the exploded interval side
-    is small; a huge cover must leave the join strategy to Catalyst/AQE
-    (review r5: the unconditional hint overrode the size threshold)."""
+def test_interval_join_auto_broadcast_cap(spark, monkeypatch):
+    """interval_join hints broadcast only while the exploded interval side
+    is at most BROADCAST_ROW_CAP rows; past the cap it hints a sort-merge
+    join (review r5: an unconditional broadcast hint overrode the size
+    threshold), with the same rows."""
     import linear_kdtree_spark.operators.interval_join as ij
 
     pts = spark.range(100).select(
         F.col("id").alias("key"), F.col("id").alias("sort_key")
     )
     ivals = [(i, i, i + 1) for i in range(50)]
-    small = ij.interval_join(pts, ivals, "poly_id long, lo long, hi long")
-    assert "ResolvedHint (strategy=broadcast)" in small._jdf.queryExecution().logical().toString()
-    forced = ij.interval_join(
-        pts, ivals, "poly_id long, lo long, hi long", broadcast=False
-    )
-    # no HINT — Catalyst/AQE may still pick broadcast for a tiny side,
-    # but nothing overrides autoBroadcastJoinThreshold for a huge one
-    assert "ResolvedHint" not in forced._jdf.queryExecution().logical().toString()
-    assert small.count() == forced.count() == 50
-    # the auto cap: a cover past BROADCAST_ROW_CAP rows gets no hint
-    assert ij.BROADCAST_ROW_CAP >= 1000
+
+    def joined():
+        df = ij.interval_join(pts, ivals, "poly_id long, lo long, hi long")
+        plan = df._jdf.queryExecution().logical().toString()
+        return plan, sorted(tuple(r) for r in df.select("poly_id", "key").collect())
+
+    small, rows = joined()
+    assert "ResolvedHint (strategy=broadcast)" in small
+    monkeypatch.setattr(ij, "BROADCAST_ROW_CAP", 49)
+    capped, capped_rows = joined()
+    assert "ResolvedHint (strategy=merge)" in capped
+    assert "strategy=broadcast" not in capped
+    assert capped_rows == rows == [(i, i) for i in range(50)]
 
 
 def test_grid_cell_null_coordinates_stay_null(spark):

@@ -185,7 +185,7 @@ def test_pip_convex_plan_single_join(spark):
         Polygon(0, [(0.0, 10.0), (20.0, 10.0), (20.0, 30.0), (0.0, 30.0)]),
         Polygon(1, [(-60.0, -40.0), (-20.0, -40.0), (-40.0, 0.0)]),
     ]
-    out = point_in_polygons(idx, polys, exact="convex")
+    out = point_in_polygons(idx, polys)
     out.count()  # let AQE finalize the executed plan
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInPandas" not in plan.split(
