@@ -688,8 +688,8 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 rows.append(stats(d, "bmp", img))
 
-                # PNG leg: stdlib-zlib-compressed IDAT decoded by the
-                # from-scratch inflate + filter reversal (mediacodec.py)
+                # PNG leg: stdlib zlib compresses and inflates the IDAT;
+                # chunk parsing and filter reversal are mediacodec.py's
                 k = np.arange(MM_PNG_W * MM_PNG_H * 3, dtype=np.int64)
                 png = ((d * 23 + k * 2246822519) % 256).astype(np.uint8)
                 img = decode_image(

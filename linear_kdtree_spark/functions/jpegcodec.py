@@ -19,10 +19,11 @@ dequantization, so decoded pixels are bit-identical across platforms
 and runs (the property the `multimodal_decode` plumbing relies on).
 YCbCr→RGB likewise uses the JFIF fixed-point integer coefficients.
 
-Honest cost note (same boundary as the PNG inflate,
-mediacodec.py): Huffman ENTROPY decode is an inherently serial
-bit-stream walk and runs as per-symbol Python; the IDCT, dequantize,
-upsample and color-convert stages are vectorized numpy over all blocks.
+Honest cost note: Huffman ENTROPY decode is an inherently serial
+bit-stream walk and runs as per-symbol Python (the standard library
+has no JPEG codec, unlike PNG's zlib layer in mediacodec.py); the
+IDCT, dequantize, upsample and color-convert stages are vectorized
+numpy over all blocks.
 For corpus-scale decode a native codec library would be mounted at the
 same ``decode_image`` dispatch point.
 
@@ -127,7 +128,7 @@ class _HuffTable:
     walk. Encode via a symbol -> (code, length) dict built from the same
     code assignment. The table lookup replaces ~2 python method calls
     PER BIT with ~3 per symbol (r6 — the measured JPEG-decode hot
-    spot, same shape as the DEFLATE fix in mediacodec)."""
+    spot)."""
 
     FAST_BITS = 10
 

@@ -1,5 +1,5 @@
-"""Pure-numpy decoders/encoders for the uncompressed media formats a
-training-data pipeline can handle without native codec libraries:
+"""Pure-numpy decoders/encoders for the media formats a training-data
+pipeline can handle without third-party codec libraries:
 
 - **PPM/PGM** (netpbm): P6/P5 binary and P3/P2 ASCII, 8- and 16-bit
   maxval (format spec: the netpbm man pages — magic, whitespace- and
@@ -12,17 +12,14 @@ training-data pipeline can handle without native codec libraries:
 - **WAV** (RIFF): PCM 8-bit unsigned / 16/32-bit signed little-endian
   and IEEE float32, any channel count; chunk-walking parser (fmt may be
   preceded/followed by other chunks).
+- **PNG** (W3C spec): 8-bit non-interlaced, color types 0/2/3/4/6, all
+  5 filter types. Chunk parsing and filter reversal are numpy; the zlib
+  layer (RFC 1950/1951 inflate, adler-32, the chunk CRC-32) is the
+  standard library's ``zlib`` module, the native codec Python ships.
 
-- **PNG** (W3C spec + RFC 1950/1951): 8-bit non-interlaced, color types
-  0/2/3/4/6, from-scratch zlib/DEFLATE inflate (stored, fixed- and
-  dynamic-Huffman blocks; differential-tested against stdlib zlib),
-  per-chunk CRC32 + adler32 verification, all 5 filter types.
-
-These replace the round-1/2 ``_fake_decode`` stub for every format that
-needs no external library (VERDICT r2 #4, r3 next-#5); baseline JPEG
-decodes for real too (functions/jpegcodec.py, r4 carry-forward #7) —
-only lossy AUDIO (MP3) remains the documented NotImplementedError
-boundary in operators/multimodal.py.
+Baseline JPEG decodes for real too (functions/jpegcodec.py); only lossy
+AUDIO (MP3) remains the documented NotImplementedError boundary in
+operators/multimodal.py.
 
 All decoders are deterministic byte→array functions, which is what makes
 the `multimodal_decode` driver gate possible: the gate's payloads are
@@ -35,6 +32,7 @@ flips the order-sensitive checksum.
 from __future__ import annotations
 
 import struct
+import zlib
 
 import numpy as np
 
@@ -232,426 +230,28 @@ def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# PNG (from-scratch DEFLATE inflate + the 5 filter types; RFC 1950/1951
-# and the W3C PNG spec — closes the VERDICT r3 next-#5 boundary item:
-# PNG is deterministic and needs no native codec library)
+# PNG (W3C PNG spec: chunk parsing and the 5 filter types here; the zlib
+# stream and the chunk CRC-32 are the standard library's zlib module)
 # ---------------------------------------------------------------------------
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
-def _make_crc_table():
-    tab = []
-    for n in range(256):
-        c = n
-        for _ in range(8):
-            c = (0xEDB88320 ^ (c >> 1)) if c & 1 else c >> 1
-        tab.append(c)
-    return tab
-
-
-_CRC_TABLE = _make_crc_table()
-
-
-_CRC_TABLE_NP = np.array(_CRC_TABLE, dtype=np.uint32)
-
-# threshold below which the scalar table loop beats the chunk-parallel
-# numpy path's fixed costs (array setup + 32-column combine rounds)
-_CRC_VECTOR_MIN = 1024
-
-
-def _gf2_matrix_times(mat: list[int], vec: int) -> int:
-    s = 0
-    i = 0
-    while vec:
-        if vec & 1:
-            s ^= mat[i]
-        vec >>= 1
-        i += 1
-    return s
-
-
-def _gf2_matrix_square(mat: list[int]) -> list[int]:
-    return [_gf2_matrix_times(mat, mat[i]) for i in range(32)]
-
-
-def _crc_shift_matrix(nbytes: int) -> list[int]:
-    """32×32 GF(2) matrix (as 32 column words) multiplying a reflected
-    CRC-32 register by x^(8·nbytes) mod the CRC polynomial — the zlib
-    crc32_combine construction (public domain algorithm)."""
-    # operator for one zero BIT: reflected poly taps
-    odd = [0xEDB88320] + [1 << i for i in range(31)]
-    even = _gf2_matrix_square(odd)   # 2 bits
-    mat = _gf2_matrix_square(even)   # 4 bits
-    # mat now shifts by 4 zero bits; square up to 8·nbytes bits
-    nbits = 8 * nbytes
-    # decompose nbits = 4 · 2^k · ... : walk powers of two from 4 bits up
-    shift = mat
-    bits = 4
-    result = None
-    while nbits:
-        if nbits & bits:
-            result = (
-                shift if result is None else
-                [_gf2_matrix_times(shift, c) for c in result]
-            )
-            nbits ^= bits
-        shift = _gf2_matrix_square(shift)
-        bits <<= 1
-    return result if result is not None else [1 << i for i in range(32)]
-
-
-def _gf2_apply_vec(mat: list[int], states: np.ndarray) -> np.ndarray:
-    """Apply one GF(2) 32×32 matrix to every uint32 state in ``states``."""
-    out = np.zeros_like(states)
-    for j in range(32):
-        out ^= np.where((states >> np.uint32(j)) & np.uint32(1),
-                        np.uint32(mat[j]), np.uint32(0))
-    return out
-
-
-def _crc32_vector(data: bytes, crc: int) -> int:
-    """Chunk-parallel CRC-32: K interleaved table recurrences advance one
-    byte of every chunk per numpy step (n/K python iterations instead of
-    n), then a log₂K tree of GF(2) shift-matrix combines folds the chunk
-    registers — crc(A‖B) register = M_len(B)·reg(A) ⊕ reg₀(B). Identical
-    output to the scalar table loop (pinned against binascii.crc32)."""
-    n = len(data)
-    k = 1 << max(0, min(14, (n // 64).bit_length() - 1))  # ≤ 16384 chunks
-    L = n // k
-    # (L, k) layout: step i reads one CONTIGUOUS row = byte i of every chunk
-    arr = np.ascontiguousarray(
-        np.frombuffer(data, np.uint8, k * L).reshape(k, L).T
-    ).astype(np.uint32)
-    states = np.zeros(k, dtype=np.uint32)
-    states[0] = crc ^ 0xFFFFFFFF
-    tab = _CRC_TABLE_NP
-    for i in range(L):
-        states = tab[(states ^ arr[i]) & np.uint32(0xFF)] ^ (
-            states >> np.uint32(8)
-        )
-    # fold pairs: left register shifted by the right half's length; the
-    # shift operator for the next (doubled) length is the SQUARE of the
-    # current one, so each round costs one 32-column GF(2) squaring
-    # instead of a from-scratch power ladder
-    mat = _crc_shift_matrix(L)
-    while len(states) > 1:
-        left, right = states[0::2], states[1::2]
-        states = _gf2_apply_vec(mat, left) ^ right
-        if len(states) > 1:
-            mat = _gf2_matrix_square(mat)
-    c = int(states[0]) ^ 0xFFFFFFFF
-    tail = data[k * L:]  # < k bytes; recursion re-vectorizes big tails
-    return _crc32(tail, c) if tail else c
-
-
-def _crc32(data: bytes, crc: int = 0) -> int:
-    if len(data) >= _CRC_VECTOR_MIN:
-        return _crc32_vector(data, crc)
-    c = crc ^ 0xFFFFFFFF
-    for b in data:
-        c = _CRC_TABLE[(c ^ b) & 0xFF] ^ (c >> 8)
-    return c ^ 0xFFFFFFFF
-
-
-def _adler32(data: bytes) -> int:
-    # exact vectorized form of the per-byte recurrence: over a chunk of n
-    # bytes d_1..d_n,  a' = a + Σd_i  and  b' = b + n·a + Σ (n-i+1)·d_i
-    # (each byte enters b once per remaining step). int64 stays exact:
-    # chunk sums < 5552·256·5553 ≈ 2^33.
-    a, b = 1, 0
-    for i in range(0, len(data), 5552):  # 5552: max run before mod (zlib)
-        chunk = np.frombuffer(data, np.uint8, min(5552, len(data) - i), i)
-        n = len(chunk)
-        c = chunk.astype(np.int64)
-        a_new = a + int(c.sum())
-        b = b + n * a + int(
-            (c * np.arange(n, 0, -1, dtype=np.int64)).sum()
-        )
-        a = a_new % 65521
-        b %= 65521
-    return (b << 16) | a
-
-
-class _BitReader:
-    """LSB-first bit reader (RFC 1951 §3.1.1) with a non-consuming
-    ``peek`` for table-driven Huffman decoding."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bitbuf = 0
-        self.bitcnt = 0
-
-    def bits(self, n: int) -> int:
-        while self.bitcnt < n:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated deflate stream")
-            self.bitbuf |= self.data[self.pos] << self.bitcnt
-            self.pos += 1
-            self.bitcnt += 8
-        out = self.bitbuf & ((1 << n) - 1)
-        self.bitbuf >>= n
-        self.bitcnt -= n
-        return out
-
-    def peek(self, n: int) -> int:
-        """Next ``n`` bits WITHOUT consuming; zero-padded past stream end
-        (a decode that then consumes phantom bits raises in :meth:`drop`,
-        preserving the truncated-stream error of the bit-by-bit path)."""
-        while self.bitcnt < n and self.pos < len(self.data):
-            self.bitbuf |= self.data[self.pos] << self.bitcnt
-            self.pos += 1
-            self.bitcnt += 8
-        return self.bitbuf & ((1 << n) - 1)
-
-    def drop(self, n: int) -> None:
-        if n > self.bitcnt:
-            raise ValueError("truncated deflate stream")
-        self.bitbuf >>= n
-        self.bitcnt -= n
-
-    def align(self):
-        # give whole buffered-but-unconsumed bytes back to the byte
-        # cursor (peek may have buffered past the next byte boundary),
-        # then discard the partial-byte remainder
-        self.pos -= self.bitcnt >> 3
-        self.bitbuf = 0
-        self.bitcnt = 0
-
-
-class _Huffman:
-    """Canonical Huffman decoder from a code-length list (RFC 1951
-    §3.2.2). Decoding is table-driven: one ``peek`` of ``fast_bits``
-    stream bits indexes a flat (symbol, length) table filled for every
-    code of length ≤ ``fast_bits`` (codes pack MSB-first, the stream is
-    LSB-first, so a code's slots are its bit-reversal + every padding of
-    the high bits); rarer longer codes fall back to the bit-by-bit walk.
-    ~10× fewer python ops per symbol than the walk alone (the measured
-    inflate hot spot — VERDICT r5 what's-wrong #2)."""
-
-    FAST_BITS = 10
-
-    def __init__(self, lengths):
-        self.table = {}
-        max_len = max(lengths) if lengths else 0
-        code = 0
-        codes = []
-        for ln in range(1, max_len + 1):
-            for sym, l in enumerate(lengths):
-                if l == ln:
-                    self.table[(ln, code)] = sym
-                    codes.append((sym, ln, code))
-                    code += 1
-            code <<= 1
-        self.fast_bits = L = min(max_len, self.FAST_BITS)
-        fast = [(-1, 0)] * (1 << L)
-        for sym, ln, c in codes:
-            if ln > L:
-                continue
-            rev = 0
-            for i in range(ln):
-                rev |= ((c >> i) & 1) << (ln - 1 - i)
-            entry = (sym, ln)
-            for pad in range(1 << (L - ln)):
-                fast[rev | (pad << ln)] = entry
-        self.fast = fast
-
-    def decode(self, br: _BitReader) -> int:
-        sym, ln = self.fast[br.peek(self.fast_bits)]
-        if sym >= 0:
-            br.drop(ln)
-            return sym
-        code = 0
-        for ln in range(1, 16):
-            code = (code << 1) | br.bits(1)  # codes pack MSB-first
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid huffman code")
-
-
-_LEN_BASE = (3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31, 35,
-             43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
-_LEN_EXTRA = (0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3,
-              4, 4, 4, 4, 5, 5, 5, 5, 0)
-_DIST_BASE = (1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193,
-              257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145,
-              8193, 12289, 16385, 24577)
-_DIST_EXTRA = (0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8,
-               9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
-_CLC_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14,
-              1, 15)
-
-
-def inflate(data: bytes) -> bytes:
-    """Full RFC 1951 DEFLATE decode: stored, fixed-Huffman and
-    dynamic-Huffman blocks (differential-tested against stdlib zlib)."""
-    br = _BitReader(data)
-    out = bytearray()
-    while True:
-        final = br.bits(1)
-        btype = br.bits(2)
-        if btype == 0:
-            br.align()
-            if br.pos + 4 > len(br.data):
-                raise ValueError("truncated stored block")
-            ln = br.data[br.pos] | (br.data[br.pos + 1] << 8)
-            nlen = br.data[br.pos + 2] | (br.data[br.pos + 3] << 8)
-            if ln ^ nlen != 0xFFFF:
-                raise ValueError("stored block LEN/NLEN mismatch")
-            br.pos += 4
-            out += br.data[br.pos:br.pos + ln]
-            br.pos += ln
-        else:
-            if btype == 1:
-                lit_tree = _Huffman([8] * 144 + [9] * 112 + [7] * 24
-                                    + [8] * 8)
-                dist_tree = _Huffman([5] * 30)
-            elif btype == 2:
-                hlit = br.bits(5) + 257
-                hdist = br.bits(5) + 1
-                hclen = br.bits(4) + 4
-                cl_lengths = [0] * 19
-                for i in range(hclen):
-                    cl_lengths[_CLC_ORDER[i]] = br.bits(3)
-                cl_tree = _Huffman(cl_lengths)
-                lengths = []
-                while len(lengths) < hlit + hdist:
-                    sym = cl_tree.decode(br)
-                    if sym < 16:
-                        lengths.append(sym)
-                    elif sym == 16:
-                        lengths += [lengths[-1]] * (3 + br.bits(2))
-                    elif sym == 17:
-                        lengths += [0] * (3 + br.bits(3))
-                    else:
-                        lengths += [0] * (11 + br.bits(7))
-                lit_tree = _Huffman(lengths[:hlit])
-                dist_tree = _Huffman(lengths[hlit:])
-            else:
-                raise ValueError("reserved deflate block type")
-            # the symbol loop keeps the bit buffer in LOCALS (the
-            # per-symbol br.* attribute traffic was half its cost —
-            # measured ~2×) and syncs it back to the reader around the
-            # rare slow paths; truncation behaves exactly like bits()
-            data_bytes = br.data
-            n_data = len(data_bytes)
-            pos, bitbuf, bitcnt = br.pos, br.bitbuf, br.bitcnt
-            lit_fast = lit_tree.fast
-            lit_bits = lit_tree.fast_bits
-            lit_mask = (1 << lit_bits) - 1
-            dist_fast = dist_tree.fast
-            dist_bits = dist_tree.fast_bits
-            dist_mask = (1 << dist_bits) - 1
-            append = out.append
-            while True:
-                while bitcnt < lit_bits and pos < n_data:
-                    bitbuf |= data_bytes[pos] << bitcnt
-                    pos += 1
-                    bitcnt += 8
-                sym, ln = lit_fast[bitbuf & lit_mask]
-                if sym >= 0:
-                    if ln > bitcnt:
-                        raise ValueError("truncated deflate stream")
-                    bitbuf >>= ln
-                    bitcnt -= ln
-                else:  # code longer than the fast table
-                    br.pos, br.bitbuf, br.bitcnt = pos, bitbuf, bitcnt
-                    sym = lit_tree.decode(br)
-                    pos, bitbuf, bitcnt = br.pos, br.bitbuf, br.bitcnt
-                if sym < 256:
-                    append(sym)
-                    continue
-                if sym == 256:
-                    break
-                i = sym - 257
-                eb = _LEN_EXTRA[i]
-                while bitcnt < eb:
-                    if pos >= n_data:
-                        raise ValueError("truncated deflate stream")
-                    bitbuf |= data_bytes[pos] << bitcnt
-                    pos += 1
-                    bitcnt += 8
-                length = _LEN_BASE[i] + (bitbuf & ((1 << eb) - 1))
-                bitbuf >>= eb
-                bitcnt -= eb
-                while bitcnt < dist_bits and pos < n_data:
-                    bitbuf |= data_bytes[pos] << bitcnt
-                    pos += 1
-                    bitcnt += 8
-                d, ln = dist_fast[bitbuf & dist_mask]
-                if d >= 0:
-                    if ln > bitcnt:
-                        raise ValueError("truncated deflate stream")
-                    bitbuf >>= ln
-                    bitcnt -= ln
-                else:
-                    br.pos, br.bitbuf, br.bitcnt = pos, bitbuf, bitcnt
-                    d = dist_tree.decode(br)
-                    pos, bitbuf, bitcnt = br.pos, br.bitbuf, br.bitcnt
-                eb = _DIST_EXTRA[d]
-                while bitcnt < eb:
-                    if pos >= n_data:
-                        raise ValueError("truncated deflate stream")
-                    bitbuf |= data_bytes[pos] << bitcnt
-                    pos += 1
-                    bitcnt += 8
-                dist = _DIST_BASE[d] + (bitbuf & ((1 << eb) - 1))
-                bitbuf >>= eb
-                bitcnt -= eb
-                if dist > len(out):
-                    raise ValueError("distance beyond window")
-                # batched copy instead of a per-byte append loop: a
-                # non-overlapping match is one slice extend; a
-                # self-overlapping match (dist < length) repeats its
-                # dist-byte pattern, so tile the pattern once
-                s = len(out) - dist
-                if dist >= length:
-                    out += out[s:s + length]
-                else:
-                    pattern = bytes(out[s:])
-                    out += (pattern * (length // dist + 1))[:length]
-            br.pos, br.bitbuf, br.bitcnt = pos, bitbuf, bitcnt
-        if final:
-            return bytes(out)
-
-
-def zlib_decompress(data: bytes) -> bytes:
-    """RFC 1950 wrapper around :func:`inflate` with adler32 verify."""
-    if len(data) < 6:
-        raise ValueError("truncated zlib stream")
-    cmf, flg = data[0], data[1]
-    if cmf & 0x0F != 8:
-        raise ValueError("not a deflate zlib stream")
-    if (cmf * 256 + flg) % 31 != 0:
-        raise ValueError("bad zlib header check")
-    if flg & 0x20:
-        raise ValueError("preset dictionary unsupported")
-    raw = inflate(data[2:-4])
-    want = int.from_bytes(data[-4:], "big")
-    if _adler32(raw) != want:
-        raise ValueError("zlib adler32 mismatch")
+def _png_inflate(idat: bytes) -> bytes:
+    """The IDAT zlib stream, inflated by stdlib zlib. Every defect is a
+    ValueError: ``zlib.error`` is not one, and a stream that ends early
+    or is followed by extra bytes inflates without error, so both are
+    checked here."""
+    d = zlib.decompressobj()
+    try:
+        raw = d.decompress(idat)
+    except zlib.error as e:
+        raise ValueError(f"bad PNG zlib stream: {e}") from None
+    if not d.eof:
+        raise ValueError("truncated PNG zlib stream")
+    if d.unused_data:
+        raise ValueError("trailing bytes after the PNG zlib stream")
     return raw
-
-
-def _zlib_compress_stored(raw: bytes) -> bytes:
-    """From-scratch zlib stream of stored (uncompressed) deflate blocks."""
-    out = bytearray(b"\x78\x01")
-    n = len(raw)
-    pos = 0
-    while True:
-        chunk = raw[pos:pos + 65535]
-        pos += len(chunk)
-        final = 1 if pos >= n else 0
-        out.append(final)  # BFINAL + BTYPE=00 (byte-aligned)
-        out += len(chunk).to_bytes(2, "little")
-        out += (len(chunk) ^ 0xFFFF).to_bytes(2, "little")
-        out += chunk
-        if final:
-            break
-    out += _adler32(raw).to_bytes(4, "big")
-    return bytes(out)
 
 
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -727,12 +327,13 @@ def _paeth(a: int, b: int, c: int) -> int:
 
 def decode_png(buf: bytes) -> np.ndarray:
     """(h, w, channels) uint8 from an 8-bit non-interlaced PNG (color
-    types 0/2/3/4/6, PLTE for type 3). Per-chunk CRC and zlib adler are
-    verified; the IDAT stream is decoded by the from-scratch
-    :func:`inflate` (any block type), then the 5 PNG filters are
-    reversed (None/Sub/Up vectorized; runs of Average/Paeth rows via the
-    vectorized anti-diagonal wavefront of :func:`_unfilter_run`, short
-    runs via the sequential spec recurrences)."""
+    types 0/2/3/4/6, PLTE for type 3). Each chunk's CRC-32 is checked
+    with ``zlib.crc32`` and the IDAT stream is inflated (adler-32
+    included) by stdlib zlib in :func:`_png_inflate`; then the 5 PNG
+    filters are reversed (None/Sub/Up vectorized; runs of Average/Paeth
+    rows via the vectorized anti-diagonal wavefront of
+    :func:`_unfilter_run`, short runs via the sequential spec
+    recurrences). A bad chunk CRC or zlib stream raises ValueError."""
     if buf[:8] != _PNG_SIG:
         raise ValueError("not a PNG")
     pos = 8
@@ -744,7 +345,7 @@ def decode_png(buf: bytes) -> np.ndarray:
         ctype = buf[pos + 4:pos + 8]
         data = buf[pos + 8:pos + 8 + ln]
         crc = int.from_bytes(buf[pos + 8 + ln:pos + 12 + ln], "big")
-        if _crc32(ctype + data) != crc:
+        if zlib.crc32(ctype + data) != crc:
             raise ValueError(f"PNG chunk CRC mismatch in {ctype!r}")
         if ctype == b"IHDR":
             ihdr = struct.unpack(">IIBBBBB", data)
@@ -765,7 +366,7 @@ def decode_png(buf: bytes) -> np.ndarray:
     ch = _PNG_CHANNELS.get(ctype_id)
     if ch is None:
         raise ValueError(f"unknown PNG color type {ctype_id}")
-    raw = zlib_decompress(bytes(idat))
+    raw = _png_inflate(idat)
     stride = w * ch
     if len(raw) != h * (stride + 1):
         raise ValueError("PNG pixel data length mismatch")
@@ -840,11 +441,9 @@ def decode_png(buf: bytes) -> np.ndarray:
     return img
 
 
-def encode_png(img: np.ndarray, compress: bool = True) -> bytes:
-    """8-bit gray/gray+alpha/RGB/RGBA PNG. ``compress=True`` uses stdlib
-    zlib (real Huffman blocks — exercised against the from-scratch
-    inflate); ``compress=False`` emits the from-scratch stored-block
-    zlib stream (no stdlib codec anywhere in the byte path)."""
+def encode_png(img: np.ndarray) -> bytes:
+    """8-bit gray/gray+alpha/RGB/RGBA PNG: every row filter type None,
+    IDAT by ``zlib.compress`` at level 6."""
     img = np.asarray(img, dtype=np.uint8)
     if img.ndim == 2:
         img = img[:, :, None]
@@ -854,17 +453,12 @@ def encode_png(img: np.ndarray, compress: bool = True) -> bytes:
     for r in range(h):
         raw.append(0)  # filter type None
         raw += img[r].tobytes()
-    if compress:
-        import zlib
-
-        z = zlib.compress(bytes(raw), 6)
-    else:
-        z = _zlib_compress_stored(bytes(raw))
+    z = zlib.compress(bytes(raw), 6)
 
     def chunk(ctype: bytes, data: bytes) -> bytes:
         return (
             len(data).to_bytes(4, "big") + ctype + data
-            + _crc32(ctype + data).to_bytes(4, "big")
+            + zlib.crc32(ctype + data).to_bytes(4, "big")
         )
 
     ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype_id, 0, 0, 0)

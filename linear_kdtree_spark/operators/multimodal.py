@@ -3,26 +3,25 @@ columns with typed metadata, processed through Arrow-batched ``mapInPandas``
 kernels.
 
 PPM/PGM, BMP, WAV, PNG **and baseline JPEG** decode FOR REAL via the
-from-scratch numpy codecs in functions/mediacodec.py (PNG includes a full
-RFC 1951 DEFLATE inflate) and functions/jpegcodec.py (ITU-T T.81
-sequential Huffman + fixed-point integer IDCT, roundtrip- and
-pin-tested) — driver-gated end-to-end by `multimodal_decode`, which pins
-pixel/sample statistics to a DuckDB formula oracle. Only lossy AUDIO
-(MP3 — ffmpeg/librosa are not in this container) remains the documented
-NotImplementedError boundary; ``fake=True`` keeps the deterministic
-stand-in for plumbing tests of unrecognized formats.
+numpy codecs in functions/mediacodec.py (PNG inflates with the standard
+library's native ``zlib``; chunk parsing and filter reversal are numpy)
+and functions/jpegcodec.py (ITU-T T.81 sequential Huffman + fixed-point
+integer IDCT, roundtrip- and pin-tested) — driver-gated end-to-end by
+`multimodal_decode`, which pins pixel/sample statistics to a DuckDB
+formula oracle. Only lossy AUDIO (MP3 — ffmpeg/librosa are not in this
+container) remains the documented NotImplementedError boundary;
+``fake=True`` keeps the deterministic stand-in for plumbing tests of
+unrecognized formats.
 
 Scale notes: binary payloads dominate row size — the operators project
 metadata-only where possible (column pruning keeps payload bytes out of
 shuffles), and mapInPandas streams batches without materializing a
-partition. Decode cost (re-measured r6 after the optimization round):
-the PNG path decodes a 1024² RGB all-Paeth corpus leg at ~3.4 MB/s
-(was 0.7 — table-driven DEFLATE Huffman, batched LZ77 copies, and the
-anti-diagonal wavefront unfilter in functions/mediacodec.py replaced
-the per-byte loops; unfilter component ~10×). Still ~2 orders below a
-native codec — at corpus scale, route mass PNG decode through one and
-keep this from-scratch path for verification and air-gapped
-correctness."""
+partition. Decode cost: with the zlib layer native, the PNG path's cost
+is the filter reversal (vectorized None/Sub/Up rows and the
+anti-diagonal wavefront for Average/Paeth runs); BENCH/BASELINE.md holds
+the measured MB/s. JPEG's Huffman entropy decode is still per-symbol
+Python (functions/jpegcodec.py) — mass JPEG decode at corpus scale
+belongs on a native codec mounted at ``decode_image``."""
 
 from __future__ import annotations
 
@@ -35,8 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# decoder failure classes the fallback paths normalize: the from-scratch
-# codecs raise ValueError/NotImplementedError for recognized-but-bad or
+# decoder failure classes the fallback paths normalize: the codecs
+# raise ValueError/NotImplementedError for recognized-but-bad or
 # unsupported streams, but a TRUNCATED header dies inside struct.unpack /
 # buffer indexing before any validation can see it (verified: decode_bmp
 # on a cut-off header raises raw struct.error — ADVICE r5 medium), which
@@ -96,8 +95,10 @@ def _fake_decode(buf: bytes) -> np.ndarray:
 def decode_image(buf: bytes, fake: bool = False) -> np.ndarray:
     """Real decode for PPM/PGM/BMP, PNG **and baseline JPEG** (dispatched
     on magic bytes; functions/mediacodec.py + functions/jpegcodec.py —
-    PNG runs the from-scratch DEFLATE inflate + filter reversal, JPEG the
-    from-scratch T.81 Huffman + fixed-point integer IDCT);
+    PNG runs stdlib zlib's inflate + the numpy filter reversal, JPEG the
+    from-scratch T.81 Huffman + fixed-point integer IDCT); a malformed
+    stream raises ValueError (or a truncated-header ``struct.error`` /
+    IndexError);
     NotImplementedError only for the remaining non-image/lossy-audio
     boundary unless ``fake=True`` requests the deterministic stand-in."""
     from linear_kdtree_spark.functions.jpegcodec import decode_jpeg

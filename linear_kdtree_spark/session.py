@@ -11,8 +11,10 @@ once per Spark application: partition tokens, widen probes, gate builds
 and each tree's broadcast). This is the only module that reads the
 applicationId.
 
-And the Python workers' setup: imported inside a task, this module makes
-the worker's zip importers re-read an archive only when it changed
+And the Python workers' setup: ``get_spark`` puts the package's
+directory on ``local[N]`` workers' PYTHONPATH (``local-cluster`` masters
+get the package as a zip), and, imported inside a task, this module makes the worker's
+zip importers re-read an archive only when it changed
 (``_install_zip_stamps``).
 """
 
@@ -26,6 +28,9 @@ import zipimport
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
+
+# the directory that holds the package: the one path entry its importers need
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -61,7 +66,14 @@ def get_spark(
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master.startswith("local") and not master.startswith("local-cluster"):
+        # local[N] Python workers start from the JVM's cwd and environment,
+        # not the driver's sys.path: give them the package's directory
+        # after any caller value (local-cluster ships a zip instead)
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(p for p in (conf.get(key), _PKG_ROOT) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -198,14 +210,13 @@ def _ship_package(spark: SparkSession) -> None:
     if getattr(sc, "_lkt_pkg_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
     zpath = os.path.join(tempfile.gettempdir(), f"lkt_engine_{os.getpid()}.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for dirpath, _dirs, files in os.walk(pkg_dir):
             for f in files:
                 if f.endswith(".py"):
                     full = os.path.join(dirpath, f)
-                    z.write(full, os.path.relpath(full, root))
+                    z.write(full, os.path.relpath(full, _PKG_ROOT))
     sc.addPyFile(zpath)
     sc._lkt_pkg_shipped = True
 

@@ -6,6 +6,7 @@ matching encoder/decoder bug cannot hide (the driver's roundtrip gate
 `multimodal_decode` covers the other failure class)."""
 
 import struct
+import zlib
 
 import numpy as np
 import pytest
@@ -188,14 +189,63 @@ def test_decode_image_dispatch():
 
 # ------------------------------------------------------------------- PNG
 
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _chunk(ctype: bytes, data: bytes) -> bytes:
+    return (len(data).to_bytes(4, "big") + ctype + data
+            + zlib.crc32(ctype + data).to_bytes(4, "big"))
+
+
+def _with_fcheck(cmf: int, flg: int) -> bytes:
+    """A zlib header whose FCHECK bits are valid (RFC 1950 §2.2), so a
+    decoder must reject it for its method or FDICT bit, not its check."""
+    flg &= 0xE0
+    flg |= (31 - (cmf * 256 + flg) % 31) % 31
+    return bytes([cmf, flg])
+
+
+def _idat_defects():
+    raw = b"".join(b"\x00" + bytes(range(r, r + 12)) for r in range(4))
+    z = zlib.compress(raw, 6)
+    adler = bytearray(z)
+    adler[-1] ^= 0x01
+    return {
+        "truncated": z[:len(z) // 2],
+        "wrong_method": _with_fcheck(0x77, z[1]) + z[2:],
+        "fdict": _with_fcheck(z[0], z[1] | 0x20) + z[2:],
+        "flipped_adler": bytes(adler),
+        "trailing_bytes": z + b"\x00\x00",
+    }
+
+
+@pytest.mark.parametrize("defect", sorted(_idat_defects()))
+def test_png_idat_defects_rejected(defect):
+    """Each IDAT defect, with every chunk CRC valid, is a ValueError, so
+    decode_image's fake=True mode returns the stand-in for it."""
+    from linear_kdtree_spark.functions.mediacodec import decode_png
+    from linear_kdtree_spark.operators.multimodal import (
+        _fake_decode,
+        decode_image,
+    )
+
+    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
+    buf = (_PNG_SIG + _chunk(b"IHDR", ihdr)
+           + _chunk(b"IDAT", _idat_defects()[defect])
+           + _chunk(b"IEND", b""))
+    with pytest.raises(ValueError):
+        decode_png(buf)
+    assert np.array_equal(decode_image(buf, fake=True), _fake_decode(buf))
+
+
 class TestPng:
-    def _rt(self, img, **kw):
+    def _rt(self, img):
         from linear_kdtree_spark.functions.mediacodec import (
             decode_png,
             encode_png,
         )
 
-        out = decode_png(encode_png(img, **kw))
+        out = decode_png(encode_png(img))
         assert out.shape == (img.shape[0], img.shape[1],
                              1 if img.ndim == 2 else img.shape[2])
         assert (out.reshape(img.shape) == img).all()
@@ -204,7 +254,6 @@ class TestPng:
         rng = np.random.default_rng(5)
         img = rng.integers(0, 256, (19, 13, 3), dtype=np.uint8)
         self._rt(img)
-        self._rt(img, compress=False)
 
     def test_roundtrip_gray_ga_rgba(self):
         rng = np.random.default_rng(6)
@@ -212,94 +261,27 @@ class TestPng:
             self._rt(rng.integers(0, 256, (7, 9, ch), dtype=np.uint8))
         self._rt(rng.integers(0, 256, (7, 9), dtype=np.uint8))  # 2-D gray
 
-    def test_inflate_differential_vs_stdlib_zlib(self):
-        import zlib
-
-        from linear_kdtree_spark.functions.mediacodec import inflate
-
-        rng = np.random.default_rng(7)
-        for n in (0, 1, 257, 9001, 80_000):
-            # low-entropy data produces real LZ77 matches + huffman blocks
-            data = rng.integers(0, 7, n, dtype=np.uint8).tobytes()
-            for level in (0, 1, 6, 9):  # stored / fast / default / max
-                assert inflate(zlib.compress(data, level)[2:-4]) == data
-
     def test_all_five_filter_types_unfilter(self):
         """Hand-filter rows with each forward filter (PNG spec §9) and
         check the decoder reverses them — the encoder only emits filter
         0, so this is the only coverage of Sub/Up/Average/Paeth."""
-        from linear_kdtree_spark.functions.mediacodec import (
-            _paeth,
-            _zlib_compress_stored,
-            _crc32,
-        )
         from linear_kdtree_spark.functions.mediacodec import decode_png
 
         rng = np.random.default_rng(8)
-        h, w, ch = 5, 6, 3
-        img = rng.integers(0, 256, (h, w, ch), dtype=np.int64)
-        stride = w * ch
-        flat = img.reshape(h, stride)
-        raw = bytearray()
-        prev = np.zeros(stride, dtype=np.int64)
-        for r in range(h):
-            ftype = r % 5
-            cur = flat[r]
-            filt = np.zeros(stride, dtype=np.int64)
-            for i in range(stride):
-                a = int(cur[i - ch]) if i >= ch else 0
-                b = int(prev[i])
-                c = int(prev[i - ch]) if i >= ch else 0
-                x = int(cur[i])
-                if ftype == 0:
-                    filt[i] = x
-                elif ftype == 1:
-                    filt[i] = (x - a) % 256
-                elif ftype == 2:
-                    filt[i] = (x - b) % 256
-                elif ftype == 3:
-                    filt[i] = (x - (a + b) // 2) % 256
-                else:
-                    filt[i] = (x - _paeth(a, b, c)) % 256
-            raw.append(ftype)
-            raw += filt.astype(np.uint8).tobytes()
-            prev = cur
-        import struct
-
-        sig = b"\x89PNG\r\n\x1a\n"
-
-        def chunk(ctype, data):
-            return (len(data).to_bytes(4, "big") + ctype + data
-                    + _crc32(ctype + data).to_bytes(4, "big"))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        buf = (sig + chunk(b"IHDR", ihdr)
-               + chunk(b"IDAT", _zlib_compress_stored(bytes(raw)))
-               + chunk(b"IEND", b""))
+        img = rng.integers(0, 256, (5, 6, 3), dtype=np.int64)
+        buf = _hand_filter_png(img, lambda r: r % 5)
         assert (decode_png(buf) == img).all()
 
     def test_palette_png(self):
-        import struct
-
-        from linear_kdtree_spark.functions.mediacodec import (
-            _crc32,
-            _zlib_compress_stored,
-            decode_png,
-        )
-
-        sig = b"\x89PNG\r\n\x1a\n"
-
-        def chunk(ctype, data):
-            return (len(data).to_bytes(4, "big") + ctype + data
-                    + _crc32(ctype + data).to_bytes(4, "big"))
+        from linear_kdtree_spark.functions.mediacodec import decode_png
 
         palette = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 7, 8, 9])
         idx = np.array([[0, 1, 2, 3], [3, 2, 1, 0]], dtype=np.uint8)
         raw = b"".join(b"\x00" + row.tobytes() for row in idx)
         ihdr = struct.pack(">IIBBBBB", 4, 2, 8, 3, 0, 0, 0)
-        buf = (sig + chunk(b"IHDR", ihdr) + chunk(b"PLTE", palette)
-               + chunk(b"IDAT", _zlib_compress_stored(raw))
-               + chunk(b"IEND", b""))
+        buf = (_PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"PLTE", palette)
+               + _chunk(b"IDAT", zlib.compress(raw, 0))
+               + _chunk(b"IEND", b""))
         out = decode_png(buf)
         want = np.frombuffer(palette, np.uint8).reshape(4, 3)[idx]
         assert (out == want).all()
@@ -347,14 +329,9 @@ def test_wav_odd_length_data_chunk_is_padded():
 
 def _hand_filter_png(img: np.ndarray, ftype_of_row) -> bytes:
     """Forward-filter an image per-row (PNG spec §9) and wrap it in a
-    stored-deflate PNG — shared scaffold for the filter/wavefront tests."""
-    import struct
-
-    from linear_kdtree_spark.functions.mediacodec import (
-        _crc32,
-        _paeth,
-        _zlib_compress_stored,
-    )
+    stored-deflate PNG (zlib level 0 emits stored blocks) — shared
+    scaffold for the filter/wavefront tests."""
+    from linear_kdtree_spark.functions.mediacodec import _paeth
 
     h, w, ch = img.shape
     stride = w * ch
@@ -384,14 +361,10 @@ def _hand_filter_png(img: np.ndarray, ftype_of_row) -> bytes:
         raw += filt.astype(np.uint8).tobytes()
         prev = cur
 
-    def chunk(ctype, data):
-        return (len(data).to_bytes(4, "big") + ctype + data
-                + _crc32(ctype + data).to_bytes(4, "big"))
-
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 2 if ch == 3 else 0, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", _zlib_compress_stored(bytes(raw)))
-            + chunk(b"IEND", b""))
+    return (_PNG_SIG + _chunk(b"IHDR", ihdr)
+            + _chunk(b"IDAT", zlib.compress(bytes(raw), 0))
+            + _chunk(b"IEND", b""))
 
 
 def test_unfilter_wavefront_long_runs_match_scalar():
@@ -421,25 +394,6 @@ def test_unfilter_wavefront_long_runs_match_scalar():
         assert (got == scalar).all()
 
 
-def test_inflate_batched_lz77_overlap_copies():
-    """Self-overlapping matches (dist < length) exercise the batched
-    pattern-tile copy; differential vs stdlib zlib on highly repetitive
-    inputs at every compression level."""
-    import zlib
-
-    from linear_kdtree_spark.functions.mediacodec import inflate
-
-    rng = np.random.default_rng(7)
-    payloads = [
-        b"ab" * 5000,                      # dist 2 overlap copies
-        b"x" * 70000,                      # dist 1, max-length runs
-        bytes(rng.integers(0, 4, 30000, dtype=np.uint8)),  # small alphabet
-    ]
-    for data in payloads:
-        for level in (1, 6, 9):
-            assert inflate(zlib.compress(data, level)[2:-4]) == data
-
-
 def test_truncated_headers_fall_back_to_stand_in():
     """A payload whose header dies inside struct.unpack / buffer indexing
     (truncated BMP/PNG/WAV) must hit the deterministic stand-in under
@@ -457,23 +411,19 @@ def test_truncated_headers_fall_back_to_stand_in():
         assert img.shape == (8, 8, 3)
 
 
-def test_crc32_vectorized_matches_binascii():
-    """The chunk-parallel CRC-32 (numpy states + GF(2) combine tree) must
-    be bit-identical to the reference table loop — pinned against
-    binascii.crc32 across the vector/scalar threshold, power-of-two
-    boundaries, tail lengths, and running-init chaining."""
-    import binascii
+@pytest.mark.parametrize("argv", [
+    ["tools/bench_mediacodec.py", "32", "1"],
+    ["tools/bench_jpegcodec.py", "32"],
+])
+def test_codec_bench_tools_run(argv):
+    """The codec microbenches reach into the codec modules
+    (bench_mediacodec uses ``_paeth``): a small run of each must exit
+    cleanly, so a change to those modules cannot leave them broken."""
+    import os
+    import subprocess
+    import sys
 
-    from linear_kdtree_spark.functions.mediacodec import (
-        _CRC_VECTOR_MIN, _crc32,
-    )
-
-    rng = np.random.default_rng(11)
-    for n in (0, 1, 63, 64, _CRC_VECTOR_MIN - 1, _CRC_VECTOR_MIN,
-              _CRC_VECTOR_MIN + 1, 4096, 5000, 65536, 100001, 1 << 20,
-              (1 << 20) + 17):
-        data = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
-        assert _crc32(data) == binascii.crc32(data), n
-    a = rng.integers(0, 256, 70000, dtype=np.uint8).tobytes()
-    b = rng.integers(0, 256, 123456, dtype=np.uint8).tobytes()
-    assert _crc32(b, _crc32(a)) == binascii.crc32(a + b)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run([sys.executable, *argv], cwd=repo,
+                         capture_output=True, text=True, timeout=120)
+    assert res.returncode == 0, res.stderr

@@ -199,3 +199,38 @@ def test_default_local_dir_opt_out_env(monkeypatch):
     monkeypatch.delenv("SPARK_LOCAL_DIRS", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_NO_SHM", "1")
     assert S._default_local_dir(None) is None
+
+
+def test_local_workers_import_package_from_any_cwd(tmp_path):
+    """Under local[N] a driver that puts the repository on ``sys.path``
+    and runs from another directory gets Python workers that import the
+    package: ``get_spark`` gives them its directory on PYTHONPATH. The
+    driver runs in a subprocess with an empty cwd and PYTHONPATH
+    stripped, so only that conf can make the worker's import resolve."""
+    driver_py = tmp_path / "driver.py"
+    driver_py.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "from linear_kdtree_spark import get_spark\n"
+        "spark = get_spark(app_name='worker_import', master='local[1]',\n"
+        "                  shuffle_partitions=1)\n"
+        "def probe(batches):\n"
+        "    import linear_kdtree_spark\n"
+        "    for pdf in batches:\n"
+        "        yield pdf.assign(id=pdf['id'] + 1)\n"
+        "rows = spark.range(3).mapInPandas(probe, 'id long').collect()\n"
+        "print(sorted(r.id for r in rows))\n"
+        "spark.stop()\n"
+    )
+    workdir = tmp_path / "empty_cwd"
+    workdir.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    res = subprocess.run(
+        [sys.executable, str(driver_py)], capture_output=True, text=True,
+        timeout=300, env=env, cwd=str(workdir),
+    )
+    assert res.returncode == 0, f"driver failed:\n{res.stdout}\n{res.stderr}"
+    assert res.stdout.strip().splitlines()[-1] == "[1, 2, 3]"
