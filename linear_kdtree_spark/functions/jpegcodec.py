@@ -209,6 +209,10 @@ class _BitWriter:
             self.out.append(b)
             if b == 0xFF:
                 self.out.append(0x00)
+        # keep only the pending bits: an unmasked accumulator grows with
+        # every code, and each shift then costs time proportional to the
+        # bytes already written (quadratic encode)
+        self.acc &= (1 << self.nacc) - 1
 
     def flush(self) -> None:
         if self.nacc:

@@ -54,7 +54,8 @@ def ancestor_at_depth(node: Column, path_len: Column, depth: int) -> Column:
 # fast branch-free derivations (the build's finalize projection)
 # --------------------------------------------------------------------------
 
-def _quote(name: str) -> str:
+def sql_name(name: str) -> str:
+    """``name`` as a quoted SQL identifier (a column name, never parsed)."""
     return "`" + name.replace("`", "``") + "`"
 
 
@@ -73,7 +74,7 @@ def sort_key_from_path_len(
     (``node`` and ``path_len`` are column names). No step can overflow, so
     an out-of-range row that subexpression elimination evaluates before a
     filter drops it cannot fail under ANSI."""
-    return F.expr(_sort_key_sql(_quote(node), _quote(path_len), max_depth))
+    return F.expr(_sort_key_sql(sql_name(node), sql_name(path_len), max_depth))
 
 
 def with_derived_cols(df: DataFrame, max_depth: int = MAX_DEPTH) -> DataFrame:
@@ -131,7 +132,7 @@ def with_derived_cols(df: DataFrame, max_depth: int = MAX_DEPTH) -> DataFrame:
     # smear = 2^(L+1) − 1, so smear >> 1 = 2^L − 1
     code = step(f"CAST(shiftright({smear}, 1) - {rev} AS BIGINT)")
     derived = {"path_len": plen, "code": code, "sort_key": sort_key}
-    out = [_quote(c) for c in df.columns if c not in derived]
+    out = [sql_name(c) for c in df.columns if c not in derived]
     out += [f"{tmp} AS {c}" for c, tmp in derived.items()]
     return df.selectExpr("*", *steps).selectExpr(*out)
 
@@ -140,43 +141,38 @@ def with_derived_cols(df: DataFrame, max_depth: int = MAX_DEPTH) -> DataFrame:
 # Fixed-grid Z-order tiles (H3/S2-style interop; SQL-portable)
 # --------------------------------------------------------------------------
 
-def grid_cell_col(v: Column, vmin: float, vmax: float, depth: int) -> Column:
-    """Clamped cell ordinate: floor((v - vmin) * 2^depth / (vmax - vmin)).
-    NULL in → NULL out: Spark's greatest/least SKIP nulls, so without the
-    explicit guard a NULL coordinate silently clamped to cell 0 — every
-    missing-coordinate point piled into the (vmin) corner tile and
-    corrupted tile aggregates (review r5)."""
+def grid_cell_col(v: str, vmin: float, vmax: float, depth: int) -> Column:
+    """Clamped cell ordinate of the SQL expression ``v`` (a column name,
+    say): floor((v - vmin) * 2^depth / (vmax - vmin)), as one ``F.expr``.
+    Constants are DOUBLE literals (``10.0D``; a bare ``10.0`` parses as
+    DECIMAL). NULL in → NULL out: Spark's greatest/least SKIP nulls, so
+    without the explicit guard a NULL coordinate silently clamped to cell
+    0 — every missing-coordinate point piled into the (vmin) corner tile
+    and corrupted tile aggregates (review r5)."""
     scale = float((1 << depth) / (vmax - vmin))
-    raw = F.floor((v.cast("double") - F.lit(vmin)) * F.lit(scale)).cast("long")
-    clamped = F.least(F.greatest(raw, F.lit(0)), F.lit((1 << depth) - 1))
-    return F.when(v.isNull(), F.lit(None).cast("long")).otherwise(clamped)
+    raw = f"CAST(FLOOR((CAST({v} AS DOUBLE) - {float(vmin)!r}D) * {scale!r}D) AS BIGINT)"
+    clamped = f"least(greatest({raw}, 0), {(1 << depth) - 1})"
+    return F.expr(f"CASE WHEN ({v}) IS NULL THEN CAST(NULL AS BIGINT) ELSE {clamped} END")
 
 
-def morton_tile_col(
-    x: Column,
-    y: Column,
-    depth: int,
-    bounds: tuple[float, float, float, float] = WORLD,
-) -> Column:
-    """Interleaved Z-order tile id at ``depth`` bits per axis (x in even bit
-    positions, y in odd)."""
-    xmin, ymin, xmax, ymax = bounds
-    ix = grid_cell_col(x, xmin, xmax, depth)
-    iy = grid_cell_col(y, ymin, ymax, depth)
-    # pure integer shift/mask interleave — bit i of a clamped non-negative
-    # cell ordinate is shiftright(v, i) & 1 == floor(v / 2^i) % 2, so the
-    # values are identical to the double-divide form the SQL oracle text
-    # keeps (morton_tile_sql), at a fraction of the per-row cost (the
-    # divide form pays a double divide + floor + cast per bit)
-    tile = F.lit(0).cast("long")
+def morton_tile_col(ix: str, iy: str, depth: int) -> Column:
+    """Interleaved Z-order tile id at ``depth`` bits per axis of the cell
+    ordinates ``ix`` and ``iy`` (SQL expressions; x in even bit positions,
+    y in odd), as one ``F.expr``.
+
+    Each ordinate appears in all ``depth`` of its bit terms, so pass the
+    names of columns that hold :func:`grid_cell_col` values rather than
+    its text: :func:`~linear_kdtree_spark.operators.tile.assign_tiles_morton`
+    computes them once as lateral aliases of the same select. Pure integer
+    shift/mask interleave — bit i of a clamped non-negative cell ordinate
+    is shiftright(v, i) & 1 == floor(v / 2^i) % 2, so the values are
+    identical to the double-divide form the SQL oracle text keeps
+    (:func:`morton_tile_sql`), at a fraction of the per-row cost."""
+    terms = []
     for i in range(depth):
-        tile = tile + F.shiftleft(
-            F.shiftright(ix, i).bitwiseAND(F.lit(1)), 2 * i
-        )
-        tile = tile + F.shiftleft(
-            F.shiftright(iy, i).bitwiseAND(F.lit(1)), 2 * i + 1
-        )
-    return tile
+        terms.append(f"shiftleft(shiftright({ix}, {i}) & 1, {2 * i})")
+        terms.append(f"shiftleft(shiftright({iy}, {i}) & 1, {2 * i + 1})")
+    return F.expr(" + ".join(["0L", *terms]))
 
 
 def morton_tile_sql(
@@ -185,9 +181,10 @@ def morton_tile_sql(
     depth: int,
     bounds: tuple[float, float, float, float] = WORLD,
 ) -> str:
-    """ANSI-SQL text of :func:`morton_tile_col`, parseable by both Spark SQL
-    and DuckDB with identical double/int semantics — used by the driver's
-    DuckDB oracle so tile ids match bit-for-bit."""
+    """ANSI-SQL text of the tile id :func:`grid_cell_col` and
+    :func:`morton_tile_col` compute, parseable by both Spark SQL and DuckDB
+    with identical double/int semantics — used by the driver's DuckDB
+    oracle so tile ids match bit-for-bit."""
     xmin, ymin, xmax, ymax = bounds
     sx = repr(float((1 << depth) / (xmax - xmin)))
     sy = repr(float((1 << depth) / (ymax - ymin)))

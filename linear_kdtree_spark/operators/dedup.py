@@ -5,9 +5,9 @@ Scale architecture:
 - exact: one hash-groupBy shuffle on md5(text) — map-side partial agg.
 - MinHash+LSH: shingle → per-permutation min-hash signature → band buckets →
   self-equi-join on (band, bucket) → exact Jaccard refine. Shuffle only on
-  band buckets; candidate pairs ≪ n². Two signature impls: a portable
-  md5-expression form (whole-stage codegen, also expressible in the DuckDB
-  oracle) and a numpy pandas-UDF form (faster constants at depth).
+  band buckets; candidate pairs ≪ n². The signature is one portable
+  md5-expression form, built as SQL text (one py4j call per projection),
+  evaluated in the JVM and also expressible in the DuckDB oracle.
 - SimHash: per-token hash → per-bit majority vote → Hamming-bucket join.
 - embedding near-dup: cosine over LSH sign-buckets (see similarity.py).
 """
@@ -18,8 +18,10 @@ import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from linear_kdtree_spark.session import memo
+from linear_kdtree_spark.operators.interval_join import broadcast_hint
+from linear_kdtree_spark.session import arrow_table, local_frame, memo
 
 logger = logging.getLogger(__name__)
 
@@ -49,14 +51,16 @@ def drop_oversized_buckets(
 
     - sizing job: ``groupBy(keys).count()`` — hash aggregate with map-side
       partial aggregation, so an oversized bucket contributes one partial
-      row per input task to the shuffle, never its data rows; filtered to
-      the (few-by-construction) keys above the cap, then a tiny agg for an
-      EXACT dropped-mass log line (replaces the r4 Observation/HLL path).
+      row per input task to the shuffle, never its data rows — filtered to
+      the keys above the cap and collected. There are at most
+      rows / ``max_bucket_size`` of them, and the logged row and bucket
+      counts are summed from them on the driver: one job, one shuffle.
     - common case (nothing oversized): returns ``bucketed`` unchanged —
       the candidate join's plan is untouched and pays nothing at run time.
-    - otherwise: broadcast LEFT ANTI join against the hot keys — the data
-      side is filtered map-side before the candidate join's shuffle, so
-      the degenerate bucket's rows never land in a single task.
+    - otherwise: LEFT ANTI join against the hot keys as a ``local_frame``,
+      hinted by ``interval_join.broadcast_hint`` from their Arrow size — the
+      data side is filtered map-side before the candidate join's shuffle,
+      so the degenerate bucket's rows never land in a single task.
 
     The sizing job makes this call EAGER (it runs one Spark job); callers
     keep the expensive upstream (signatures) persisted so the sizing pass
@@ -64,25 +68,28 @@ def drop_oversized_buckets(
     signatures twice. ``max_bucket_size=None`` disables the guard."""
     if max_bucket_size is None:
         return bucketed
-    sizes = (
+    hot = (
         bucketed.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_bucket_n"))
-        .filter(F.col("_bucket_n") > max_bucket_size)
+        .agg(F.expr("count(1) AS _bucket_n"))
+        .filter(f"_bucket_n > {int(max_bucket_size)}")
+        .collect()
     )
-    stat = sizes.agg(
-        F.coalesce(F.sum("_bucket_n"), F.lit(0)).alias("rows"),
-        F.count(F.lit(1)).alias("buckets"),
-    ).first()
-    if not stat["buckets"]:
+    if not hot:
         return bucketed
     logger.warning(
         "%s: dropping %d rows in %d oversized buckets (> %d members) "
         "from the candidate join; near-identical members still pair "
         "in bands where the cluster splits, exact duplicates belong "
         "to exact_dedup",
-        label, stat["rows"], stat["buckets"], max_bucket_size,
+        label, sum(r["_bucket_n"] for r in hot), len(hot), max_bucket_size,
     )
-    return bucketed.join(F.broadcast(sizes.select(*keys)), keys, "left_anti")
+    spark = bucketed.sparkSession
+    schema = StructType([bucketed.schema[k] for k in keys])
+    table = arrow_table([tuple(r[k] for k in keys) for r in hot], schema)
+    hot_keys = local_frame(spark, table, schema)
+    return bucketed.join(
+        hot_keys.hint(broadcast_hint(spark, table, len(hot))), keys, "left_anti"
+    )
 
 
 # widen_partitions' probe memo, per session (session.memo): keyed on
@@ -138,28 +145,28 @@ def exact_dedup(
 
 # ------------------------------------------------------------------ shingles
 
-def shingles(text: F.Column, n: int = 3, words: bool = True) -> F.Column:
-    """Distinct n-gram shingle array: word n-grams (space-joined) or
-    character n-grams — pure higher-order array expressions.
+def _shingles_sql(text: str, n: int, words: bool) -> str:
+    if words:
+        toks = f"filter(split({text}, '\\\\s+'), _t -> _t != '')"
+        count = f"size({toks}) - {n} + 1"
+        picks = ", ".join(f"element_at({toks}, _i + {j} + 1)" for j in range(n))
+        grams = f"transform(sequence(0, {count} - 1), _i -> concat_ws(' ', {picks}))"
+    else:
+        count = f"length({text}) - {n} + 1"
+        grams = f"transform(sequence(1, {count}), _i -> substr({text}, _i, {n}))"
+    return (f"CASE WHEN {count} >= 1 THEN array_distinct({grams}) "
+            "ELSE CAST(array() AS ARRAY<STRING>) END")
+
+
+def shingles(text: str, n: int = 3, words: bool = True) -> F.Column:
+    """Distinct n-gram shingle array of the SQL expression ``text`` (a
+    column name, say): word n-grams (space-joined) or character n-grams —
+    pure higher-order array expressions, built as one ``F.expr`` (the SQL
+    text is parsed in one py4j call; a Column tree costs one per node).
 
     NB: Spark's ``sequence(a, b)`` DESCENDS when a > b (it never returns
     empty), so short inputs are guarded with an explicit empty array."""
-    if words:
-        toks = F.filter(F.split(text, r"\s+"), lambda t: t != F.lit(""))
-        count = F.size(toks) - n + 1
-        idx = F.sequence(F.lit(0), count - 1)
-        grams = F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
-            ),
-        )
-    else:
-        count = F.length(text) - n + 1
-        idx = F.sequence(F.lit(1), count)
-        grams = F.transform(idx, lambda i: text.substr(i, F.lit(n)))
-    empty = F.array().cast("array<string>")
-    return F.when(count >= 1, F.array_distinct(grams)).otherwise(empty)
+    return F.expr(_shingles_sql(text, n, words))
 
 
 def ngram_profile(
@@ -168,7 +175,7 @@ def ngram_profile(
     """(id, n_shingles) — distinct word-n-gram count per document."""
     return docs.select(
         F.col(id_col),
-        F.size(shingles(F.col(text_col), n)).alias("n_shingles"),
+        F.size(shingles(text_col, n)).alias("n_shingles"),
     )
 
 
@@ -182,7 +189,7 @@ def jaccard_pairs(
     """Exact n-gram Jaccard for given candidate (a_id, b_id) pairs —
     array_intersect / array_union sizes, no UDF."""
     sh = widen_partitions(docs).select(
-        F.col(id_col).alias("_id"), shingles(F.col(text_col), n).alias("_sh")
+        F.col(id_col).alias("_id"), shingles(text_col, n).alias("_sh")
     ).persist()  # shingled once, probed twice (both join sides)
     a = sh.select(F.col("_id").alias("a_id"), F.col("_sh").alias("a_sh"))
     b = sh.select(F.col("_id").alias("b_id"), F.col("_sh").alias("b_sh"))
@@ -203,30 +210,27 @@ def jaccard_pairs(
 
 # -------------------------------------------------------------- MinHash + LSH
 
-def minhash_signature_from_shingles(sh: F.Column, num_perm: int) -> F.Column:
-    """Portable md5-min signature over a shingle-array column: sig_j = min
-    over shingles of md5(shingle || ':' || j) — an array<string> column of
-    length num_perm. Lexicographic min over hex digests ≡ min over 128-bit
-    hashes."""
-
-    # NB: factory, not `lambda s, j=j: ...` — PySpark treats a 2-parameter
-    # lambda inside transform() as (element, index) and rebinds the second
-    # parameter to the array index
-    def hasher(j: int):
-        suffix = F.lit(f":{j}")
-        return lambda s: F.md5(F.concat(s, suffix))
-
-    return F.array(
-        *[F.array_min(F.transform(sh, hasher(j))) for j in range(num_perm)]
-    )
+def _minhash_sql(sh: str, num_perm: int) -> str:
+    return "array(" + ", ".join(
+        f"array_min(transform({sh}, _s -> md5(concat(_s, ':{j}'))))"
+        for j in range(num_perm)
+    ) + ")"
 
 
-def minhash_signature(text: F.Column, num_perm: int, n: int = 3) -> F.Column:
-    """Signature straight from text. NB: when used num_perm-wide in one
-    projection, Catalyst's CollapseProject re-inlines the shingling into
+def minhash_signature_from_shingles(sh: str, num_perm: int) -> F.Column:
+    """Portable md5-min signature over the shingle-array SQL expression
+    ``sh``: sig_j = min over shingles of md5(shingle || ':' || j) — an
+    array<string> column of length num_perm, built as one ``F.expr``.
+    Lexicographic min over hex digests ≡ min over 128-bit hashes."""
+    return F.expr(_minhash_sql(sh, num_perm))
+
+
+def minhash_signature(text: str, num_perm: int, n: int = 3) -> F.Column:
+    """Signature straight from the text SQL expression ``text``. NB: when
+    used num_perm-wide in one projection, the shingling text is repeated in
     every permutation branch — prefer shingling into a persisted DataFrame
     first (as lsh_candidate_pairs does) for the hot path."""
-    return minhash_signature_from_shingles(shingles(text, n), num_perm)
+    return F.expr(_minhash_sql(_shingles_sql(text, n, True), num_perm))
 
 
 def lsh_candidate_pairs(
@@ -248,6 +252,11 @@ def lsh_candidate_pairs(
     explode from the cached 8-hex-string rows, and the self-equi-join on
     (band, bucket) is an ordinary shuffle join AQE can skew-split.
 
+    Plan cost: the shingles, the signature and the band array are each one
+    SQL text, parsed in one py4j call; written as Column trees they took
+    one round trip per node (753 in all at num_perm 8, 4 bands), 165 ms of
+    driver time per call before any job ran (4-core host).
+
     Cache lifecycle (ADVICE r4): the two persists cannot be unpersisted
     here — the returned DataFrame is lazy and still reads them — so they
     rely on executor-storage LRU eviction (MEMORY_AND_DISK deserialized,
@@ -257,40 +266,28 @@ def lsh_candidate_pairs(
     consuming the pairs in the same job)."""
     rows = num_perm // bands
     sh_df = widen_partitions(docs).select(
-        F.col(id_col).alias("_id"), shingles(F.col(text_col), n).alias("_sh")
+        F.col(id_col).alias("_id"), shingles(text_col, n).alias("_sh")
     ).persist()  # materialization boundary: shingle once, hash num_perm×
     sig = sh_df.select(
-        "_id", minhash_signature_from_shingles(F.col("_sh"), num_perm).alias("sig")
+        "_id", minhash_signature_from_shingles("_sh", num_perm).alias("sig")
     ).persist()
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[F.element_at("sig", b * rows + r + 1) for r in range(rows)],
-                    )
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
+    band_arr = ", ".join(
+        f"struct({b} AS band, md5(concat_ws('|', "
+        + ", ".join(f"element_at(sig, {b * rows + r + 1})" for r in range(rows))
+        + ")) AS bucket)"
+        for b in range(bands)
     )
-    all_buckets = sig.select("_id", F.explode(band_arr).alias("bb")).select(
-        "_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    all_buckets = sig.selectExpr("_id", f"explode(array({band_arr})) AS bb").selectExpr(
+        "_id", "bb.band AS band", "bb.bucket AS bucket"
     )
     all_buckets = drop_oversized_buckets(
         all_buckets, ["band", "bucket"], max_bucket_size, "minhash_lsh"
     )
-    left = all_buckets.select(
-        F.col("band"), F.col("bucket"), F.col("_id").alias("a_id")
-    )
-    right = all_buckets.select(
-        F.col("band"), F.col("bucket"), F.col("_id").alias("b_id")
-    )
+    left = all_buckets.selectExpr("band", "bucket", "_id AS a_id")
+    right = all_buckets.selectExpr("band", "bucket", "_id AS b_id")
     return (
         left.join(right, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
+        .filter("a_id < b_id")
         .select("a_id", "b_id")
         .distinct()
     )

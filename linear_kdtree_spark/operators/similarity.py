@@ -3,11 +3,15 @@ brute-force cosine top-k (the exact baseline) and two scale paths —
 IVF (coarse-quantizer buckets) and random-hyperplane LSH sign-buckets.
 
 All scoring is sequential-fold column expressions (``zip_with`` +
-``aggregate`` — deterministic summation order, whole-stage codegen) or
-numpy inside Arrow batches; never per-row Python.
+``aggregate`` — deterministic summation order, evaluated in the JVM) or
+numpy inside Arrow batches; never per-row Python. The fold helpers
+(:func:`dot`, :func:`norm`, :func:`cosine`) take SQL text and are built
+as SQL text: a projection is parsed in one py4j call, where a Column tree
+cost one round trip per node.
 
 Scale notes: brute top-k is a broadcast of the (small) query set against
-the vector table — one pass, one shuffle for the final per-query top-k.
+the vector table, spread over every core (``dedup.widen_partitions``) —
+one pass, one shuffle for the final per-query top-k.
 IVF cuts the scanned fraction to ~n_probe/n_cells; cells are a plain
 equi-join key, so Parquet bucketing/partitioning by cell makes the probe
 a partition-pruned scan.
@@ -20,24 +24,38 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from linear_kdtree_spark.operators.dedup import (
+    DEFAULT_MAX_BUCKET,
+    drop_oversized_buckets,
+    widen_partitions,
+)
 from linear_kdtree_spark.session import local_frame
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product of two array<numeric> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _dot_sql(a: str, b: str) -> str:
+    return (f"aggregate(zip_with({a}, {b}, (_x, _y) -> "
+            "CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE)), 0.0D, (_acc, _v) -> _acc + _v)")
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def _norm_sql(a: str) -> str:
+    return f"sqrt({_dot_sql(a, a)})"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def dot(a: str, b: str) -> Column:
+    """Sequential-fold dot product of the array<numeric> SQL expressions
+    ``a`` and ``b`` (column names, say), as one ``F.expr``."""
+    return F.expr(_dot_sql(a, b))
+
+
+def norm(a: str) -> Column:
+    """Euclidean norm of the array SQL expression ``a``: sqrt of its
+    :func:`dot` with itself."""
+    return F.expr(_norm_sql(a))
+
+
+def cosine(a: str, b: str) -> Column:
+    """dot(a, b) / (norm(a) · norm(b)) of two array SQL expressions."""
+    return F.expr(f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")
 
 
 def brute_topk_cosine(
@@ -53,34 +71,37 @@ def brute_topk_cosine(
     every vector (self-matches excluded when ids collide). Ties break by
     ascending vec_id.
 
+    The vectors pass through ``dedup.widen_partitions`` first: a vector
+    table that arrives as one file is one partition, and the fold would
+    otherwise score every (query, vector) pair in a single task. An input
+    with at least ``defaultParallelism`` partitions passes unchanged.
+
     Each side's norm is computed ONCE per row in a projection below the
     join instead of once per (query, vector) pair — the aggregate/zip_with
     fold expressions are interpreted per element, so this cuts the
     per-pair fold work from 3 array passes to 1 (the dot). cos is the
-    bit-identical expression dot / (norm_vec · norm_query)."""
-    q = F.broadcast(
-        queries.select(query_id, query_vec_col).withColumn(
-            "_qn", norm(F.col(query_vec_col))
-        )
+    bit-identical expression dot / (norm_vec · norm_query); a zero-norm
+    vector divides by zero (an error under ANSI). Every projection is SQL
+    text, one py4j call each."""
+    q = queries.selectExpr(
+        query_id, query_vec_col, f"{_norm_sql(query_vec_col)} AS _qn"
     )
-    joined = (
-        vectors.select(vec_id, vec_col)
-        .withColumn("_vn", norm(F.col(vec_col)))
-        .crossJoin(q)
+    vecs = widen_partitions(vectors.select(vec_id, vec_col)).selectExpr(
+        "*", f"{_norm_sql(vec_col)} AS _vn"
     )
-    scored = joined.select(
-        query_id,
-        vec_id,
-        (
-            dot(F.col(vec_col), F.col(query_vec_col))
-            / (F.col("_vn") * F.col("_qn"))
-        ).alias("cos"),
-    ).filter(F.col(query_id) != F.col(vec_id))
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos"), vec_id)
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(query_id, vec_id, "rank")
+        vecs.crossJoin(F.broadcast(q))
+        .selectExpr(
+            query_id, vec_id,
+            f"{_dot_sql(vec_col, query_vec_col)} / (_vn * _qn) AS cos",
+        )
+        .filter(f"{query_id} != {vec_id}")
+        .selectExpr(
+            query_id, vec_id,
+            f"CAST(row_number() OVER (PARTITION BY {query_id} "
+            f"ORDER BY cos DESC, {vec_id}) AS INT) AS rank",
+        )
+        .filter(f"rank <= {int(k)}")
     )
 
 
@@ -96,11 +117,11 @@ def ivf_assign(
     join (see brute_topk_cosine); cos is bit-identical."""
     joined = (
         vectors.select(vec_id, vec_col)
-        .withColumn("_vn", norm(F.col(vec_col)))
+        .withColumn("_vn", norm(vec_col))
         .crossJoin(
             F.broadcast(
                 centroids.select("cell", "c_embedding").withColumn(
-                    "_cn", norm(F.col("c_embedding"))
+                    "_cn", norm("c_embedding")
                 )
             )
         )
@@ -109,7 +130,7 @@ def ivf_assign(
         vec_id,
         "cell",
         (
-            dot(F.col(vec_col), F.col("c_embedding"))
+            dot(vec_col, "c_embedding")
             / (F.col("_vn") * F.col("_cn"))
         ).alias("cos"),
     )
@@ -259,7 +280,7 @@ def ivf_topk_cosine(
     )
     qscored = qjoined.select(
         query_id, "cell",
-        cosine(F.col(query_vec_col), F.col("c_embedding")).alias("cos"),
+        cosine(query_vec_col, "c_embedding").alias("cos"),
     )
     qw = Window.partitionBy(query_id).orderBy(F.desc("cos"), "cell")
     probes = (
@@ -269,17 +290,17 @@ def ivf_topk_cosine(
     )
     qv = (
         queries.select(query_id, query_vec_col)
-        .withColumn("_qn", norm(F.col(query_vec_col)))
+        .withColumn("_qn", norm(query_vec_col))
         .join(probes, query_id)
     )
     cand = (
-        binned.withColumn("_vn", norm(F.col(vec_col)))
+        binned.withColumn("_vn", norm(vec_col))
         .join(F.broadcast(qv), "cell")
     )
     scored = cand.select(
         query_id, vec_id,
         (
-            dot(F.col(vec_col), F.col(query_vec_col))
+            dot(vec_col, query_vec_col)
             / (F.col("_vn") * F.col("_qn"))
         ).alias("cos"),
     ).filter(F.col(query_id) != F.col(vec_id))
@@ -338,11 +359,6 @@ def cosine_near_dup_pairs(
     for a single band (the round-1 recall bug). Scale shape: candidates are
     bucket-join rows (never all pairs); signature computation is one
     matmul per Arrow batch."""
-    from linear_kdtree_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET,
-        drop_oversized_buckets,
-    )
-
     if max_bucket_size is None:
         max_bucket_size = DEFAULT_MAX_BUCKET
     sigs_udf = make_band_sigs_udf(bands, n_planes)
@@ -381,7 +397,7 @@ def cosine_near_dup_pairs(
     return (
         cand.join(va, "a_id")
         .join(vb, "b_id")
-        .filter(cosine(F.col("a_v"), F.col("b_v")) >= threshold)
+        .filter(cosine("a_v", "b_v") >= threshold)
         .select("a_id", "b_id")
     )
 

@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linear_kdtree_spark.functions.geometry import dist2
 from linear_kdtree_spark.functions.morton import WORLD
 from linear_kdtree_spark.operators.interval_join import broadcast_hint
 from linear_kdtree_spark.operators.pip import Polygon, refine
@@ -94,7 +93,7 @@ def radius_join(
     the left side only (halved to 5× on the dedup'd self-join — see below).
     Skewed cells are split by AQE skew-join handling.
     """
-    inv = 1.0 / radius
+    inv = f"{float(1.0 / radius)!r}D"  # a DOUBLE literal: a bare 10.0 is DECIMAL
     # Dedup'd SELF-join (left is right): the unordered pair {p, q} only has
     # to be discovered once, so the left side is replicated to the closed
     # HALF-neighborhood {(0,0),(0,1),(1,-1),(1,0),(1,1)} instead of all 9
@@ -108,46 +107,43 @@ def radius_join(
         off_list = [(0, 0), (0, 1), (1, -1), (1, 0), (1, 1)]
     else:
         off_list = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dx, dy in off_list])
+    offs = ", ".join(f"struct({dx} AS dx, {dy} AS dy)" for dx, dy in off_list)
 
+    # each projection is one selectExpr: SQL text is parsed in one call,
+    # where a Column expression costs a py4j round trip per node
     lf = (
-        left.select(
-            F.col(left_key).alias("a_key"),
-            F.col("x").cast("double").alias("ax"),
-            F.col("y").cast("double").alias("ay"),
+        left.selectExpr(
+            f"{left_key} AS a_key",
+            "CAST(x AS DOUBLE) AS ax",
+            "CAST(y AS DOUBLE) AS ay",
+            f"CAST(FLOOR(ax * {inv}) AS BIGINT) AS cx0",
+            f"CAST(FLOOR(ay * {inv}) AS BIGINT) AS cy0",
         )
-        .withColumn("cx0", F.floor(F.col("ax") * inv).cast("long"))
-        .withColumn("cy0", F.floor(F.col("ay") * inv).cast("long"))
-        .withColumn("o", F.explode(offs))
-        .select(
+        .selectExpr("*", f"explode(array({offs})) AS o")
+        .selectExpr(
             "a_key", "ax", "ay",
-            (F.col("cx0") + F.col("o.dx")).alias("cx"),
-            (F.col("cy0") + F.col("o.dy")).alias("cy"),
-            ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("_home"),
+            "cx0 + o.dx AS cx",
+            "cy0 + o.dy AS cy",
+            "o.dx = 0 AND o.dy = 0 AS _home",
         )
     )
-    rt = right.select(
-        F.col(right_key).alias("b_key"),
-        F.col("x").cast("double").alias("bx"),
-        F.col("y").cast("double").alias("by"),
-        F.floor(F.col("x").cast("double") * inv).cast("long").alias("cx"),
-        F.floor(F.col("y").cast("double") * inv).cast("long").alias("cy"),
+    rt = right.selectExpr(
+        f"{right_key} AS b_key",
+        "CAST(x AS DOUBLE) AS bx",
+        "CAST(y AS DOUBLE) AS by",
+        f"CAST(FLOOR(CAST(x AS DOUBLE) * {inv}) AS BIGINT) AS cx",
+        f"CAST(FLOOR(CAST(y AS DOUBLE) * {inv}) AS BIGINT) AS cy",
     )
     out = lf.join(rt, ["cx", "cy"]).filter(
-        dist2(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
-        < F.lit(radius * radius)
+        f"(ax - bx) * (ax - bx) + (ay - by) * (ay - by) < {float(radius * radius)!r}D"
     )
     if half:
-        return out.filter(
-            ~F.col("_home") | (F.col("a_key") < F.col("b_key"))
-        ).select(
-            F.least("a_key", "b_key").alias("a_key"),
-            F.greatest("a_key", "b_key").alias("b_key"),
+        return out.filter("NOT _home OR a_key < b_key").selectExpr(
+            "least(a_key, b_key) AS a_key", "greatest(a_key, b_key) AS b_key"
         )
     out = out.select("a_key", "b_key")
     if dedup_pairs:
-        out = out.filter(F.col("a_key") < F.col("b_key"))
+        out = out.filter("a_key < b_key")
     return out
 
 

@@ -24,7 +24,9 @@ from pyspark.sql import types as T
 from linear_kdtree_spark.functions.morton import (
     WORLD,
     ancestor_at_depth,
+    grid_cell_col,
     morton_tile_col,
+    sql_name,
 )
 from linear_kdtree_spark.operators.build import LktIndex
 from linear_kdtree_spark.session import local_frame
@@ -48,9 +50,23 @@ def assign_tiles_morton(
     y_col: str = "y",
     out_col: str = "tile",
 ) -> DataFrame:
-    return df.withColumn(
-        out_col, morton_tile_col(F.col(x_col), F.col(y_col), depth, bounds)
+    """``df`` with ``out_col`` set to the fixed-grid Z-order tile at
+    ``depth`` (:func:`morton_tile_col`). One select computes the two cell
+    ordinates as lateral aliases and interleaves them, so each is computed
+    once, not once per bit term; a second select drops them."""
+    xmin, ymin, xmax, ymax = bounds
+    cx, cy, tile = "__lkt_cx", "__lkt_cy", "__lkt_tile"
+    tiled = df.select(
+        "*",
+        grid_cell_col(x_col, xmin, xmax, depth).alias(cx),
+        grid_cell_col(y_col, ymin, ymax, depth).alias(cy),
+        morton_tile_col(cx, cy, depth).alias(tile),
     )
+    named = f"{tile} AS {sql_name(out_col)}"
+    out = [named if c == out_col else sql_name(c) for c in df.columns]
+    if out_col not in df.columns:
+        out.append(named)
+    return tiled.selectExpr(*out)
 
 
 def assign_tiles_s2(df: DataFrame, level: int,

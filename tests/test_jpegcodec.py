@@ -17,6 +17,7 @@ import numpy as np
 import pytest
 
 from linear_kdtree_spark.functions.jpegcodec import (
+    _BitWriter,
     decode_jpeg,
     encode_jpeg,
     idct2_int,
@@ -150,6 +151,32 @@ class TestStreamStructure:
                 j += 2
             else:
                 j += 1
+
+
+class TestBitWriter:
+    def test_accumulator_holds_only_pending_bits(self):
+        """The writer keeps fewer than 8 pending bits between calls (an
+        unmasked accumulator made encoding quadratic in the image size),
+        and its bytes equal a bit-string writer's, stuffing included."""
+        rng = np.random.default_rng(7)
+        w = _BitWriter()
+        bits = ""
+        for _ in range(5000):
+            length = int(rng.integers(1, 17))
+            # every fourth code is all ones, so 0xFF bytes (stuffed) occur
+            code = (1 << length) - 1 if rng.integers(4) == 0 else int(rng.integers(1 << 20))
+            w.put(code, length)
+            bits += format(code & ((1 << length) - 1), f"0{length}b")
+            assert 0 <= w.acc < 1 << w.nacc and w.nacc < 8
+        w.flush()
+        bits += "1" * (-len(bits) % 8)
+        want = bytearray()
+        for i in range(0, len(bits), 8):
+            want.append(int(bits[i:i + 8], 2))
+            if want[-1] == 0xFF:
+                want.append(0x00)
+        assert 0xFF in want
+        assert bytes(w.out) == bytes(want)
 
 
 class TestRejections:

@@ -92,7 +92,7 @@ def test_minhash_signature_oracle(spark, docs):
     got = {
         r["doc_id"]: r["sig"]
         for r in docs.select(
-            "doc_id", minhash_signature(F.col("text"), 4, 3).alias("sig")
+            "doc_id", minhash_signature("text", 4, 3).alias("sig")
         ).collect()
     }
     for did, text in [(0, "the quick brown fox jumps over the lazy dog")]:

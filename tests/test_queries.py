@@ -328,9 +328,13 @@ def test_grid_cell_null_coordinates_stay_null(spark):
     )
     out = {r["key"]: (r["cx"], r["tile"]) for r in df.select(
         "key",
-        grid_cell_col(F.col("x"), 0.0, 10.0, 4).alias("cx"),
-        morton_tile_col(F.col("x"), F.col("y"), 4, (0.0, 0.0, 10.0, 10.0)).alias("tile"),
+        grid_cell_col("x", 0.0, 10.0, 4).alias("cx"),
+        grid_cell_col("y", 0.0, 10.0, 4).alias("cy"),
+        morton_tile_col("cx", "cy", 4).alias("tile"),
     ).collect()}
+    tiled = assign_tiles_morton(df, 4, (0.0, 0.0, 10.0, 10.0))
+    assert {r["key"]: r["tile"] for r in tiled.collect()} == {
+        k: tile for k, (_cx, tile) in out.items()}
     assert out[0] == (None, None)
     assert out[1][1] is None
     assert out[2][0] == 8 and out[2][1] is not None

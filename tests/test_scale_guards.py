@@ -64,16 +64,11 @@ def test_bucket_guard_drops_and_keeps_recall(spark):
 
 def test_bucket_guard_bounds_every_group(spark):
     docs, _ = _corpus_with_degenerate_cluster(spark)
-    from linear_kdtree_spark.operators.dedup import (
-        minhash_signature_from_shingles,
-        shingles,
-    )
+    from linear_kdtree_spark.operators.dedup import minhash_signature
 
     sig = docs.select(
         F.col("doc_id").alias("_id"),
-        minhash_signature_from_shingles(
-            shingles(F.col("text"), 3), 12
-        ).alias("sig"),
+        minhash_signature("text", 12, 3).alias("sig"),
     )
     buckets = sig.select(
         "_id",
@@ -87,6 +82,47 @@ def test_bucket_guard_bounds_every_group(spark):
         .agg(F.max("count")).first()[0]
     )
     assert top is not None and top <= 30
+
+
+def _right_child(plan: str, node: str) -> str:
+    """The last (right) child of the first line of a tree string that
+    holds ``node``."""
+    lines = plan.splitlines()
+    i = next(i for i, line in enumerate(lines) if node in line)
+    col = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    return next(line[col + 3:] for line in lines[i + 1:]
+                if line[col:col + 3] == "+- ")
+
+
+def test_bucket_guard_one_stage_shape(spark, caplog):
+    """The guard collects the oversized (band, bucket) counts in one job,
+    logs the dropped rows and buckets from them, and anti-joins the hot
+    keys as a local table of known size."""
+    docs, _ = _corpus_with_degenerate_cluster(spark)
+    from linear_kdtree_spark.operators.dedup import minhash_signature
+
+    buckets = docs.select(
+        F.col("doc_id").alias("_id"),
+        minhash_signature("text", 12, 3).alias("sig"),
+    ).select(
+        "_id",
+        F.md5(F.concat_ws("|", *[F.element_at("sig", i) for i in (1, 2, 3)])
+              ).alias("bucket"),
+        F.lit(0).alias("band"),
+    ).persist()
+    sizes = (buckets.groupBy("band", "bucket").count()
+             .filter(F.col("count") > 30).collect())
+    assert sizes  # the boilerplate cluster really is oversized
+    with caplog.at_level("WARNING", logger="linear_kdtree_spark.operators.dedup"):
+        guarded = drop_oversized_buckets(buckets, ["band", "bucket"], 30, "t")
+    (record,) = [r for r in caplog.records if r.args and r.args[0] == "t"]
+    assert record.args[1:4] == (sum(r["count"] for r in sizes), len(sizes), 30)
+    qe = guarded._jdf.queryExecution()
+    assert _right_child(qe.sparkPlan().toString(), "LeftAnti").startswith(
+        "LocalTableScan"), qe.sparkPlan().toString()
+    assert "BroadcastHashJoin" in qe.executedPlan().toString()
+    assert guarded.count() == buckets.count() - sum(r["count"] for r in sizes)
+    buckets.unpersist()
 
 
 def test_bucket_guard_noop_below_cap(spark):
